@@ -37,7 +37,9 @@ def _read_steal() -> tuple[int, int]:
     just guest load."""
     try:
         parts = open("/proc/stat").readline().split()
-        vals = [int(v) for v in parts[1:]]
+        # first 8 fields only: guest and guest_nice are already
+        # counted in user and nice
+        vals = [int(v) for v in parts[1:9]]
         steal = vals[7] if len(vals) > 7 else 0
         return steal, sum(vals)
     except Exception:  # pragma: no cover - non-Linux

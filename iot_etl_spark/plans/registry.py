@@ -70,7 +70,11 @@ def spread_scan(df: DataFrame, *cols: str) -> DataFrame:
     explicit width is read from the env-scaled shuffle conf and is
     exempt from AQE coalescing (a bare repartition(col) at these
     frame sizes folds straight back to one partition — measured on
-    blocking_link_pairs: no change without the explicit width)."""
+    blocking_link_pairs: no change without the explicit width).
+
+    A failing split-count probe is fatal: the error (an analysis or
+    planning error of ``df`` itself) surfaces to the caller instead of
+    degrading to the no-op."""
     spark = df.sparkSession
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Probe the split count via the JVM-side internal-row RDD
@@ -78,15 +82,8 @@ def spread_scan(df: DataFrame, *cols: str) -> DataFrame:
     # conversion (serializer setup + javaToPython mapPartitions),
     # measured ~2x the probe cost (and a 1.4 s first-call hit);
     # queryExecution().toRdd() plans the same physical query without
-    # the Python conversion layer. Failure fallback stays a no-op
-    # (have = width), narrowed to Py4J errors so a genuine engine bug
-    # still surfaces.
-    from py4j.protocol import Py4JError
-
-    try:
-        have = df._jdf.queryExecution().toRdd().getNumPartitions()
-    except Py4JError:  # pragma: no cover - defensive Py4J guard
-        have = width
+    # the Python conversion layer.
+    have = df._jdf.queryExecution().toRdd().getNumPartitions()
     if have >= width:
         return df
     return df.repartition(width, *cols)

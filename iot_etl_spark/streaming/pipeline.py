@@ -558,11 +558,12 @@ def start_txlog_upsert_sink(
     ``read_upserted`` (highest-seq row wins). Sink I/O is therefore
     O(1) per micro-batch — one staged parquet file + one atomic log
     commit — regardless of how many groups changed, and the
-    append_batch ledger upgrades replays to exactly-once. Compaction
-    is the table's own OPTIMIZE; superseded versions age out via
-    vacuum. With a real table format the same contract is a MERGE on
-    the group key; this is the log-structured emulation (write-cheap,
-    read resolves), the standard LSM/CDC trade."""
+    append_batch ledger upgrades replays to exactly-once. Nothing
+    compacts automatically: the caller runs the table's OPTIMIZE, and
+    superseded versions age out via vacuum. With a real table format
+    the same contract is a MERGE on the group key; this is the
+    log-structured emulation (write-cheap, read resolves), the
+    standard LSM/CDC trade."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         v = table.append_batch(
@@ -593,9 +594,13 @@ def read_upserted(spark: SparkSession, table, key_cols: tuple[str, ...]) -> Data
     state: per group key, the row from the LATEST micro-batch wins
     (update-mode re-emits the full aggregate row for a changed group,
     so later strictly supersedes earlier). One window over the
-    serving table — whose cardinality is bounded by keys x batches
-    that touched them, already aggregate-sized, never event-sized —
-    and OPTIMIZE keeps its file count flat."""
+    serving table, whose cardinality is bounded by keys x batches
+    that touched them: already aggregate-sized, never event-sized.
+
+    Cost: the sink adds one file per commit and nothing here compacts
+    them, so the scan (one task per live file) and the window grow
+    with the number of commits until the caller runs
+    ``table.optimize`` or the sink gains its own compaction."""
     from pyspark.sql import Window as W
 
     w = W.partitionBy(*key_cols).orderBy(F.desc(UPSERT_SEQ_COL))

@@ -13,34 +13,53 @@ stops working the moment two writers or a reader/writer pair overlap.
 Design (the standard log-structured table layout):
 
 - Data files are immutable parquet parts under ``<table>/data/``,
-  written to a staging dir first and moved in — a file is visible ONLY
-  if a committed log entry references it.
+  written straight into data/ under commit-unique names — a file is
+  visible ONLY if a committed log entry references it, so the log
+  entry is the one commit point. Two staging paths write them:
+  - a frame whose optimizer size estimate is within
+    ``spark.sql.autoBroadcastJoinThreshold`` (the cut-off Spark
+    already uses to pull a frame through the driver for a broadcast)
+    and whose types round-trip through Arrow is collected with
+    ``toArrow()`` and written by pyarrow as exactly one file — no
+    Hadoop committer, no staging dir, no file moves;
+  - anything larger (or a ``-1`` threshold) takes the distributed
+    ``df.write.parquet`` into a staging dir whose parts are then moved
+    into data/.
+  Either way a crash mid-write leaves only unreferenced files, which
+  vacuum's age gate removes.
 - The log is ``<table>/_txlog/<version 8-digit>.json``, one entry per
-  commit: operation, files added, files logically removed. The current
-  snapshot = replay of entries 0..N (removed files drop out).
-- **Commit = O_EXCL create of the next version file.** POSIX open with
-  O_CREAT|O_EXCL is atomic on a local/HDFS-semantics filesystem: two
-  writers racing for version N — exactly one wins, the loser gets
-  ``ConcurrentCommitError`` and retries on the new snapshot
-  (optimistic concurrency, no locks held during the data write).
+  commit: operation, files added, files logically removed, and for
+  schema-bearing commits the exact Spark schema. The current snapshot
+  = replay of entries 0..N (removed files drop out).
+- **Commit = atomic put-if-absent of the next version file.** The
+  entry is written to a temp file and fsynced, then ``os.link``-ed to
+  the version name, which is atomic on a local/HDFS-semantics
+  filesystem: two writers racing for version N — exactly one wins,
+  the loser gets ``ConcurrentCommitError`` and retries on the new
+  snapshot (optimistic concurrency, no locks held during the data
+  write). A crash mid-commit leaves only a temp file, never a
+  truncated version.
 - **Readers never block**: a scan resolves the snapshot file list once
-  and reads those immutable parts; later commits are invisible
-  (snapshot isolation). ``version=`` pins any historical snapshot
-  (time travel), enabling reproducible training runs over evolving
-  corpora.
+  and reads those immutable parts with the schema the log recorded at
+  that version (no footer inference, no schema-merge job); later
+  commits are invisible (snapshot isolation). Evolution only adds
+  columns, so files written before a widening read them as NULL.
+  ``version=`` pins any historical snapshot (time travel), enabling
+  reproducible training runs over evolving corpora.
 - **Vacuum** deletes data files referenced by NO retained version —
   physical deletion is decoupled from logical (an ``overwrite`` only
   marks files removed, so time travel keeps working until vacuum).
 
 At 100 TB nothing changes structurally: the log stays tiny (file
 lists, not data), commits stay O(1), and scans plan from the snapshot
-list exactly like Delta's. On S3-like stores the O_EXCL rename needs a
+list exactly like Delta's. On S3-like stores the put-if-absent needs a
 coordination service (as Delta's commit service does) — documented
 boundary, same code shape.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
@@ -49,6 +68,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def _file_column_stats(path: str) -> dict[str, list]:
@@ -70,13 +90,18 @@ def _file_column_stats(path: str) -> dict[str, list]:
         row = md.row_group(rg)
         for c in range(row.num_columns):
             col = row.column(c)
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
             name = col.path_in_schema
             if "." in name:  # nested — skip
                 continue
-            mn, mx = st.min, st.max
+            try:
+                st = col.statistics
+                if st is None or not st.has_min_max:
+                    continue
+                mn, mx = st.min, st.max
+            except NotImplementedError:
+                # no pyarrow stats reader for the type (Spark writes
+                # decimals of precision <= 18 as INT32/INT64)
+                continue
             if isinstance(mn, bytes):
                 try:
                     mn, mx = mn.decode(), mx.decode()
@@ -113,6 +138,7 @@ def _file_bloom(path: str, cols: tuple[str, ...]) -> dict[str, dict]:
     columns contribute nothing and the reader fails OPEN."""
     import base64
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     out: dict[str, dict] = {}
@@ -125,7 +151,12 @@ def _file_bloom(path: str, cols: tuple[str, ...]) -> dict[str, dict]:
     except Exception:  # noqa: BLE001 - index is best-effort
         return out
     for c in present:
-        distinct = {str(v) for v in tbl.column(c).to_pylist() if v is not None}
+        col = tbl.column(c)
+        if pa.types.is_timestamp(col.type):
+            # naive microseconds: Spark's INT96 files read as naive ns,
+            # Arrow-staged files as UTC-zoned us — one canonical form
+            col = col.cast(pa.timestamp("us"))
+        distinct = {str(v) for v in col.to_pylist() if v is not None}
         m = max(64, len(distinct) * _BLOOM_BITS_PER_KEY)
         bits = bytearray((m + 7) // 8)
         for s in distinct:
@@ -170,6 +201,41 @@ def _schema_sig(df: DataFrame) -> dict[str, str]:
     return {f.name: f.dataType.simpleString() for f in df.schema.fields}
 
 
+_ARROW_ATOMIC = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType, T.StringType, T.BinaryType,
+    T.DateType, T.TimestampType, T.TimestampNTZType,
+)
+
+
+def _parquet_via_arrow(dt: T.DataType) -> bool:
+    """True when a pyarrow-written parquet column of type ``dt`` reads
+    back in Spark as exactly ``dt``. Types outside this set (intervals,
+    variant, void) and duplicate field names take the distributed path,
+    which writes what Spark supports and rejects the rest as before."""
+    if isinstance(dt, T.StructType):
+        names = [f.name.lower() for f in dt.fields]
+        return len(set(names)) == len(names) and all(
+            _parquet_via_arrow(f.dataType) for f in dt.fields
+        )
+    if isinstance(dt, T.ArrayType):
+        return _parquet_via_arrow(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _parquet_via_arrow(dt.keyType) and _parquet_via_arrow(dt.valueType)
+    return isinstance(dt, _ARROW_ATOMIC)
+
+
+def _fits_driver(df: DataFrame) -> bool:
+    """Whether ``df`` is staged through the driver: its optimizer size
+    estimate is at or under ``spark.sql.autoBroadcastJoinThreshold``
+    (negative disables, as it does broadcasts) and its schema
+    round-trips through Arrow."""
+    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if limit < 0 or not _parquet_via_arrow(df.schema):
+        return False
+    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= limit
+
+
 class TxTable:
     """Transactional parquet table rooted at ``path``."""
 
@@ -182,6 +248,7 @@ class TxTable:
 
     # ------------------------------------------------------------ log
     def versions(self) -> list[int]:
+        # a commit's temp file ends in .tmp, so it is never a version
         return sorted(
             int(f.split(".")[0])
             for f in os.listdir(self.log_dir)
@@ -215,11 +282,14 @@ class TxTable:
         return [os.path.join(self.data_dir, f) for f in live]
 
     def _commit(self, entry: dict, version: int | None = None) -> int:
-        """Atomically claim ``version`` (default: next after latest)
-        via O_CREAT|O_EXCL. The version is the one the writer PLANNED
-        from its read snapshot — if another writer claimed it first,
-        this raises instead of silently committing on top of state the
-        writer never saw (the optimistic-concurrency contract)."""
+        """Atomically claim ``version`` (default: next after latest):
+        the entry is written to a temp file and fsynced, then
+        ``os.link``-ed to the version name — an atomic put-if-absent,
+        so a crash mid-write never leaves a truncated version. The
+        version is the one the writer PLANNED from its read snapshot —
+        if another writer claimed it first, this raises instead of
+        silently committing on top of state the writer never saw (the
+        optimistic-concurrency contract)."""
         if version is None:
             latest = self.latest_version()
             version = 0 if latest is None else latest + 1
@@ -244,23 +314,44 @@ class TxTable:
             }
         entry = {"version": version, **entry}
         target = os.path.join(self.log_dir, f"{version:08d}.json")
+        tmp = os.path.join(self.log_dir, f".{version:08d}.{uuid.uuid4().hex}.tmp")
         try:
-            fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            with open(tmp, "w") as fh:
+                json.dump(entry, fh)
+                fh.flush()
+                os.fsync(fh.fileno())
+            os.link(tmp, target)
+            # the new name itself must survive an OS crash: a caller
+            # (the streaming sink) moves on once this returns
+            dfd = os.open(self.log_dir, os.O_RDONLY)
+            try:
+                os.fsync(dfd)
+            finally:
+                os.close(dfd)
         except FileExistsError as exc:
             raise ConcurrentCommitError(
                 f"version {version} was committed concurrently"
             ) from exc
-        with os.fdopen(fd, "w") as fh:
-            json.dump(entry, fh)
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
         return version
 
     # ---------------------------------------------------------- write
     def _stage(self, df: DataFrame) -> list[str]:
-        """Write ``df`` to a staging dir, move parts into data/ under
-        commit-unique names. Files are INVISIBLE until a log entry
-        references them — a crash here leaves only orphans for
-        vacuum."""
+        """Write ``df`` into data/ under commit-unique names. A frame
+        that fits the driver (``_fits_driver``) becomes exactly one
+        pyarrow-written file; any other goes through a distributed
+        write to a staging dir whose parts are moved in. Files are
+        INVISIBLE until a log entry references them — a crash here
+        leaves only orphans for vacuum."""
+        import pyarrow.parquet as pq
+
         tag = uuid.uuid4().hex[:12]
+        if _fits_driver(df):
+            name = f"{tag}-00000.parquet"
+            pq.write_table(df.toArrow(), os.path.join(self.data_dir, name))
+            return [name]
         staging = os.path.join(self.path, f"_staging_{tag}")
         df.write.mode("overwrite").parquet(staging)
         names = []
@@ -272,6 +363,32 @@ class TxTable:
             names.append(name)
         shutil.rmtree(staging)
         return names
+
+    def _scan(
+        self, spark: SparkSession, files: list[str], version: int | None = None
+    ) -> DataFrame:
+        """Read ``files`` with the table schema at ``version`` (default
+        latest) — no footer inference and no schema-merge job. That
+        schema is the Spark schema recorded by the latest schema-bearing
+        commit at or before ``version``, or, for a commit logged without
+        one, the DDL of its column -> type signature (nested field names
+        must then parse as plain identifiers, as every table this engine
+        writes does). Files written before an evolution read the added
+        columns as NULL."""
+        latest = self.latest_version() if version is None else version
+        for v in range(latest, -1, -1):
+            e = self._entry(v)
+            if "spark_schema" in e:
+                schema = T.StructType.fromJson(e["spark_schema"])
+                break
+            if e.get("schema"):
+                schema = ", ".join(
+                    "`" + c.replace("`", "``") + f"` {t}" for c, t in e["schema"].items()
+                )
+                break
+        else:
+            raise ValueError(f"no commit up to version {latest} records a schema")
+        return spark.read.schema(schema).parquet(*files)
 
     def table_schema(self) -> dict[str, str] | None:
         """Column -> type of the current table schema (recorded at
@@ -288,7 +405,7 @@ class TxTable:
         the table schema exactly, or — with ``allow_evolution`` — may
         ADD columns while keeping every existing column's type. A
         drifted producer fails at commit time, not at some future
-        reader's mergeSchema surprise."""
+        reader's schema surprise."""
         return self._check_sig(_schema_sig(df), allow_evolution)
 
     def _check_sig(self, sig: dict[str, str], allow_evolution: bool) -> dict[str, str]:
@@ -394,7 +511,7 @@ class TxTable:
                 keep.append(os.path.join(self.data_dir, name))
         if not keep:
             return self.read(spark, version).limit(0)
-        return spark.read.option("mergeSchema", "true").parquet(*keep)
+        return self._scan(spark, keep, version)
 
     # ----------------------------------------------- CHECK constraints
     def constraints(self) -> dict[str, str]:
@@ -420,10 +537,9 @@ class TxTable:
         passes (add an IS NOT NULL conjunct to forbid it)."""
         if name in self.constraints():
             raise ValueError(f"constraint {name!r} already exists")
-        files = self.snapshot_files()
-        if files:
+        if self.snapshot_files():
             bad = (
-                spark.read.parquet(*files)
+                self.read(spark)
                 .filter(f"NOT coalesce(({expr}), true)")
                 .limit(1)
                 .collect()
@@ -462,8 +578,6 @@ class TxTable:
         for name, expr in cons.items():
             bad = staged.filter(f"NOT coalesce(({expr}), true)").limit(1).collect()
             if bad:
-                import contextlib
-
                 for f in added:
                     with contextlib.suppress(FileNotFoundError):
                         os.remove(os.path.join(self.data_dir, f))
@@ -567,7 +681,8 @@ class TxTable:
             planned = 0 if latest is None else latest + 1
             try:
                 return self._commit(
-                    {"op": "append", "added": added, "removed": [], "schema": sig},
+                    {"op": "append", "added": added, "removed": [], "schema": sig,
+                     "spark_schema": df.schema.jsonValue()},
                     planned,
                 )
             except ConcurrentCommitError:
@@ -630,7 +745,8 @@ class TxTable:
             try:
                 return self._commit(
                     {"op": "append", "added": added, "removed": [],
-                     "batch_id": batch_id, "ledger_id": ledger_id, "schema": sig},
+                     "batch_id": batch_id, "ledger_id": ledger_id, "schema": sig,
+                     "spark_schema": df.schema.jsonValue()},
                     planned,
                 )
             except ConcurrentCommitError:
@@ -641,8 +757,6 @@ class TxTable:
                     # entry — removing them is safe and avoids orphans
                     # that would otherwise sit on disk until a vacuum
                     # with elapsed retention runs (ADVICE r5)
-                    import contextlib
-
                     for f in added:
                         with contextlib.suppress(FileNotFoundError):
                             os.remove(os.path.join(self.data_dir, f))
@@ -662,8 +776,9 @@ class TxTable:
         added = self._stage(df)
         self._enforce_constraints(df.sparkSession, added)
         return self._commit(
+            # overwrite may redefine the schema
             {"op": "overwrite", "added": added, "removed": live,
-             "schema": _schema_sig(df)},  # overwrite may redefine the schema
+             "schema": _schema_sig(df), "spark_schema": df.schema.jsonValue()},
             planned,
         )
 
@@ -675,9 +790,7 @@ class TxTable:
         files = self.snapshot_files(version)
         if not files:
             raise ValueError("table has no committed data")
-        # mergeSchema: evolved tables (allow_evolution appends) read
-        # with the union schema; pre-widening files NULL the new cols
-        return spark.read.option("mergeSchema", "true").parquet(*files)
+        return self._scan(spark, files, version)
 
     def snapshot_file_stats(
         self, version: int | None = None
@@ -731,10 +844,10 @@ class TxTable:
         if not keep:
             # preserve schema for the empty result
             return self.read(spark, version).limit(0)
-        return spark.read.option("mergeSchema", "true").parquet(*keep)
+        return self._scan(spark, keep, version)
 
     def optimize(self, spark: SparkSession, target_files: int = 1) -> int | None:
-        """OPTIMIZE: rewrite the current snapshot's files into
+        """OPTIMIZE: rewrite the current snapshot's files into at most
         ``target_files`` compacted parts and commit the swap as ONE
         atomic log entry (adds the compacted files, logically removes
         every input). Readers pinned to older versions keep their
@@ -747,7 +860,7 @@ class TxTable:
             return None
         latest = self.latest_version()
         planned = latest + 1
-        df = spark.read.parquet(*live).coalesce(target_files)
+        df = self._scan(spark, live, latest).coalesce(target_files)
         added = self._stage(df)
         return self._commit(
             {
@@ -780,7 +893,7 @@ class TxTable:
                 )
         if not files:
             return self.read(spark).limit(0)
-        return spark.read.parquet(*files)
+        return self._scan(spark, files, to_version)
 
     # --------------------------------------------------------- vacuum
     def vacuum(
@@ -790,7 +903,7 @@ class TxTable:
         ``retain_last`` versions (older snapshots stop time-traveling
         — the Delta VACUUM contract), but ONLY once they are at least
         ``retention_seconds`` old. The age gate is what makes vacuum
-        safe against lock-free concurrent writers: ``_stage`` moves
+        safe against lock-free concurrent writers: ``_stage`` writes
         files into data/ BEFORE the log commit, so a freshly staged
         in-flight file is unreferenced for a moment — deleting it
         would let the writer's commit land referencing missing files
@@ -799,7 +912,8 @@ class TxTable:
         when no writer can be in flight (tests, single-writer
         maintenance windows). ``retain_last`` is clamped to >= 1 — the
         live snapshot is never vacuumable. Also sweeps aged orphans
-        from crashed stagings. Returns deleted file names."""
+        from crashed stagings and commits (staging dirs, log temp
+        files). Returns deleted data file names."""
         retain_last = max(1, retain_last)
         vs = self.versions()
         keep: set[str] = set()
@@ -817,4 +931,9 @@ class TxTable:
             p = os.path.join(self.path, d)
             if d.startswith("_staging_") and os.path.getmtime(p) <= horizon:
                 shutil.rmtree(p, ignore_errors=True)
+        # crashed commits (writer died before the link): same age gate
+        for f in os.listdir(self.log_dir):
+            p = os.path.join(self.log_dir, f)
+            if f.endswith(".tmp") and os.path.getmtime(p) <= horizon:
+                os.remove(p)
         return sorted(deleted)

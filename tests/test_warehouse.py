@@ -8,6 +8,7 @@ import os
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from iot_etl_spark.sources.tables import load_events
@@ -1106,3 +1107,246 @@ def test_append_with_quarantine_routes_violations(spark, tmp_path):
     )
     assert qv2 is None and {r.k for r in t2.read(spark).collect()} == {1, 2}
     assert q2.latest_version() is None
+
+
+# ------------------------------------- txlog staging paths and commit
+@pytest.fixture(params=["arrow", "distributed"])
+def staging(request, spark):
+    """Run a TxTable round trip through each staging path: small frames
+    go through Arrow by default; a -1 broadcast threshold (a session
+    conf) forces the distributed parquet write."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    if request.param == "distributed":
+        spark.conf.set(key, "-1")
+    yield request.param
+    spark.conf.set(key, prev)
+
+
+def _frame(spark, tmp_path, rows, ddl):
+    """``rows`` as a file-sourced frame, which carries a size estimate
+    the way a stream's micro-batch or a loaded table does (a frame from
+    a Python list estimates as unbounded and always writes
+    distributed)."""
+    import uuid
+
+    path = str(tmp_path / f"src_{uuid.uuid4().hex[:8]}")
+    spark.createDataFrame(rows, ddl).write.parquet(path)
+    return spark.read.schema(ddl).parquet(path)
+
+
+def _writers(t) -> set[str]:
+    """Which writer produced each live file: Spark stamps its row
+    metadata into the footer, pyarrow does not."""
+    import pyarrow.parquet as pq
+
+    return {
+        "distributed"
+        if b"org.apache.spark.sql.parquet.row.metadata" in (pq.read_metadata(f).metadata or {})
+        else "arrow"
+        for f in t.snapshot_files()
+    }
+
+
+_TYPED_DDL = (
+    "id INT, b BOOLEAN, t TINYINT, s SMALLINT, f FLOAT, "
+    "ts TIMESTAMP, ntz TIMESTAMP_NTZ, d DATE, amt DECIMAL(10,2), big DECIMAL(38,10), "
+    "bin BINARY, nested STRUCT<a: INT, tags: ARRAY<STRING>>, "
+    "items ARRAY<STRUCT<k: STRING, v: DOUBLE>>, m MAP<STRING, INT>, none INT"
+)
+
+
+def _typed_rows():
+    from decimal import Decimal
+
+    ts = datetime.datetime(2024, 3, 1, 12, 30, 45, 123456)
+    return [
+        (1, True, 7, -300, 1.5, ts, ts, ts.date(), Decimal("12.34"),
+         Decimal("1234567890.0123456789"), b"\x00\xff", (1, ["x", "y"]),
+         [("p", 0.5), ("q", -0.0)], {"a": 1}, None),
+        (2, None, None, None, None, None, None, None, None, None, None,
+         (None, None), [], {}, None),
+    ]
+
+
+def test_txlog_staging_round_trips_types(spark, tmp_path, staging):
+    """Timestamp, decimal, nested struct/array, map and all-NULL
+    columns read back unchanged, with the logged schema, on both
+    staging paths; a Bloom index on a timestamp column finds its row
+    on both."""
+    from iot_etl_spark.warehouse.txlog import TxTable
+
+    df = _frame(spark, tmp_path, _typed_rows(), _TYPED_DDL)
+    t = TxTable(str(tmp_path / "tx"))
+    t.set_bloom_columns(["ts"])
+    t.append(df)
+    assert _writers(t) == {staging}
+    got = t.read(spark)
+    assert got.schema == df.schema
+    assert sorted(got.collect()) == sorted(df.collect())
+    ts = _typed_rows()[0][5]
+    hit = t.read_point(spark, "ts", ts).filter(F.col("ts") == F.lit(ts))
+    assert [r.id for r in hit.collect()] == [1]
+
+
+def test_txlog_staging_empty_frame(spark, tmp_path, staging):
+    """An empty append commits, reads back empty with the table
+    schema, and leaves earlier rows intact."""
+    from iot_etl_spark.warehouse.txlog import TxTable
+
+    t = TxTable(str(tmp_path / "tx"))
+    empty = _frame(spark, tmp_path, [], "k INT, v STRING")
+    assert t.append(empty) == 0
+    got = t.read(spark)
+    assert got.count() == 0 and got.schema == empty.schema
+    t.append(_frame(spark, tmp_path, [(1, "a")], "k INT, v STRING"))
+    assert _tx_rows(t.read(spark)) == [(1, "a")]
+
+
+def test_txlog_snapshot_mixes_staging_paths(spark, tmp_path):
+    """One snapshot holding a Spark-written and an Arrow-written file
+    reads as one table."""
+    from iot_etl_spark.warehouse.txlog import TxTable
+
+    t = TxTable(str(tmp_path / "tx"))
+    t.append(_frame(spark, tmp_path, [(1, "a")], "k INT, v STRING"))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        t.append(_frame(spark, tmp_path, [(2, "b"), (3, "c")], "k INT, v STRING"))
+    finally:
+        spark.conf.set(key, prev)
+    assert _writers(t) == {"arrow", "distributed"}
+    assert _tx_rows(t.read(spark)) == [(1, "a"), (2, "b"), (3, "c")]
+    assert _tx_rows(t.read_changes(spark, since_version=0)) == [(2, "b"), (3, "c")]
+
+
+def test_txlog_evolved_read_matches_merge_schema(spark, tmp_path, staging):
+    """An allow_evolution table read with the logged schema returns
+    the rows a footer-merging read returns: old files NULL the added
+    column — at every version."""
+    from iot_etl_spark.warehouse.txlog import TxTable
+
+    t = TxTable(str(tmp_path / "tx"))
+    t.append(_frame(spark, tmp_path, [(1, "a")], "k INT, v STRING"))
+    t.append(
+        _frame(spark, tmp_path, [(2, "b", 1.5)], "k INT, v STRING, w DOUBLE"),
+        allow_evolution=True,
+    )
+    t.append(
+        _frame(spark, tmp_path, [(3, "c", None)], "k INT, v STRING, w DOUBLE"),
+    )
+    for version in (0, 1, 2):
+        files = t.snapshot_files(version)
+        merged = spark.read.option("mergeSchema", "true").parquet(*files)
+        got = t.read(spark, version=version)
+        assert got.columns == merged.columns
+        assert sorted(got.collect()) == sorted(merged.collect())
+    assert sorted(t.read(spark).collect()) == [(1, "a", None), (2, "b", 1.5), (3, "c", None)]
+
+
+def test_txlog_optimize_then_time_travel(spark, tmp_path, staging):
+    """OPTIMIZE writes at most ``target_files`` files, to one file
+    through the session's staging path; versions before each optimize
+    still read their original rows."""
+    from iot_etl_spark.warehouse.txlog import TxTable
+
+    t = TxTable(str(tmp_path / "tx"))
+    for i in range(4):
+        t.append(_frame(spark, tmp_path, [(i, str(i)), (i + 10, "x")], "k INT, v STRING"))
+    before = _tx_rows(t.read(spark))
+    v = t.optimize(spark, target_files=2)
+    assert len(t.snapshot_files()) <= 2
+    t.append(_frame(spark, tmp_path, [(99, "z")], "k INT, v STRING"))
+    v1 = t.optimize(spark, target_files=1)
+    assert _writers(t) == {staging} and len(t.snapshot_files()) == 1
+    assert _tx_rows(t.read(spark)) == sorted(before + [(99, "z")])
+    assert _tx_rows(t.read(spark, version=v - 1)) == before
+    assert _tx_rows(t.read(spark, version=v)) == before
+    assert _tx_rows(t.read(spark, version=v1 - 1)) == sorted(before + [(99, "z")])
+
+
+def test_txlog_commit_survives_crash_mid_write(spark, tmp_path, monkeypatch):
+    """A commit that dies while writing its entry publishes no version:
+    a raised write leaves neither a version nor a temp file, and a
+    killed writer's half-written temp file is ignored by reads,
+    append_batch and the ledger until vacuum's age gate sweeps it."""
+    import json
+
+    from iot_etl_spark.warehouse.txlog import TxTable
+
+    t = TxTable(str(tmp_path / "tx"))
+    t.append_batch(_frame(spark, tmp_path, [(1, "a")], "k INT, v STRING"), 0)
+
+    def torn_dump(obj, fh):
+        fh.write('{"version": 1, "op": "app')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError):
+        t.append_batch(_frame(spark, tmp_path, [(2, "b")], "k INT, v STRING"), 1)
+    monkeypatch.undo()
+    assert t.versions() == [0]
+    assert not [f for f in os.listdir(t.log_dir) if f.endswith(".tmp")]
+
+    # a writer killed mid-dump leaves its temp file behind
+    torn = os.path.join(t.log_dir, ".00000001.deadbeef.tmp")
+    with open(torn, "w") as fh:
+        fh.write('{"version": 1, "op": "app')
+    assert t.versions() == [0]
+    assert _tx_rows(t.read(spark)) == [(1, "a")]
+    assert t.append_batch(_frame(spark, tmp_path, [(2, "b")], "k INT, v STRING"), 1) == 1
+    assert t.append_batch(_frame(spark, tmp_path, [(2, "b")], "k INT, v STRING"), 1) is None
+    assert _tx_rows(t.read(spark)) == [(1, "a"), (2, "b")]
+    assert t.vacuum() == [] and os.path.exists(torn)  # fresh: age-gated
+    live = {os.path.basename(f) for f in t.snapshot_files()}
+    # the raised commit's staged file is an orphan; the live ones stay
+    assert len(t.vacuum(retention_seconds=0)) == 1
+    assert not os.path.exists(torn)
+    assert {os.path.basename(f) for f in t.snapshot_files()} == live
+    assert t.versions() == [0, 1]
+    assert _tx_rows(t.read(spark)) == [(1, "a"), (2, "b")]
+
+
+def test_txlog_reads_log_without_spark_schema(spark, tmp_path, staging):
+    """A log written before commits recorded the Spark schema (only the
+    column -> type signature) still reads, feeds changes and optimizes:
+    the signature's DDL, nested window struct included, gives the rows
+    a footer-merging read gives."""
+    import json
+
+    from iot_etl_spark.warehouse.txlog import TxTable
+
+    ts = datetime.datetime(2024, 3, 1, 12, 0)
+    win = "k INT, window STRUCT<start: TIMESTAMP, end: TIMESTAMP>"
+    t = TxTable(str(tmp_path / "tx"))
+    t.append(_frame(spark, tmp_path, [(1, (ts, ts + datetime.timedelta(minutes=5)))], win))
+    t.append(
+        _frame(spark, tmp_path, [(2, (ts, ts), "b")], win + ", `odd name` STRING"),
+        allow_evolution=True,
+    )
+    t.append(_frame(spark, tmp_path, [(3, (None, ts), None)], win + ", `odd name` STRING"))
+    for v in t.versions():
+        p = os.path.join(t.log_dir, f"{v:08d}.json")
+        with open(p) as fh:
+            e = json.load(fh)
+        e.pop("spark_schema")
+        with open(p, "w") as fh:
+            json.dump(e, fh)
+
+    def merged(files):
+        return spark.read.option("mergeSchema", "true").parquet(*files)
+
+    for version in t.versions():
+        got = t.read(spark, version=version)
+        want = merged(t.snapshot_files(version))
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == sorted(want.collect())
+    changes = t.read_changes(spark, since_version=0)
+    assert changes.schema == merged(t.snapshot_files()).schema
+    assert sorted(r.k for r in changes.collect()) == [2, 3]
+    everything = sorted(merged(t.snapshot_files()).collect())
+    t.optimize(spark)
+    assert len(t.snapshot_files()) == 1
+    assert sorted(t.read(spark).collect()) == everything

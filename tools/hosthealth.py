@@ -29,8 +29,10 @@ def _burn(seconds: float) -> int:
 
 
 def _stat() -> list[int]:
+    """The first 8 cpu fields of /proc/stat: guest and guest_nice are
+    already counted in user and nice."""
     parts = open("/proc/stat").readline().split()
-    return [int(v) for v in parts[1:]]
+    return [int(v) for v in parts[1:9]]
 
 
 def main() -> int:

@@ -55,8 +55,10 @@ QUERIES = [
 
 
 def _read_steal() -> tuple[int, int]:
+    # first 8 fields only: guest and guest_nice are already counted
+    # in user and nice
     parts = open("/proc/stat").readline().split()
-    vals = [int(v) for v in parts[1:]]
+    vals = [int(v) for v in parts[1:9]]
     return (vals[7] if len(vals) > 7 else 0), sum(vals)
 
 
@@ -87,8 +89,11 @@ def run_width(cpus: int, reps: int) -> dict[str, list[float]]:
          ",".join(QUERIES), str(reps), SCRATCH],
         env=env, capture_output=True, text=True, timeout=3600,
     )
-    last = out.stdout.strip().splitlines()[-1]
-    return json.loads(last)
+    lines = out.stdout.strip().splitlines()
+    if out.returncode != 0 or not lines:
+        print(out.stderr, file=sys.stderr)
+        raise RuntimeError(f"minibench at {cpus} cores exited with {out.returncode}")
+    return json.loads(lines[-1])
 
 
 def main() -> int:

@@ -27,23 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-
-def _read_steal() -> tuple[int, int]:
-    """(steal_jiffies, total_jiffies) from /proc/stat — the sandbox is
-    a VM on a shared host, and EXTERNAL contention shows up as steal
-    time invisible to loadavg (r14: two entry-idle runs smeared 20-25%
-    while a concurrent probe measured ~11% steal under load). Recorded
-    so an artifact's run conditions capture hypervisor pressure, not
-    just guest load."""
-    try:
-        parts = open("/proc/stat").readline().split()
-        # first 8 fields only: guest and guest_nice are already
-        # counted in user and nice
-        vals = [int(v) for v in parts[1:9]]
-        steal = vals[7] if len(vals) > 7 else 0
-        return steal, sum(vals)
-    except Exception:  # pragma: no cover - non-Linux
-        return 0, 0
+from perfbench.run import cpu_times  # noqa: E402
 
 
 def main() -> None:
@@ -54,7 +38,8 @@ def main() -> None:
     # prior load slipping under the threshold) are visible in the
     # artifact.
     load_entry = os.getloadavg()[0]
-    steal_entry = _read_steal()
+    # host contention shows as steal time, invisible to loadavg
+    steal_entry = cpu_times()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -217,9 +202,9 @@ def main() -> None:
         except Exception as exc:
             print(f"bench: repass {n} FAILED: {exc}", file=sys.stderr)
     load_end = os.getloadavg()[0]
-    steal_end = _read_steal()
+    steal_end = cpu_times()
     steal_d = steal_end[0] - steal_entry[0]
-    total_d = steal_end[1] - steal_entry[1]
+    total_d = steal_end[2] - steal_entry[2]
     steal_pct = round(100.0 * steal_d / total_d, 2) if total_d > 0 else None
 
     ok = [v for v in warm.values() if v >= 0]

@@ -3,8 +3,8 @@
 Re-implements the query and data-processing capabilities of the
 reference project kaonasty/iot-etl (batch enrichment, streaming
 ingestion, warehouse analytics) as Spark-native DataFrame / Spark SQL
-operators, plus LLM-data-pipeline extensions (dedup, similarity
-search, text analysis, multimodal plumbing) designed for 100 TB scale.
+operators, plus LLM-data-pipeline queries (dedup, similarity search,
+text analysis, JSON props) designed for 100 TB scale.
 
 Layout:
     session.py    SparkSession factory + runtime conf guard
@@ -18,7 +18,6 @@ Layout:
                   aggregates, idempotent foreachBatch sink)
     warehouse/    materialized hourly/daily aggregate lifecycle
     pipeline/     batch extract->transform->load assembly
-    extensions/   dedup / similarity / text analysis / multimodal
 """
 
 __version__ = "0.1.0"

@@ -1283,7 +1283,7 @@ def kmv_distinct_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus shingle space split by doc parity: per-side cardinality
     estimates from the K smallest 48-bit hashes, union by sketch
     merge, intersection by inclusion–exclusion — each beside its
-    EXACT twin (the sketches.py audit convention). The mergeable
+    EXACT twin (the sketch-audit convention). The mergeable
     answer to "how much of corpus B is new vs corpus A?" without a
     distinct-shuffle of the full shingle space.
 

@@ -920,8 +920,8 @@ def quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     value whose rank is within the algorithm's published bound
     (rank error <= n/accuracy, Greenwald & Khanna 2001).
 
-    This puts extensions/sketches.py (the documented 100 TB swap for
-    exact percentile buffering) under the same DuckDB oracle gate as
+    This puts the sketch (the documented 100 TB swap for exact
+    percentile buffering) under the same DuckDB oracle gate as
     the exact operators: the oracle re-derives the exact quantiles and
     asserts the bound booleans — if the sketch ever drifts outside its
     guarantee the hash breaks.

@@ -1015,9 +1015,8 @@ def clamped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one shuffle on user_id; per-task state is ONE open
     group's running scalars (not the group's history — better than
     the grouped-map form, which held each user's whole history in one
-    Arrow batch). The streaming sibling is applyInPandasWithState
-    (streaming/tws.py); a pathological million-event key would want
-    the txlog's per-key compaction first."""
+    Arrow batch). A pathological million-event key would want the
+    txlog's per-key compaction first."""
     import pandas as pd
 
     def fold_partition(batches):

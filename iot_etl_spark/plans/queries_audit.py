@@ -97,8 +97,7 @@ GROUP BY event_type
 
 @query("hll_distinct_audit", oracle=_HLL_AUDIT_ORACLE)
 def hll_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit of the HyperLogLog++ distinct path (extensions/
-    sketches.py's approx_distinct_profile) against exact COUNT
+    """Audit of the HyperLogLog++ distinct path against exact COUNT
     DISTINCT: per event type, the exact cardinalities plus verified
     claims that `approx_count_distinct(rsd=0.05)` landed within a
     3-sigma relative-error bound (+small-cardinality slack — HLL++

@@ -299,9 +299,7 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows against billions of corpus vectors), every corpus partition
     scores its rows against all queries locally, and per-query top-k is
     one window bounded by q_id — a single shuffle on the (small)
-    q_id key, never materializing all pairs downstream. For corpora
-    where even one scan is too slow, the IVF cell route
-    (``extensions/ann.py``) prunes the scan per query.
+    q_id key, never materializing all pairs downstream.
     """
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr("transform(embedding, x -> cast(x AS DOUBLE))").alias("emb")

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from iot_etl_spark.plans.registry import query, DUCK_TS, DUCK_TS_EPOCH, duck_bucket_epoch
+from iot_etl_spark.plans.registry import query, DUCK_TS, DUCK_TS_EPOCH, duck_bucket_epoch, round_signed
 from iot_etl_spark.sources.tables import load_events, load_table
 from iot_etl_spark.operators.rolling import add_rolling_features, add_lag_features
 from iot_etl_spark.operators.anomaly import add_zscore_anomaly
@@ -229,7 +229,7 @@ def zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = add_zscore_anomaly(ev, key_cols=("user_id",))
     return out.select(
         "event_id", "user_id", "value",
-        F.round("z_score", 6).alias("z_score"),
+        round_signed("z_score").alias("z_score"),
         F.col("is_anomaly_zscore"),
     )
 
@@ -690,7 +690,7 @@ def full_transform_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("rolling_avg_1h", 6).alias("rolling_avg_1h"),
         F.round("rolling_stddev_1h", 6).alias("rolling_stddev_1h"),
         "value_lag_1", "value_lag_2", "value_change",
-        F.round("z_score", 6).alias("z_score"),
+        round_signed("z_score").alias("z_score"),
         "is_anomaly_zscore", "is_valid_record",
     )
 
@@ -1443,7 +1443,7 @@ def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back onto the fact — the fact scan itself never
     shuffles; capping is LEAST/GREATEST column math and the final
     rollup is map-side combinable. At 100 TB swap the exact
-    percentiles for `approx_percentile` partials (sketches module) —
+    percentiles for `approx_percentile` partials —
     the clamp stays identical."""
     ev = load_events(spark, sf_dir).filter(F.col("value").isNotNull())
     pct = ev.groupBy("event_type").agg(

@@ -616,6 +616,17 @@ def setsim_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------ shard balance audit
 N_SHARDS = 16
 
+
+# md5-derived 32-bit id hash — the registry's cross-engine hash
+# convention (queries_text.py: conv(substr(md5(x),1,8),16,10))
+def shard_of(id_col: str, n_shards: int):
+    return (
+        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
+        .cast("long")
+        % n_shards
+    ).cast("int")
+
+
 _SHARD_ORACLE = f"""
 WITH s AS (
     SELECT ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
@@ -634,20 +645,18 @@ FROM s GROUP BY 1
 
 @query("shard_balance_audit", oracle=_SHARD_ORACLE)
 def shard_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Balance audit for the training-shard writeout
-    (extensions/shards.py): per shard, document and character counts
+    """Balance audit for training shards assigned by ``shard_of``:
+    per shard, document and character counts
     and each shard's share of the corpus — skewed shards mean skewed
     data-loader throughput, so this is the check a pipeline runs after
-    sharding and before training. Assignment is the writer's exact
+    sharding and before training. Assignment is the exact
     content-addressed hash (md5 of the id), so the audit IS the
-    writer's distribution, not a model of it.
+    shard distribution, not a model of it.
 
     100 TB shape: one {N_SHARDS}-key aggregate with map-side partials;
     the share normalization is a window over the {N_SHARDS}-row
     result, not the data."""
     docs = load_table(spark, sf_dir, "documents")
-    from iot_etl_spark.extensions.shards import shard_of
-
     w = Window.partitionBy()
     return (
         docs.select(shard_of("doc_id", N_SHARDS).alias("shard_id"), "n_chars")

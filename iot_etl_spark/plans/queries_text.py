@@ -654,9 +654,7 @@ ORDER BY doc_id
 def multimodal_bytes_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opaque-binary plumbing exercised on real data: treat text bytes
     as a binary payload (the testdata ships no media table), compute
-    size + content digest. The full multimodal decode pipeline
-    (mapInPandas over binary + typed metadata) lives in
-    iot_etl_spark/extensions/multimodal.py with stubbed codecs."""
+    size + content digest."""
     docs = load_table(spark, sf_dir, "documents")
     payload = F.encode(F.col("text"), "UTF-8")
     return docs.select(

@@ -11,7 +11,8 @@ Conventions that keep the Spark result and the oracle hash-identical
   rounds pervasively too, ``analytical_queries.sql:18-21``, at scale 2
   — scale 6 avoids the decimal ties where Spark's HALF_UP and DuckDB's
   binary rounding disagree). Raw pass-through doubles are bit-identical
-  and stay unrounded.
+  and stay unrounded. ``round_signed`` keeps DuckDB's -0.0 where a
+  value rounds to zero from below (Spark's ROUND gives +0.0).
 - **Every ORDER BY feeding a LIMIT carries a deterministic tiebreak.**
 - Spark ``dayofweek`` is 1=Sunday; DuckDB is 0=Sunday — weekend tests
   are written per-dialect (``isin(1,7)`` vs ``IN (0,6)``).
@@ -21,7 +22,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -33,6 +34,13 @@ DUCK_TS_EPOCH = "epoch_us(CAST(ts AS TIMESTAMP)) // 1000000"
 
 def duck_bucket_epoch(unit: str) -> str:
     return f"epoch_us(date_trunc('{unit}', CAST(ts AS TIMESTAMP))) // 1000000"
+
+
+def round_signed(col: str) -> Column:
+    """``F.round(col, 6)`` that, like DuckDB's ROUND, keeps the sign of
+    a value that rounds to zero (Java's ``signum(-0.0)`` is -0.0)."""
+    r = F.round(col, 6)
+    return F.when(r == 0, F.lit(0.0) * F.signum(col)).otherwise(r)
 
 
 def query(name: str, oracle: str | None = None):

@@ -73,21 +73,6 @@ EMBEDDINGS_SCHEMA = T.StructType(
     ]
 )
 
-# Multimodal contract (SURVEY.md §7.1 M7 / driver north star): media as
-# opaque binary + typed metadata. No binary test table exists, so tests
-# fabricate binaries; the plumbing (schema, batch shape) is real.
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-    ]
-)
-
 STAR_TABLES = (
     "region",
     "nation",

@@ -162,10 +162,10 @@ def test_campaign_ledger_headline_is_mechanical():
 #   approx_twin  — *_approx / *_capped variants pinned equal to their
 #                  exact siblings (test_approx_twins / test_graph_caps
 #                  — mechanically verified below).
-#   composition  — report layers over a shared candidate/cluster/
-#                  codec stage whose core machinery carries its own
-#                  pins (dedup family, span grams, BPE, multimodal
-#                  codecs); the layer itself is relational.
+#   composition  — report layers over a shared candidate/cluster
+#                  stage whose core machinery carries its own pins
+#                  (dedup family, span grams); the layer itself is
+#                  relational.
 _RESIDUE_CLASSES = {
     # --- approx/capped twins
     "device_cooccurrence_capped": "approx_twin",
@@ -179,7 +179,6 @@ _RESIDUE_CLASSES = {
     # --- compositions over pinned machinery
     "adamic_adar_linkpred": "composition",    # capped coactivity edges
     "blocking_link_pairs": "composition",     # blocked candidates
-    "bpe_token_stats": "composition",         # extensions/bpe pytest
     "corpus_keep_verdict": "composition",     # dedup-family verdicts
     "dedup_cluster_size_hist": "composition", # cluster labels
     "dedup_clusters": "composition",          # cluster labels
@@ -188,9 +187,9 @@ _RESIDUE_CLASSES = {
     "dedup_span_rewrite": "composition",      # span gram machinery
     "duplicated_span_stats": "composition",   # span gram machinery
     "editdist_blocking_pairs": "composition", # blocked candidates
-    "multimodal_bytes_stats": "composition",  # extensions/multimodal
     "semantic_dedup_verdict": "composition",  # embed LSH pair stage
     # --- everything below is a declarative relational spec
+    "bpe_token_stats": "relational",
     "catalog_profile": "relational",
     "column_profile_events": "relational",
     "constraint_audit": "relational",
@@ -217,6 +216,7 @@ _RESIDUE_CLASSES = {
     "hourly_rollup": "relational",
     "latency_profile": "relational",
     "latest_per_device": "relational",
+    "multimodal_bytes_stats": "relational",
     "order_payment_reconcile": "relational",
     "order_priority_counts": "relational",
     "pack_efficiency_stats": "relational",

@@ -184,53 +184,6 @@ class TestCorpusQueries:
         assert len(out) > 0
 
 
-def test_dedupe_increment_against_corpus(spark):
-    """Incremental dedup: an arriving batch is judged against the
-    corpus index (exact + LSH near-dup) and against itself — without
-    any corpus-corpus pair work."""
-    from iot_etl_spark.extensions.corpus import dedupe_increment
-
-    base = ("the quick brown fox jumps over the lazy dog while carrying "
-            "a basket of fresh vegetables to the market near the river "
-            "where fishermen sell their morning catch to local restaurants "
-            "and tourists wander among the colorful stalls buying spices")
-    corpus = spark.createDataFrame(
-        [(1, base, "web"),
-         (2, "completely different text about spacecraft navigation "
-             "systems and orbital mechanics calculations for deep space "
-             "missions requiring precise trajectory corrections over many "
-             "years of autonomous flight through the outer solar system", "web"),
-         ],
-        "doc_id LONG, text STRING, source STRING",
-    )
-    near_base = base.replace("fresh vegetables", "ripe vegetables")
-    inc_near_a = ("astronauts aboard the station conducted experiments on "
-                  "plant growth in microgravity measuring root development "
-                  "and nutrient uptake across multiple generations of fast "
-                  "growing crops selected for closed loop life support")
-    inc_near_b = inc_near_a.replace("nutrient uptake", "nutrient absorption")
-    new_docs = spark.createDataFrame(
-        [(10, base, "crawl"),            # exact copy of corpus doc 1
-         (11, near_base, "crawl"),       # near-dup of corpus doc 1
-         (12, inc_near_a, "crawl"),      # near-dup pair within increment
-         (13, inc_near_b, "crawl"),
-         (14, "entirely novel content describing the architecture of "
-              "distributed analytics engines built on columnar storage "
-              "with vectorized execution and adaptive query planning "
-              "for petabyte scale workloads in modern data platforms", "crawl"),
-         (15, inc_near_a, "crawl"),      # exact copy within increment
-         ],
-        "doc_id LONG, text STRING, source STRING",
-    )
-    out = {r.doc_id: r for r in dedupe_increment(spark, new_docs, corpus).collect()}
-    assert not out[10].keep and out[10].reason == "exact_dup_corpus" and out[10].dup_of == 1
-    assert not out[11].keep and out[11].reason == "near_dup_corpus" and out[11].dup_of == 1
-    assert out[12].keep and out[12].reason is None            # cluster canonical
-    assert not out[13].keep and out[13].reason == "near_dup_increment" and out[13].dup_of == 12
-    assert out[14].keep
-    assert not out[15].keep and out[15].reason == "exact_dup_increment" and out[15].dup_of == 12
-
-
 def test_min_label_components_pointer_jumping_and_raise(spark):
     """A 33-node path graph: plain min-label propagation needs ~32
     rounds; pointer jumping converges within 8. And when max_iters is

@@ -1,4 +1,4 @@
-"""Round-4 ML-prep operators: training-shard writer, integer
+"""Round-4 ML-prep operators: shard assignment, integer
 PageRank, prefix-filter set-similarity join, hashed classifier,
 span-level duplication — behavioral pins beyond the DuckDB parity
 suite (which covers value correctness for all five registry queries).
@@ -6,58 +6,24 @@ suite (which covers value correctness for all five registry queries).
 
 from __future__ import annotations
 
-import hashlib
-
 import pytest
 from pyspark.sql import functions as F
 
-from iot_etl_spark.extensions.shards import write_training_shards, read_shard, shard_of
 from iot_etl_spark.plans import registry
 from iot_etl_spark.plans.queries_mlprep import (
     N_SHARDS,
     PR_SCALE,
     SETSIM_TAU,
+    shard_of,
 )
 from iot_etl_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
 
-def _py_shard(doc_id: int, n: int) -> int:
-    return int(hashlib.md5(str(doc_id).encode()).hexdigest()[:8], 16) % n
-
-
 # ------------------------------------------------------------- shards
-def test_shard_writer_roundtrip_and_determinism(spark, tmp_path):
-    docs = load_table(spark, str(SF_DIR), "documents")
-    out = str(tmp_path / "shards")
-    write_training_shards(docs, out, n_shards=8)
-
-    back = spark.read.parquet(out)
-    # complete and duplicate-free
-    assert back.count() == docs.count()
-    assert back.select("doc_id").distinct().count() == docs.count()
-    # assignment is the content-addressed hash, reproducible off-engine
-    rows = back.select("doc_id", "shard").collect()
-    for r in rows:
-        assert int(r.shard) == _py_shard(r.doc_id, 8), r
-    # every shard directory exists (500 docs over 8 shards)
-    assert back.select("shard").distinct().count() == 8
-
-
-def test_shard_read_is_partition_pruned(spark, tmp_path):
-    docs = load_table(spark, str(SF_DIR), "documents").limit(50)
-    out = str(tmp_path / "shards")
-    write_training_shards(docs, out, n_shards=4)
-    one = read_shard(spark, out, 2)
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(shard" in plan, plan
-    expected = {r.doc_id for r in docs.collect() if _py_shard(r.doc_id, 4) == 2}
-    assert {r.doc_id for r in one.collect()} == expected
-
-
 def test_shard_of_matches_audit_query(spark):
-    """The writer's assignment and the audit query's are the same
-    function — per-shard doc counts agree."""
+    """``shard_of`` and the audit query assign shards the same way —
+    per-shard doc counts agree."""
     docs = load_table(spark, str(SF_DIR), "documents")
     audit = {
         r.shard_id: r.n_docs

@@ -155,117 +155,6 @@ def test_constraint_report_property(spark, rows):
         assert r.passed == (r.n_violations == 0)
 
 
-@settings(max_examples=25, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=40),   # width
-    st.integers(min_value=1, max_value=40),   # height
-    st.integers(min_value=0, max_value=10_000),  # seed
-    st.booleans(),                            # flat (KwKwK-heavy)
-)
-def test_gif_lzw_roundtrip_property(w, h, seed, flat):
-    """GIF encode->decode is BIT-EXACT for arbitrary dims/seeds (LZW
-    is lossless): decoded mean pixel equals the seeded source's mean
-    exactly, covering dictionary growth, Clear resets, and the KwKwK
-    case the flat images force."""
-    import numpy as np
-    from iot_etl_spark.extensions.multimodal import make_gif_bytes, _decode_gif
-
-    out = _decode_gif(make_gif_bytes(w, h, seed, flat=flat))
-    assert out["ok"], out.get("error")
-    assert (out["width"], out["height"]) == (w, h)
-    rng = np.random.default_rng(seed)
-    palette = rng.integers(0, 256, (64, 3), dtype=np.uint8)
-    idx = (
-        np.full((h, w), int(rng.integers(0, 64)), dtype=np.uint8)
-        if flat else rng.integers(0, 64, (h, w), dtype=np.uint8)
-    )
-    assert out["mean_pixel"] == float(palette[idx].mean())
-
-
-@settings(max_examples=12, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=48),
-    st.integers(min_value=1, max_value=48),
-    st.integers(min_value=0, max_value=10_000),
-    st.sampled_from([(True, False), (False, False), (False, True)]),  # (gray, subsample)
-)
-def test_jpeg_roundtrip_property(w, h, seed, mode):
-    """JPEG encode->decode holds its lossy tolerance for arbitrary
-    dims (incl. non-multiple-of-8/16 edges, 1-pixel strips) across
-    grayscale / 4:4:4 / 4:2:0: dims exact, decoded mean within
-    quantization error of the smooth source's mean."""
-    import numpy as np
-    from iot_etl_spark.extensions.multimodal import (
-        _decode_jpeg,
-        encode_jpeg,
-        make_jpeg_bytes,
-    )
-
-    gray, subsample = mode
-    data = make_jpeg_bytes(w, h, seed=seed, gray=gray, subsample=subsample)
-    out = _decode_jpeg(data)
-    assert out["ok"], out.get("error")
-    assert (out["width"], out["height"]) == (w, h)
-    # reconstruct the source image exactly as make_jpeg_bytes does
-    yy, xx = np.mgrid[0:h, 0:w].astype(np.float64)
-    rng = np.random.default_rng(seed)
-    phase = rng.uniform(0, 2 * np.pi, 3)
-    chans = [
-        np.clip(
-            128 + 100 * np.sin(2 * np.pi * (xx / max(w, 1)) + phase[i])
-            * np.cos(2 * np.pi * (yy / max(h, 1)) + phase[(i + 1) % 3]),
-            0, 255,
-        )
-        for i in range(3)
-    ]
-    img = (chans[0] if gray else np.stack(chans, axis=-1)).astype(np.uint8)
-    # smooth source -> quantization error small; edge-padded partial
-    # MCUs and 4:2:0 chroma averaging widen the bound for tiny images
-    assert abs(out["mean_pixel"] - float(img.mean())) < 8.0
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.integers(min_value=30, max_value=20_000),           # duration_ms
-    st.sampled_from([44100, 48000, 32000]),                # MPEG-1 rates
-    st.sampled_from([64, 128, 192, 320]),                  # bitrates
-    st.booleans(),                                         # mono
-)
-def test_mp3_header_walk_roundtrip_property(duration_ms, rate, kbps, mono):
-    """The MP3 frame walk recovers rate/channels exactly and duration
-    to within one 1152-sample frame of what the generator packed, for
-    arbitrary durations/rates/bitrates."""
-    from iot_etl_spark.extensions.multimodal import make_mp3_bytes, _parse_mp3
-
-    out = _parse_mp3(make_mp3_bytes(duration_ms, rate, kbps, mono))
-    assert out["ok"], out.get("error")
-    assert out["sample_rate_hz"] == rate
-    assert out["n_channels"] == (1 if mono else 2)
-    frame_ms = 1152 * 1000 / rate
-    assert abs(out["duration_ms"] - duration_ms) <= frame_ms + 1
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=3_600_000),         # duration_ms
-    st.integers(min_value=1, max_value=8192),              # width
-    st.integers(min_value=1, max_value=8192),              # height
-    st.sampled_from(["video", "audio"]),
-)
-def test_mp4_box_walk_roundtrip_property(duration_ms, w, h, kind):
-    """The ISO-BMFF box walk recovers mvhd duration exactly (the
-    generator's timescale is 1000) and the video track's 16.16
-    dimensions exactly, for arbitrary values."""
-    from iot_etl_spark.extensions.multimodal import make_mp4_bytes, _parse_mp4
-
-    out = _parse_mp4(make_mp4_bytes(duration_ms, w, h, kind))
-    assert out["ok"], out.get("error")
-    assert out["duration_ms"] == duration_ms
-    assert out["decoded_kind"] == kind
-    if kind == "video":
-        assert (out["width"], out["height"]) == (w, h)
-
-
 @given(
     st.lists(
         st.tuples(

@@ -59,3 +59,31 @@ def test_assert_matches_oracle_rejects_negzero(spark):
     with pytest.raises(AssertionError, match="-0.0"):
         assert_matches_oracle(df, con, "SELECT 1 AS k, -0.0 AS v")
     con.close()
+
+
+
+def test_zscore_rounds_to_oracle_signed_zero(spark, tmp_path):
+    """User 1's mean is 1.000000001, so z(1.0) = -1e-9, which DuckDB's
+    ROUND(.., 6) keeps as -0.0 and Spark's rounds to +0.0.
+    ``assert_matches_oracle`` rejects any -0.0, so this compares the
+    sign-aware ``canonical_rows`` directly."""
+    import duckdb
+
+    from iot_etl_spark.plans import ORACLES, QUERIES
+
+    pd.DataFrame({
+        "event_id": range(5),
+        "ts": pd.date_range("2024-01-01", periods=5, freq="min", unit="us"),
+        "user_id": [1, 1, 1, 2, 2],
+        "event_type": "view",
+        "value": [0.0, 1.0, 2.000000003, 5.0, 6.0],
+        "props": "{}",
+    }).to_parquet(tmp_path / "events.parquet", index=False)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    for name in ("zscore_anomaly", "full_transform_pipeline"):
+        expected = con.execute(ORACLES[name]).df()
+        assert negzero_columns(expected) == ["z_score"], name
+        actual = QUERIES[name](spark, str(tmp_path)).toPandas()
+        assert canonical_rows(actual) == canonical_rows(expected), name
+    con.close()

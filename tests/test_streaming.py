@@ -9,8 +9,6 @@ import os
 import shutil
 import tempfile
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from iot_etl_spark.streaming.pipeline import (
@@ -580,92 +578,6 @@ def test_query_progress_summary_reports_engine_telemetry(spark):
         # the watermarked agg holds state; a progress event reports it
         assert any(p["state_rows"] > 0 for p in prog)
         assert any(p["watermark"] for p in prog)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _protobuf_available() -> bool:
-    # transformWithState's state-server protocol needs google.protobuf;
-    # this container ships a broken installation (same environment-gate
-    # class as the Kafka broker). The operator module itself is plain
-    # PySpark API usage and imports fine.
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="gated: transformWithState needs google.protobuf, broken in this env",
-)
-def test_transform_with_state_profile_across_batches(spark):
-    """transformWithStateInPandas (the Spark 4 arbitrary-stateful API):
-    the running per-user profile folded across two micro-batches must
-    match the batch aggregate over all events, and intermediate
-    emissions must be consistent prefixes (state persisted between
-    triggers)."""
-    from iot_etl_spark.streaming.tws import (
-        streaming_running_profile,
-        running_profile_batch,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="iot_etl_tws_")
-    try:
-        base = datetime.datetime(2024, 1, 3, 9, 0, 0)
-        schema = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
-        src_dir = os.path.join(tmp, "src")
-        os.makedirs(src_dir)
-
-        def write_batch(rows, name):
-            spark.createDataFrame(rows, schema).withColumn(
-                "ts", F.expr("CAST(unix_micros(ts) * 1000 AS LONG)")
-            ).write.parquet(os.path.join(src_dir, name))
-
-        b1 = [(i, base + datetime.timedelta(seconds=i), i % 2, "view",
-               float(10 + i), None) for i in range(6)]
-        b2 = [(i, base + datetime.timedelta(seconds=i), i % 2, "view",
-               float(100 + i), None) for i in range(6, 10)]
-        write_batch(b1, "b1")
-
-        stream = read_stream_source(spark, "parquet", path=src_dir + "/*")
-        prof = streaming_running_profile(stream)
-        import uuid
-        name = f"tws_{uuid.uuid4().hex[:6]}"
-        q = (prof.writeStream.outputMode("update").format("memory").queryName(name)
-             .option("checkpointLocation", os.path.join(tmp, "ckpt")).start())
-        try:
-            q.processAllAvailable()
-            mid = {r.user_id: r for r in spark.table(name).collect()}
-            write_batch(b2, "b2")
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        # batch-1 state: users 0/1 saw 3 values each from b1 (possibly
-        # split across triggers; take the max-n emission per user)
-        all_rows = spark.table(name).collect()
-        final = {}
-        for r in all_rows:
-            if r.user_id not in final or r.n_events > final[r.user_id].n_events:
-                final[r.user_id] = r
-
-        # final state equals the batch aggregate over b1+b2
-        full = spark.createDataFrame(b1 + b2, schema)
-        expected = {r.user_id: r for r in running_profile_batch(full).collect()}
-        assert set(final) == set(expected)
-        for uid, exp in expected.items():
-            got = final[uid]
-            assert got.n_events == exp.n_events, uid
-            assert abs(got.mean_value - exp.mean_value) < 1e-12, uid
-            assert got.min_value == exp.min_value, uid
-            assert got.max_value == exp.max_value, uid
-
-        # the mid-stream emission covered only b1's prefix
-        for uid, r in mid.items():
-            assert r.n_events <= 3, "b1 emission saw more than b1's rows"
-            assert r.max_value < 100, "b2 values leaked into the b1 trigger"
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -28,6 +28,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.run import cpu_times  # noqa: E402
+
 SRC = "/root/testdata/sf0.1"
 SCRATCH = "/tmp/iot_etl_scaling_sfX"
 FACTS = ("events", "lineitem", "orders")
@@ -52,14 +54,6 @@ QUERIES = [
     "shipping_delay_stats",
     "interval_overlap_load",
 ]
-
-
-def _read_steal() -> tuple[int, int]:
-    # first 8 fields only: guest and guest_nice are already counted
-    # in user and nice
-    parts = open("/proc/stat").readline().split()
-    vals = [int(v) for v in parts[1:9]]
-    return (vals[7] if len(vals) > 7 else 0), sum(vals)
 
 
 def build_scratch(rep: int) -> None:
@@ -101,11 +95,11 @@ def main() -> int:
     out_json = (sys.argv[2] if len(sys.argv) > 2
                 else "plans/r14/scaling_probe.json")
     build_scratch(rep)
-    s0 = _read_steal()
+    s0 = cpu_times()
     r8 = run_width(8, 3)
     r32 = run_width(32, 3)
-    s1 = _read_steal()
-    steal_pct = (100.0 * (s1[0] - s0[0]) / max(1, s1[1] - s0[1]))
+    s1 = cpu_times()
+    steal_pct = (100.0 * (s1[0] - s0[0]) / max(1, s1[2] - s0[2]))
     result = {
         "rep_factor": rep,
         "queries": QUERIES,

@@ -7,7 +7,8 @@ lineitem events documents embeddings``. Column names and rounding are
 kept identical on both sides — the correctness driver hashes values
 after sorting columns by name.
 
-Importing this package populates the registry.
+Importing this package populates the registry, in registration order:
+module import order below, then definition order within a module.
 """
 
 from iot_etl_spark.plans.registry import QUERIES, ORACLES, query
@@ -33,213 +34,5 @@ from iot_etl_spark.plans import queries_analytics7  # noqa: F401
 from iot_etl_spark.plans import queries_analytics8  # noqa: F401
 from iot_etl_spark.plans import queries_analytics9  # noqa: F401
 from iot_etl_spark.plans import queries_analytics10  # noqa: F401
-
-# --------------------------------------------------------------- ordering
-# The correctness driver checks the FIRST 50 registry entries, so the
-# window is curated per round for maximum fresh evidence. Round-12
-# rotation (VERDICT r11 item 1): the 27 round-12 registrations lead
-# (fresh evidence first), then the 8 round-3-green leftovers round 11
-# did not reach (stream_static_enrich .. unigram_logprob_score), then
-# the round-4-green tier begins in alphabetical order — its head
-# (burst_detection .. mixture_sampling_weights) fills the window; the
-# remaining 35 round-4 names stay listed in order for round 13.
-# Names listed here but not (yet) registered are ignored; registered
-# names absent from the list keep their original relative order after
-# the prioritized block.
-# ROUND{N}_REGISTRATIONS constants are the single source of truth the
-# STATUS.md changelog counts are checked against
-# (tests/test_contract.py::test_status_ledger_matches_registry) so the
-# ledger can't drift from the registry (VERDICT r10 item 4).
-ROUND13_REGISTRATIONS: list[str] = [
-    "kuiper_test_hours",
-    "cliffs_delta_weekend",
-    "mood_scale_test",
-    "von_neumann_ratio_daily",
-    # second round-13 batch (trend/blocked/reliability)
-    "cox_stuart_trend",
-    "quade_test_blocks",
-    "cronbach_alpha_hours",
-    "icc_oneway_types",
-    # third round-13 batch (complexity, sketches, model QA, OLAP)
-    "permutation_entropy_daily",
-    "sample_entropy_daily",
-    "kmv_distinct_setops",
-    "bloom_filter_fpr_audit",
-    "dagostino_k2_normality",
-    "classifier_ks_separation",
-    "herfindahl_concentration",
-]
-
-ROUND12_REGISTRATIONS: list[str] = [
-    "energy_distance_weekend",
-    "cramer_von_mises_weekend",
-    "ansari_bradley_scale",
-    "jarque_bera_by_type",
-    "bartlett_variance_test",
-    "welch_anova_value",
-    "dunn_posthoc_pairwise",
-    "kendall_w_concordance",
-    "kpss_level_stationarity",
-    "mahalanobis_outlier_topk",
-    "hotelling_t2_weekend",
-    "theil_inequality_decomposition",
-    "rmst_restricted_mean_survival",
-    "bigram_perplexity_heldout",
-    "anderson_darling_ksample",
-    "stream_session_then_agg",
-    # second round-12 batch (ordered-alternative, spectral/circular,
-    # regression diagnostics, retrieval agreement)
-    "page_trend_test",
-    "jonckheere_terpstra_dayparts",
-    "spectral_entropy_hourly",
-    "rayleigh_event_times",
-    "breusch_pagan_lm",
-    "cooks_distance_topk",
-    "rbo_rank_agreement",
-    # third round-12 batch (changepoint/trend/randomness, graph panel)
-    "pettitt_changepoint_daily",
-    "seasonal_mann_kendall",
-    "bartels_rank_randomness",
-    "link_prediction_scores",
-]
-
-ROUND11_REGISTRATIONS: list[str] = [
-    "friedman_test_day_blocks",
-    "mood_median_test",
-    "grubbs_outlier_scan",
-    "chow_break_test",
-    "neyman_allocation_plan",
-    "calinski_harabasz_index",
-    "davies_bouldin_index",
-    "fisher_g_periodicity",
-    "zorder_pruning_audit",
-    "rbp_err_retrieval_eval",
-    "cdc_chunk_dedup",
-    "g_test_type_dow",
-    "ewma_control_chart",
-    "partial_corr_value_hour",
-    "cochran_q_test",
-    "mcc_classifier_eval",
-]
-
-# Round-14 window (VERDICT r13 item 7, continuing the r12 schedule):
-# the round-5 tier — the 50 names whose newest driver evidence is the
-# round-5 CORRECTNESS artifact (verified against CORRECTNESS_r05..r13:
-# none of these appears in any later window) — rotates in, in its
-# round-5 window order. After this round no registry name carries
-# driver evidence older than round 7. Several of these were directly
-# rewritten by the r13/r14 optimization passes (basket_lift_pairs,
-# blocking_link_pairs, top_parts_per_segment, order_payment_reconcile,
-# quality_classifier_score, supplier_pareto_share{,_approx}), so the
-# rotation doubles as fresh driver evidence on the rewrites.
-ROUND5_TIER: list[str] = [
-    "pagerank_device_graph",
-    "triangle_count_graph",
-    "basket_lift_pairs",
-    "blocking_link_pairs",
-    "setsim_prefix_join",
-    "stream_txlog_ingest",
-    "stream_trending_topk",
-    "holt_forecast_per_device",
-    "key_skew_audit",
-    "hll_distinct_audit",
-    "minhash_estimate_audit",
-    "daily_active_flows",
-    "embedding_norm_outliers",
-    "rfm_segments",
-    "supplier_pareto_share",
-    "vocab_coverage_curve",
-    "dedup_cluster_size_hist",
-    "quality_classifier_score",
-    "duplicated_span_stats",
-    "shard_balance_audit",
-    "bigram_lm_score",
-    "split_leakage_audit",
-    "hashed_embedding_vectors",
-    "psi_value_drift",
-    "dedup_span_rewrite",
-    "corpus_datasheet",
-    "rolling_7d_active_users",
-    "time_to_first_purchase",
-    "json_key_coverage",
-    "user_activity_streaks",
-    "duplicate_events_audit",
-    "catalog_profile",
-    "shipping_delay_stats",
-    "wow_percent_change",
-    "cohort_revenue_triangle",
-    "column_profile_events",
-    "top_parts_per_segment",
-    "segment_weekly_share",
-    "zipf_slope_audit",
-    "order_lines_histogram",
-    "geo_rollup_acctbal",
-    "rfm_segments_approx",
-    "supplier_pareto_share_approx",
-    "quality_percentile_gate_approx",
-    "holt_forecast_recent",
-    "winsorized_value_stats",
-    "order_payment_reconcile",
-    "interval_overlap_load",
-    "dedup_keep_best",
-    "stream_dlq_stats",
-]
-
-_DRIVER_WINDOW_FIRST: list[str] = ROUND5_TIER
-
-# Round-13 window (VERDICT r12 item 2, superseded by the round-14
-# rotation above; kept as the ledger tier record): the 15 round-13
-# registrations led, then the 35 round-4-tier names the round-12
-# window did not reach (ngram_novelty .. value_autocorr, alphabetical).
-_ROUND13_WINDOW_TAIL: list[str] = [
-    "ngram_novelty",
-    "pack_efficiency_stats",
-    "pmi_cooccurrence",
-    "props_variant_extract",
-    "q11_important_parts",
-    "q12_priority_by_status",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q19_disjunctive_revenue",
-    "q20_dominant_suppliers",
-    "q21_sole_blame_supplier",
-    "q22_dormant_high_balance",
-    "q2_min_cost_supplier",
-    "q4_priority_with_returns",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_type_profit",
-    "quantile_sketch_audit",
-    "regr_value_trend",
-    "reservoir_sample_per_type",
-    "schema_drift_audit",
-    "seasonal_residual_anomaly",
-    "sequence_packing",
-    "session_path_topk",
-    "sql_lateral_recent_orders",
-    "sql_recursive_dedup_roots",
-    "text_lang_mix",
-    "tfidf_top_terms",
-    "token_entropy_stats",
-    "unpivot_type_metrics",
-    "user_event_signature",
-    "value_autocorr",
-]
-
-
-def _reorder() -> None:
-    prioritized = [n for n in _DRIVER_WINDOW_FIRST if n in QUERIES]
-    tail = [n for n in QUERIES if n not in set(prioritized)]
-    ordered = prioritized + tail
-    for mapping in (QUERIES, ORACLES):
-        snapshot = {n: mapping[n] for n in ordered if n in mapping}
-        mapping.clear()
-        mapping.update(snapshot)
-
-
-_reorder()
 
 __all__ = ["QUERIES", "ORACLES", "query"]

@@ -662,9 +662,9 @@ def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's browsing events (view/click/signup) into type-2 validity
     regimes [valid_from, valid_to), then assign every purchase to the
     regime active at its timestamp — the query shape behind "which
-    engagement state converts". Complements the warehouse SCD2 writer
-    (warehouse/scd2.py, pytest-pinned): THIS is the read side, built
-    from raw history in one pass, oracle-gated.
+    engagement state converts". The validity windows are built from
+    raw history in one pass, oracle-gated; no stored dimension history
+    is read.
 
     Run construction is the canonical gaps-and-islands pattern: a
     change flag off lag(), a cumulative-sum run id, then one

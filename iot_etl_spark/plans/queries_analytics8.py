@@ -13,7 +13,7 @@ kruskal_wallis/brown_forsythe/mood gap), changepoint/causal family
 (binseg, DiD -> Chow), the sampling toolkit (pps/priority/reservoir ->
 Neyman design), the clustering-eval lane (silhouette -> CH/DB), the
 spectral lane (acf_pacf, harmonic -> Fisher g), and the
-warehouse-layout story (bucketing/DPP -> Z-order pruning audit).
+storage-layout story (bucketing/DPP -> Z-order pruning audit).
 
 Determinism: integer micro-unit quantization before any distributed
 sum; rank math over bounded cell frames (never a global per-row

@@ -24,16 +24,14 @@ stays readable via time travel until vacuum.
 
 100 TB note: this rewrites the full snapshot — correct but pessimal
 when merges touch few files. The production refinement (same public
-shape) joins the source keys against per-file min/max key stats
-(``warehouse/layout.py`` writes range-clustered files exactly so this
-prune works), rewrites only files with potential matches, and commits
-added+removed in the same single log entry. File pruning changes the
-I/O, not the semantics below.
+shape) joins the source keys against per-file min/max key stats,
+rewrites only files with potential matches, and commits added+removed
+in the same single log entry. File pruning changes the I/O, not the
+semantics below.
 
 Reference parity: the reference only ever overwrite-loads dimensions
 (``etl/spark_load.py``) — it has no matched/not-matched routing at
-all; SCD2 (``warehouse/scd2.py``) covers the history-keeping variant,
-this covers the in-place upsert statement.
+all; this covers the in-place upsert statement.
 """
 
 from __future__ import annotations

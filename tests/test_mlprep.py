@@ -23,8 +23,17 @@ from tests.conftest import SF_DIR
 # ------------------------------------------------------------- shards
 def test_shard_of_matches_audit_query(spark):
     """``shard_of`` and the audit query assign shards the same way —
-    per-shard doc counts agree."""
+    per-shard doc counts agree — and ``shard_of`` itself matches a
+    Python md5 of the id (first 8 hex digits, modulo the shard count)."""
+    import hashlib
+
     docs = load_table(spark, str(SF_DIR), "documents")
+    for n in (N_SHARDS, 7):
+        sample = docs.select("doc_id", shard_of("doc_id", n).alias("s")).limit(20).collect()
+        assert len(sample) == 20
+        for r in sample:
+            want = int(hashlib.md5(str(r.doc_id).encode()).hexdigest()[:8], 16) % n
+            assert r.s == want, (n, r.doc_id, r.s, want)
     audit = {
         r.shard_id: r.n_docs
         for r in registry.QUERIES["shard_balance_audit"](spark, str(SF_DIR)).collect()

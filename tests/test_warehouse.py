@@ -202,126 +202,6 @@ def test_bucketed_join_has_zero_shuffle_exchanges(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_clustered_layout_files_have_disjoint_tight_key_ranges(spark):
-    """write_clustered: parquet files within a partition cover
-    disjoint, narrow cluster-key ranges (provable min/max skipping),
-    vs an unclustered write where every file spans ~the full key
-    domain. Verified from the physical parquet footers, not the plan."""
-    import glob
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from iot_etl_spark.sources.tables import load_table
-    from iot_etl_spark.warehouse.layout import write_clustered
-
-    tmp = tempfile.mkdtemp(prefix="iot_etl_layout_")
-    try:
-        events = load_table(spark, SF_DIR, "events").withColumn(
-            "event_date", F.to_date("ts")
-        )
-        write_clustered(
-            events, f"{tmp}/clustered", ("event_date",), ("user_id",), n_ranges=4
-        )
-        events.repartition(4).write.mode("overwrite").partitionBy("event_date").parquet(
-            f"{tmp}/naive"
-        )
-
-        def file_ranges(root):
-            out = {}
-            for f in glob.glob(f"{root}/event_date=*/*.parquet"):
-                md = pq.ParquetFile(f).metadata
-                mins, maxs = [], []
-                for rg in range(md.num_row_groups):
-                    col = next(
-                        md.row_group(rg).column(i)
-                        for i in range(md.num_columns)
-                        if md.row_group(rg).column(i).path_in_schema == "user_id"
-                    )
-                    mins.append(col.statistics.min)
-                    maxs.append(col.statistics.max)
-                out.setdefault(os.path.dirname(f), []).append((min(mins), max(maxs)))
-            return [r for ranges in out.values() for r in ranges], out
-
-        clustered, clustered_by_dir = file_ranges(f"{tmp}/clustered")
-        naive, _ = file_ranges(f"{tmp}/naive")
-        domain = max(mx for _, mx in naive) - min(mn for mn, _ in naive)
-        avg_clustered_span = sum(mx - mn for mn, mx in clustered) / len(clustered)
-        avg_naive_span = sum(mx - mn for mn, mx in naive) / len(naive)
-        # clustered files are narrow; naive files span ~the whole domain
-        assert avg_clustered_span < 0.5 * avg_naive_span, (avg_clustered_span, avg_naive_span)
-        assert avg_clustered_span < domain, (avg_clustered_span, domain)
-        # range tasks own disjoint key ranges, so WITHIN a partition
-        # dir the files never overlap (equal boundary keys may touch):
-        # a point predicate reads one file per dir, skipping the rest
-        for d, ranges in clustered_by_dir.items():
-            spans = sorted(ranges)
-            overlaps = sum(
-                1 for (a_mn, a_mx), (b_mn, _) in zip(spans, spans[1:]) if b_mn < a_mx
-            )
-            assert overlaps == 0, (d, spans)
-        # round-trip integrity
-        assert spark.read.parquet(f"{tmp}/clustered").count() == events.count()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_zorder_layout_bounds_both_dimensions(spark):
-    """cluster_by_zorder: each file's bounding box is narrow in BOTH
-    cluster dimensions (a predicate on either column skips files),
-    while single-key range clustering leaves the other dimension
-    spanning ~the whole domain. Verified from parquet footers."""
-    import glob
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from iot_etl_spark.sources.tables import load_table
-    from iot_etl_spark.warehouse.layout import cluster_by_range, cluster_by_zorder
-
-    tmp = tempfile.mkdtemp(prefix="iot_etl_zorder_")
-    try:
-        ev = load_table(spark, SF_DIR, "events").withColumn(
-            "ts_epoch", F.unix_timestamp("ts").cast("long")
-        )
-        cluster_by_zorder(ev, "user_id", "ts_epoch", bits=8, n_ranges=8).write.mode(
-            "overwrite"
-        ).parquet(f"{tmp}/z")
-        cluster_by_range(ev, ("ts_epoch",), 8).write.mode("overwrite").parquet(
-            f"{tmp}/t"
-        )
-
-        def avg_norm_span(root, col):
-            spans = []
-            for f in glob.glob(f"{root}/*.parquet"):
-                md = pq.ParquetFile(f).metadata
-                mins, maxs = [], []
-                for rg in range(md.num_row_groups):
-                    c = next(
-                        md.row_group(rg).column(i)
-                        for i in range(md.num_columns)
-                        if md.row_group(rg).column(i).path_in_schema == col
-                    )
-                    mins.append(c.statistics.min)
-                    maxs.append(c.statistics.max)
-                spans.append((min(mins), max(maxs)))
-            domain = max(mx for _, mx in spans) - min(mn for mn, _ in spans)
-            return sum(mx - mn for mn, mx in spans) / len(spans) / max(1, domain)
-
-        # z-order: both dims individually bounded (measured ~0.58/~0.38)
-        assert avg_norm_span(f"{tmp}/z", "user_id") < 0.75
-        assert avg_norm_span(f"{tmp}/z", "ts_epoch") < 0.75
-        # single-key ts clustering: its own dim tight, the other ~full
-        assert avg_norm_span(f"{tmp}/t", "user_id") > 0.9
-        assert avg_norm_span(f"{tmp}/t", "ts_epoch") < 0.3
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def test_schema_evolution_widening_append(spark):
     """A batch with a new column appends without rewriting old files;
     the merged read NULLs the column for pre-widening rows, and
@@ -590,27 +470,6 @@ def test_txlog_streaming_sink_exactly_once(spark, tmp_path):
     assert t.read(spark).count() == n1 + 1
 
 
-def test_txlog_change_data_feed(spark, tmp_path):
-    """read_changes returns exactly the rows appended after the given
-    version — the incremental-refresh primitive: consuming (v0, v2]
-    plus the v0 snapshot reconstructs the table."""
-    from iot_etl_spark.warehouse.txlog import TxTable
-
-    t = TxTable(str(tmp_path / "tx"))
-    v0 = t.append(spark.createDataFrame([(1, "a")], "k INT, v STRING"))
-    t.append(spark.createDataFrame([(2, "b")], "k INT, v STRING"))
-    t.append(spark.createDataFrame([(3, "c")], "k INT, v STRING"))
-    delta = _tx_rows(t.read_changes(spark, since_version=v0))
-    assert delta == [(2, "b"), (3, "c")]
-    # bounded range
-    assert _tx_rows(t.read_changes(spark, since_version=v0, to_version=v0 + 1)) == [
-        (2, "b")
-    ]
-    # empty range -> empty frame with the table schema
-    empty = t.read_changes(spark, since_version=2)
-    assert empty.count() == 0 and set(empty.columns) == {"k", "v"}
-
-
 def test_txlog_optimize_compacts_in_one_commit(spark, tmp_path):
     """OPTIMIZE rewrites the snapshot into one file via a single
     atomic commit; values unchanged; pre-optimize time travel still
@@ -834,101 +693,6 @@ def test_compact_leaf_partitions_ignores_orphaned_staging(spark, tmp_path):
     assert os.path.isdir(orphan), "compactor must not treat staging as a leaf"
 
 
-def test_cdf_driven_incremental_refresh(spark, tmp_path):
-    """Compose the two lifecycle primitives end to end (the Delta/
-    Iceberg incremental-MV pattern): the txlog CHANGE DATA FEED tells
-    the refresh job its dirty window — read_changes since the last
-    refreshed version yields exactly the late-arriving rows, their
-    min date snaps the window, and refresh_agg over that window makes
-    the aggregate equal a full recompute. No full-history rescan: the
-    CDF read touches only the new files."""
-    import os
-
-    from iot_etl_spark.sources.tables import load_table
-    from iot_etl_spark.warehouse.lifecycle import (
-        hourly_agg,
-        materialize_agg,
-        read_agg,
-        refresh_agg,
-    )
-    from iot_etl_spark.warehouse.txlog import TxTable
-
-    events = load_table(spark, SF_DIR, "events").select(
-        "event_id", "ts", "event_type", "value"
-    )
-    split = events.select(
-        F.date_add(F.min(F.to_date("ts")), 3).alias("d")
-    ).first()["d"]
-    old = events.filter(F.to_date("ts") < F.lit(split))
-    late = events.filter(F.to_date("ts") >= F.lit(split))
-
-    t = TxTable(str(tmp_path / "events_tx"))
-    v0 = t.append(old)
-    agg_path = str(tmp_path / "hourly")
-    materialize_agg(t.read(spark), agg_path, bucket="hour")
-
-    t.append(late)  # late-arriving facts land as a new commit
-
-    # the refresh job derives its dirty window FROM THE LOG, not from
-    # a rescan: changes since the version it last aggregated
-    delta = t.read_changes(spark, since_version=v0)
-    assert delta.count() == late.count()
-    dirty_start = delta.select(F.min(F.to_date("ts"))).first()[0]
-    refresh_agg(t.read(spark), agg_path, since=dirty_start, bucket="hour")
-
-    def canon(df):
-        cols = sorted(df.columns)
-        return sorted(tuple(r) for r in df.select(cols).collect())
-
-    assert canon(read_agg(spark, agg_path).drop("agg_date")) == canon(
-        hourly_agg(t.read(spark))
-    )
-
-
-def test_txlog_stats_pruning_skips_disjoint_files(spark, tmp_path):
-    """Delta-style data skipping on the transaction log: every commit
-    stamps per-file column [min, max] from the parquet footers, and
-    read_pruned plans only the files whose stats intersect the
-    predicate range — result equality with the full-scan filter, file
-    count strictly smaller, and missing stats fail OPEN (read)."""
-    import iot_etl_spark.warehouse.txlog as txlog
-
-    t = txlog.TxTable(str(tmp_path / "skiptbl"))
-    # three appends with disjoint k ranges -> three stats-bearing files
-    for lo in (0, 100, 200):
-        t.append(
-            spark.range(lo, lo + 50).selectExpr(
-                "id AS k", "CAST(id * 2 AS DOUBLE) AS v",
-                "concat('u', CAST(id AS STRING)) AS s",
-            ).coalesce(1)
-        )
-    stats = t.snapshot_file_stats()
-    assert len(stats) == 3
-    assert all("k" in s and "v" in s and "s" in s for s in stats.values())
-
-    pruned = t.read_pruned(spark, {"k": (120, 130)})
-    n_in = pruned.inputFiles()
-    assert len(n_in) == 1, n_in  # only the [100,150) file survives
-    got = sorted(r.k for r in pruned.filter("k BETWEEN 120 AND 130").collect())
-    full = sorted(
-        r.k for r in t.read(spark).filter("k BETWEEN 120 AND 130").collect()
-    )
-    assert got == full == list(range(120, 131))
-
-    # half-open range + string column stats
-    assert len(t.read_pruned(spark, {"k": (None, 40)}).inputFiles()) == 1
-    assert len(t.read_pruned(spark, {"k": (500, None)}).inputFiles()) == 0
-    # disjoint range -> empty frame with intact schema
-    empty = t.read_pruned(spark, {"k": (500, None)})
-    assert empty.columns == t.read(spark).columns and empty.count() == 0
-
-    # optimize rewrites carry fresh stats; pruning still correct
-    t.optimize(spark, target_files=1)
-    assert len(t.read_pruned(spark, {"k": (120, 130)}).inputFiles()) == 1
-    # un-stat'd column in the predicate -> fail open (all files read)
-    assert t.read_pruned(spark, {"nosuchcol": (0, 1)}).count() == 150
-
-
 def test_txlog_check_constraints_enforced_on_writes(spark, tmp_path):
     """Delta-style CHECK constraints: validated against existing data
     at ADD time, enforced on every write path (append, append_batch,
@@ -1004,67 +768,6 @@ def test_txlog_history_summarizes_commits(spark, tmp_path):
     assert h[2]["constraint"] == "k_pos" and h[2]["n_added"] == 0
     # overwrite logically removes every file the two appends added
     assert h[3]["n_removed"] == h[0]["n_added"] + h[1]["n_added"] > 0
-
-
-def test_txlog_bloom_point_lookup_prunes_files(spark, tmp_path):
-    """Per-file Bloom index: a point lookup on a high-cardinality key
-    plans only the file(s) whose bitset might contain it (min/max
-    stats cannot prune here — every append spans a disjoint id SET,
-    not a disjoint range); no false negatives; pre-index files fail
-    open; results equal the full-scan filter."""
-    from iot_etl_spark.warehouse.txlog import TxTable
-
-    t = TxTable(str(tmp_path / "tx"))
-    # file committed BEFORE the index exists -> always read (fail open)
-    t.append(
-        spark.createDataFrame(
-            [(f"legacy-{i}", i) for i in range(50)], "uid STRING, v INT"
-        ).coalesce(1)
-    )
-    t.set_bloom_columns(["uid"])
-    for gen in range(3):
-        rows = [(f"u{gen}-{i}", gen * 1000 + i) for i in range(200)]
-        t.append(spark.createDataFrame(rows, "uid STRING, v INT").coalesce(1))
-
-    blooms = t.snapshot_file_blooms()
-    indexed = [n for n, b in blooms.items() if "uid" in b]
-    unindexed = [n for n, b in blooms.items() if "uid" not in b]
-    assert len(indexed) == 3 and len(unindexed) == 1
-
-    # point lookup: the legacy file (fail-open) + exactly the one
-    # indexed file holding the key survive planning
-    import os
-
-    target = "u1-137"
-    keep = []
-    from iot_etl_spark.warehouse.txlog import _bloom_maybe_contains
-
-    for n, b in blooms.items():
-        if "uid" not in b or _bloom_maybe_contains(b["uid"], target):
-            keep.append(n)
-    assert len(keep) <= 2  # legacy + 1 (false positives would add more)
-
-    got = t.read_point(spark, "uid", target).filter(f"uid = '{target}'")
-    full = t.read(spark).filter(f"uid = '{target}'")
-    assert [(r.uid, r.v) for r in got.collect()] == [(target, 1137)]
-    assert got.collect() == full.collect()
-
-    # no false negatives across every committed key
-    for gen in range(3):
-        probe = f"u{gen}-0"
-        assert t.read_point(spark, "uid", probe).filter(
-            f"uid = '{probe}'"
-        ).count() == 1
-
-    # absent key: bloom planning may drop every indexed file
-    assert t.read_point(spark, "uid", "nope").filter("uid = 'nope'").count() == 0
-
-    # OPTIMIZE rewrites with the index: the legacy rows become indexed
-    t.optimize(spark, target_files=1)
-    blooms2 = t.snapshot_file_blooms()
-    assert all("uid" in b for b in blooms2.values())
-    got2 = t.read_point(spark, "uid", "legacy-3").filter("uid = 'legacy-3'")
-    assert got2.count() == 1
 
 
 def test_append_with_quarantine_routes_violations(spark, tmp_path):
@@ -1172,21 +875,16 @@ def _typed_rows():
 def test_txlog_staging_round_trips_types(spark, tmp_path, staging):
     """Timestamp, decimal, nested struct/array, map and all-NULL
     columns read back unchanged, with the logged schema, on both
-    staging paths; a Bloom index on a timestamp column finds its row
-    on both."""
+    staging paths."""
     from iot_etl_spark.warehouse.txlog import TxTable
 
     df = _frame(spark, tmp_path, _typed_rows(), _TYPED_DDL)
     t = TxTable(str(tmp_path / "tx"))
-    t.set_bloom_columns(["ts"])
     t.append(df)
     assert _writers(t) == {staging}
     got = t.read(spark)
     assert got.schema == df.schema
     assert sorted(got.collect()) == sorted(df.collect())
-    ts = _typed_rows()[0][5]
-    hit = t.read_point(spark, "ts", ts).filter(F.col("ts") == F.lit(ts))
-    assert [r.id for r in hit.collect()] == [1]
 
 
 def test_txlog_staging_empty_frame(spark, tmp_path, staging):
@@ -1219,7 +917,6 @@ def test_txlog_snapshot_mixes_staging_paths(spark, tmp_path):
         spark.conf.set(key, prev)
     assert _writers(t) == {"arrow", "distributed"}
     assert _tx_rows(t.read(spark)) == [(1, "a"), (2, "b"), (3, "c")]
-    assert _tx_rows(t.read_changes(spark, since_version=0)) == [(2, "b"), (3, "c")]
 
 
 def test_txlog_evolved_read_matches_merge_schema(spark, tmp_path, staging):
@@ -1311,7 +1008,7 @@ def test_txlog_commit_survives_crash_mid_write(spark, tmp_path, monkeypatch):
 
 def test_txlog_reads_log_without_spark_schema(spark, tmp_path, staging):
     """A log written before commits recorded the Spark schema (only the
-    column -> type signature) still reads, feeds changes and optimizes:
+    column -> type signature) still reads and optimizes:
     the signature's DDL, nested window struct included, gives the rows
     a footer-merging read gives."""
     import json
@@ -1343,9 +1040,6 @@ def test_txlog_reads_log_without_spark_schema(spark, tmp_path, staging):
         want = merged(t.snapshot_files(version))
         assert got.schema == want.schema
         assert sorted(got.collect()) == sorted(want.collect())
-    changes = t.read_changes(spark, since_version=0)
-    assert changes.schema == merged(t.snapshot_files()).schema
-    assert sorted(r.k for r in changes.collect()) == [2, 3]
     everything = sorted(merged(t.snapshot_files()).collect())
     t.optimize(spark)
     assert len(t.snapshot_files()) == 1

@@ -2,10 +2,11 @@
 
 Reference: ``batch_etl/spark_transform.py:95-110`` adds hour /
 day-of-week / month / is_weekend / is_business_hours with
-``withColumn`` chains. Spark's ``dayofweek`` is 1=Sunday (the
-reference's weekend test is ``isin([1,7])`` at
-``spark_transform.py:106``). All expressions are built-in Column ops —
-fully Catalyst-optimizable, no UDFs (SURVEY.md §2.10).
+``withColumn`` chains; here they are one ``withColumns`` projection,
+analysed once. Spark's ``dayofweek`` is 1=Sunday (the reference's
+weekend test is ``isin([1,7])`` at ``spark_transform.py:106``). All
+expressions are built-in Column ops — fully Catalyst-optimizable, no
+UDFs (SURVEY.md §2.10).
 
 DELIBERATE DIVERGENCE from the reference: its ``is_business_hours`` is
 ``hour >= 9 AND hour <= 17`` with no weekday test
@@ -29,13 +30,11 @@ def add_time_features(df: DataFrame, time_col: str = "ts") -> DataFrame:
     t = F.col(time_col)
     hour = F.hour(t)
     dow = F.dayofweek(t)  # 1=Sunday .. 7=Saturday
-    return (
-        df.withColumn("hour_of_day", hour)
-        .withColumn("day_of_week", dow)
-        .withColumn("month", F.month(t))
-        .withColumn("is_weekend", dow.isin([1, 7]))
-        .withColumn(
-            "is_business_hours",
+    return df.withColumns({
+        "hour_of_day": hour,
+        "day_of_week": dow,
+        "month": F.month(t),
+        "is_weekend": dow.isin([1, 7]),
+        "is_business_hours":
             (hour >= BUSINESS_HOUR_START) & (hour < BUSINESS_HOUR_END) & ~dow.isin([1, 7]),
-        )
-    )
+    })

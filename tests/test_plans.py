@@ -655,3 +655,11 @@ def test_round13_plan_shapes(spark):
     plan, _ = _plans(spark, "herfindahl_concentration")
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_latest_per_device_limits_before_shuffle(spark):
+    """latest_per_device's window keeps its partial group limit below
+    the shuffle, so each map task ships at most one row per key."""
+    plan, _ = _plans(spark, "latest_per_device")
+    below_shuffle = plan.split("Exchange hashpartitioning", 1)[1]
+    assert "WindowGroupLimit" in below_shuffle and "Partial" in below_shuffle

@@ -21,7 +21,7 @@ BASE_TS = datetime.datetime(2024, 1, 1)
 
 def _df(spark, rows):
     data = [
-        (i, k, BASE_TS + datetime.timedelta(seconds=s), float(v))
+        (i, k, None if s is None else BASE_TS + datetime.timedelta(seconds=s), float(v))
         for i, (k, s, v) in enumerate(rows)
     ]
     return spark.createDataFrame(
@@ -29,28 +29,42 @@ def _df(spark, rows):
     )
 
 
+# ROW with a nullable ts offset
+NULLABLE_TS_ROW = st.tuples(
+    st.integers(min_value=0, max_value=3),
+    st.none() | st.integers(min_value=0, max_value=10_000),
+    st.floats(min_value=-100, max_value=100,
+              allow_nan=False, allow_infinity=False),
+)
+
+
 @settings(max_examples=15, deadline=None)
-@given(st.lists(ROW, min_size=1, max_size=30))
+@given(st.lists(NULLABLE_TS_ROW, min_size=1, max_size=30))
 def test_latest_per_key_property(spark, rows):
-    """latest_per_key == pandas idxmax on (ts, event_id) per key —
-    including duplicate-timestamp ties, which the event_id tiebreak
-    must resolve identically."""
+    """latest_per_key == the first row per key in pandas' (ts DESC
+    NULLS LAST, event_id DESC) order — including duplicate-timestamp
+    ties, which the event_id tiebreak must resolve identically, and
+    NULL timestamps, which lose to any timestamp. Whole rows are
+    compared, and the output keeps the input's columns, in order,
+    with their types."""
     from iot_etl_spark.operators.latest import latest_per_key
 
     df = _df(spark, rows)
-    got = {
-        r.user_id: r.event_id
-        for r in latest_per_key(
-            df, key_cols=("user_id",), time_col="ts", tiebreak_col="event_id"
-        ).collect()
-    }
+    out = latest_per_key(
+        df, key_cols=("user_id",), time_col="ts", tiebreak_col="event_id"
+    )
+    assert [(f.name, f.dataType) for f in out.schema.fields] == [
+        (f.name, f.dataType) for f in df.schema.fields
+    ]
+    got = out.toPandas().sort_values("user_id").reset_index(drop=True)
     pdf = df.toPandas()
-    expected = {
-        int(k): int(g.sort_values(["ts", "event_id"], ascending=[False, False])
-                    .iloc[0].event_id)
-        for k, g in pdf.groupby("user_id")
-    }
-    assert got == expected
+    expected = (
+        pdf.sort_values(["ts", "event_id"], ascending=[False, False],
+                        na_position="last")
+        .groupby("user_id", sort=True).head(1)
+        .sort_values("user_id").reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, expected, check_dtype=True)
 
 
 @settings(max_examples=15, deadline=None)

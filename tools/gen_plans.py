@@ -29,7 +29,7 @@ PICKS = [
      "train/eval decontamination: eval grams DISTINCT + broadcast, "
      "train never shuffles shingles"),
     ("latest_per_device",
-     "DISTINCT ON / last-per-key: single window shuffle, no global sort"),
+     "DISTINCT ON / last-per-key: single window shuffle behind a partial group limit"),
     ("device_cooccurrence",
      "co-activity graph: within-bucket pair expansion (LSH-bucket shape), "
      "never a self-join on the time bucket"),

@@ -32,16 +32,3 @@ def enrich_left_join(
     if broadcast_dim:
         dim = F.broadcast(dim)
     return fact.join(dim, on=on, how="left")
-
-
-def join_medium_dim(
-    fact: DataFrame, dim: DataFrame, on: str | list, how: str = "inner"
-) -> DataFrame:
-    """Equi-join against a MEDIUM dimension — too big to broadcast,
-    small enough that building a hash table per partition beats
-    sorting both sides: the SHUFFLE_HASH hint skips the sort-merge
-    sort on the fact side (SMJ is Spark's default above the broadcast
-    threshold; its sort of the big side is the avoidable cost).
-    The fact side still shuffles on the key — use the bucketed layout
-    (warehouse/bucketing.py) when even that shuffle must go."""
-    return fact.join(dim.hint("SHUFFLE_HASH"), on, how)

@@ -44,10 +44,9 @@ def add_quality_flags(
 # check as an eager count (spark_transform.py:184-213 + the audit
 # counts SURVEY §4 flags); here every row-level rule compiles into ONE
 # aggregation pass over the table (conditional sums share the scan),
-# uniqueness rides the same pass via count - countDistinct, and
-# foreign-key rules each add one broadcast anti-join probe. At 100 TB
-# the difference between "a suite of checks" and "a scan per check" is
-# the whole game.
+# and uniqueness rides the same pass via count - countDistinct. At
+# 100 TB the difference between "a suite of checks" and "a scan per
+# check" is the whole game.
 
 from dataclasses import dataclass, field
 from typing import Any
@@ -56,7 +55,7 @@ from typing import Any
 @dataclass(frozen=True)
 class Constraint:
     name: str
-    kind: str  # not_null | in_range | accepted_values | unique | expression | foreign_key
+    kind: str  # not_null | in_range | accepted_values | unique | expression
     params: dict[str, Any] = field(default_factory=dict)
 
 
@@ -84,28 +83,20 @@ def expression(name: str, sql_predicate: str) -> Constraint:
     return Constraint(name, "expression", {"pred": sql_predicate})
 
 
-def foreign_key(col: str, dim: DataFrame, dim_col: str) -> Constraint:
-    return Constraint(
-        f"fk_{col}", "foreign_key", {"col": col, "dim": dim, "dim_col": dim_col}
-    )
-
-
 def constraint_report(df: DataFrame, constraints: list[Constraint]) -> DataFrame:
     """Evaluate a constraint suite; returns one row per constraint:
     ``constraint, kind, n_rows, n_violations, passed``.
 
     Row-level + uniqueness rules share a single aggregation (one scan);
-    each foreign-key rule adds one anti-join probe with the dimension
-    side broadcast. Nothing collects driver-side."""
+    nothing collects driver-side. An empty suite yields an empty frame
+    with the same schema."""
     from collections import Counter
 
-    spark = df.sparkSession
     dup = sorted(n for n, k in Counter(c.name for c in constraints).items() if k > 1)
     if dup:
         raise ValueError(f"duplicate constraint names: {dup}")
     aggs: list = [F.count(F.lit(1)).alias("__n_rows")]
     row_rules: list[Constraint] = []
-    fk_rules: list[Constraint] = []
     for c in constraints:
         if c.kind == "not_null":
             viol = F.col(c.params["col"]).isNull()
@@ -132,54 +123,29 @@ def constraint_report(df: DataFrame, constraints: list[Constraint]) -> DataFrame
             )
             row_rules.append(c)
             continue
-        elif c.kind == "foreign_key":
-            fk_rules.append(c)
-            continue
         else:
             raise ValueError(f"unknown constraint kind: {c.kind}")
         aggs.append(F.sum(viol.cast("long")).alias(f"__v_{len(row_rules)}"))
         row_rules.append(c)
 
-    if row_rules:
-        one = df.agg(*aggs)
-        # melt the single agg row into (constraint, ...) rows JVM-side;
-        # typed F.lit expressions, so names need no escaping
-        stack_args: list = [F.lit(len(row_rules))]
-        for i, c in enumerate(row_rules):
-            stack_args += [F.lit(c.name), F.lit(c.kind), F.col(f"__v_{i}")]
-        report = one.select(
-            F.col("__n_rows"),
-            F.stack(*stack_args).alias("constraint", "kind", "n_violations"),
-        ).select(
-            "constraint", "kind",
-            F.col("__n_rows").alias("n_rows"),
-            F.col("n_violations").cast("long").alias("n_violations"),
-            (F.col("n_violations") == 0).alias("passed"),
-        )
-    else:
-        # fk-only (or empty) suite: no aggregation pass to melt
-        report = spark.createDataFrame(
+    if not row_rules:
+        return df.sparkSession.createDataFrame(
             [],
             "constraint STRING, kind STRING, n_rows BIGINT, "
             "n_violations BIGINT, passed BOOLEAN",
         )
-    for c in fk_rules:
-        col, dim, dim_col = c.params["col"], c.params["dim"], c.params["dim_col"]
-        orphans = (
-            df.select(F.col(col)).filter(F.col(col).isNotNull())
-            .join(
-                F.broadcast(dim.select(F.col(dim_col).alias(col)).distinct()),
-                col, "left_anti",
-            )
-        )
-        fk_row = df.agg(F.count(F.lit(1)).alias("n_rows")).join(
-            orphans.agg(F.count(F.lit(1)).alias("n_violations"))
-        ).select(
-            F.lit(c.name).alias("constraint"),
-            F.lit("foreign_key").alias("kind"),
-            "n_rows",
-            F.col("n_violations").cast("long").alias("n_violations"),
-            (F.col("n_violations") == 0).alias("passed"),
-        )
-        report = report.unionByName(fk_row)
-    return report
+    one = df.agg(*aggs)
+    # melt the single agg row into (constraint, ...) rows JVM-side;
+    # typed F.lit expressions, so names need no escaping
+    stack_args: list = [F.lit(len(row_rules))]
+    for i, c in enumerate(row_rules):
+        stack_args += [F.lit(c.name), F.lit(c.kind), F.col(f"__v_{i}")]
+    return one.select(
+        F.col("__n_rows"),
+        F.stack(*stack_args).alias("constraint", "kind", "n_violations"),
+    ).select(
+        "constraint", "kind",
+        F.col("__n_rows").alias("n_rows"),
+        F.col("n_violations").cast("long").alias("n_violations"),
+        (F.col("n_violations") == 0).alias("passed"),
+    )

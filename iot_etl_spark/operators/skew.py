@@ -1,11 +1,10 @@
-"""Skew-aware join/aggregate helpers for the 100 TB path.
+"""Skew-aware aggregation helpers for the 100 TB path.
 
 AQE's skew-join splitting (`spark.sql.adaptive.skewJoin.enabled`, on in
 session.py) handles sort-merge skew at runtime; these helpers cover the
-cases AQE cannot: hot-key *aggregations* (a single device/user key that
-overwhelms one reducer) and broadcast-ineligible joins against a
-replicable right side. Both are classic salting: spread a hot key over
-N sub-keys, combine at the end.
+case AQE cannot: hot-key *aggregations* (a single device/user key that
+overwhelms one reducer). The fix is classic salting: spread a hot key
+over N sub-keys, combine at the end.
 
 The reference never needed this (5 devices, single node) — at 1000
 executors a top-heavy device or a null-heavy join key is the #1 cause
@@ -53,36 +52,3 @@ def salted_aggregate(
     salted = add_salt(df, buckets)
     partial = salted.groupBy(*keys, "_salt").agg(*aggs)
     return partial.groupBy(*keys).agg(*final_aggs)
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    buckets: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skewed equi-join without broadcast: salt the (large, skewed)
-    left side into ``buckets`` sub-keys and EXPLODE-replicate the
-    right side across all bucket values, so one hot join key fans out
-    over ``buckets`` tasks instead of one straggler. Right side grows
-    x buckets — use when it is too big to broadcast but small enough
-    to replicate; otherwise prefer AQE skew-join on sort-merge.
-
-    Only ``inner`` and ``left`` are supported: under right/full outer
-    joins the replicated right rows that find no left partner would
-    surface once PER BUCKET — silent duplication, so those modes
-    raise. (A right-outer salted join needs an anti-join fix-up pass;
-    express it as ``left`` from the other side instead.)"""
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"salted_join supports how='inner'/'left' only, got {how!r}: "
-            "outer-right modes would duplicate unmatched right rows "
-            "once per salt bucket"
-        )
-    salted_left = add_salt(left, buckets, "_salt")
-    replicated_right = right.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    ).withColumn("_salt", F.col("_salt").cast("long"))
-    out = salted_left.join(replicated_right, [on, "_salt"], how)
-    return out.drop("_salt")

@@ -10,8 +10,9 @@ z-score anomaly, quality flags) -> ``load_all``
 Spark-first deltas (SURVEY.md §4 anti-patterns not copied):
 - no eager per-stage ``count()`` audit actions (the reference forces
   full recomputation at spark_extract.py:85,122,159 and
-  spark_transform.py:59,88,209-211); audit counts come from ONE cached
-  pass at the end.
+  spark_transform.py:59,88,209-211); the audit counts are collected
+  by an ``Observation`` during the fact write itself, so the whole
+  run is one pass over the events with no cache.
 - fact written as Parquet partitioned by event date with
   sortWithinPartitions(key, time) — the hypertable-chunk + segmentby
   compression analog (create_dwh_schema.sql:88-90, 240-248).
@@ -19,7 +20,7 @@ Spark-first deltas (SURVEY.md §4 anti-patterns not copied):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from iot_etl_spark.operators.timefeatures import add_time_features
 from iot_etl_spark.operators.rolling import add_rolling_features, add_lag_features
@@ -80,50 +81,15 @@ def load_dimension(df: DataFrame, out_path: str) -> None:
     df.write.mode("overwrite").parquet(out_path)
 
 
-def write_csv(df: DataFrame, out_path: str, header: bool = True) -> None:
-    """CSV sink (S16, generate_practice_data.py:145's pandas to_csv) —
-    distributed write, one file per partition; coalesce upstream if a
-    single file is required."""
-    df.write.mode("overwrite").option("header", str(header).lower()).csv(out_path)
-
-
-def write_orc(
-    df: DataFrame,
-    out_path: str,
-    partition_by: tuple[str, ...] = (),
-    bloom_filter_cols: tuple[str, ...] = (),
-) -> None:
-    """ORC sink — the second columnar interchange format Spark ships
-    natively (Hive-ecosystem consumers often require ORC where the
-    lake side is parquet). Same layout discipline as the parquet
-    sinks: optional partition columns for pruning, and ORC's built-in
-    per-stripe bloom filters on declared point-lookup columns (the
-    ORC-native analog of the txlog's sidecar bloom index — here the
-    format carries the index itself). zlib stripe compression is
-    Spark's default."""
-    w = df.write.mode("overwrite")
-    if bloom_filter_cols:
-        w = w.option("orc.bloom.filter.columns", ",".join(bloom_filter_cols))
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(out_path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source: native vectorized reader — predicate pushdown and
-    column pruning reach the stripe level exactly like parquet
-    (tests pin PushedFilters on the ORC scan)."""
-    return spark.read.orc(path)
-
-
 def run_batch_pipeline(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
     test_mode: bool = False,
 ) -> dict[str, int]:
-    """End-to-end batch run; returns audit counts from one cached pass
-    (the reference's --test-mode limit(1000) is preserved,
+    """End-to-end batch run; returns the audit counts (total, valid,
+    anomalies) observed during the fact write, the run's only pass over
+    the events (the reference's --test-mode limit(1000) is preserved,
     run_batch_pipeline.py:77-79)."""
     events = load_events(spark, sf_dir)
     customer = load_table(spark, sf_dir, "customer")
@@ -132,41 +98,18 @@ def run_batch_pipeline(
     transformed = transform_all(events, customer, nation)
     if test_mode:
         transformed = transformed.limit(1000)
-    transformed = transformed.cache()
-    try:
-        total = transformed.count()
-        valid = transformed.filter(F.col("is_valid_record")).count()
-        anomalies = transformed.filter(F.col("is_anomaly_combined")).count()
-
-        load_dimension(customer, f"{out_dir}/dim_customer")
-        load_dimension(nation, f"{out_dir}/dim_nation")
-        load_fact_table(transformed, f"{out_dir}/fact_events_enriched")
-    finally:
-        transformed.unpersist()
-    return {"total": total, "valid": valid, "anomalies": anomalies}
-
-
-def write_with_audit(
-    df: DataFrame,
-    out_path: str,
-    metrics: dict[str, "F.Column"] | None = None,
-    mode: str = "append",
-) -> dict:
-    """Audited write: row counts and custom metrics collected DURING
-    the write action via the Observation API — zero extra scans.
-
-    This is the Spark-native fix for the reference's audit pattern
-    (`spark_extract.py:85,122,159`, `spark_transform.py:59,88`,
-    twice per micro-batch at `spark_streaming_consumer.py:230-231`):
-    eager `df.count()` calls that each re-execute the whole lineage
-    just to log a number. `observe` accumulates the same aggregates
-    on the rows as they stream through the one real action."""
-    from pyspark.sql import Observation
-
-    obs = Observation("write_audit")
-    cols = {"rows_written": F.count(F.lit(1))}
-    if metrics:
-        cols.update(metrics)
-    audited = df.observe(obs, *[c.alias(n) for n, c in cols.items()])
-    audited.write.mode(mode).parquet(out_path)
-    return obs.get
+    # Observed below the fact sink's validity filter (the optimizer
+    # keeps that Filter above CollectMetrics), so the counts cover
+    # every transformed row; count_if skips NULL like filter(col) does.
+    obs = Observation("batch_audit")
+    transformed = transformed.observe(
+        obs,
+        F.count(F.lit(1)).alias("total"),
+        F.count_if(F.col("is_valid_record")).alias("valid"),
+        F.count_if(F.col("is_anomaly_combined")).alias("anomalies"),
+    )
+    load_dimension(customer, f"{out_dir}/dim_customer")
+    load_dimension(nation, f"{out_dir}/dim_nation")
+    load_fact_table(transformed, f"{out_dir}/fact_events_enriched")
+    counts = obs.get
+    return {k: int(counts[k]) for k in ("total", "valid", "anomalies")}

@@ -1010,7 +1010,7 @@ def schema_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint of the set of JSON keys observed in `props` — plus
     week-over-week drift flags (key-set changed; null-rate jumped by
     more than 1 point). This is the ingestion-guard a pipeline runs
-    BEFORE schema evolution (warehouse/lifecycle.py append_evolved):
+    BEFORE schema evolution (``TxTable.append(allow_evolution=True)``):
     upstream producers change payloads without notice, and the
     earliest signal is the observed key-set / null-profile moving.
 

@@ -733,7 +733,7 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartitions by token. Honest caveat for the full 100 TB corpus:
     the bigram-type table can outgrow the broadcast ceiling — there
     the scoring join degrades gracefully to SHUFFLE_HASH on
-    (prev, cur) (join_medium_dim's regime), or the LM is pruned to a
+    (prev, cur), or the LM is pruned to a
     top-K table as CCNet does with its trained KenLM."""
     docs = load_table(spark, sf_dir, "documents")
     # let-bound ws: split runs once per doc (CollapseProject would

@@ -147,54 +147,3 @@ def register_views(spark: SparkSession, sf_dir: str, force: bool = False) -> Non
     for t, df in load_all(spark, sf_dir).items():
         df.createOrReplaceTempView(t)
     _REGISTERED[key] = state
-
-
-def load_jsonl(
-    spark: SparkSession, path: str, schema
-) -> tuple[DataFrame, DataFrame]:
-    """Batch JSONL ingest with an explicit dead-letter split — the
-    batch twin of the streaming DLQ parse stage
-    (``streaming/pipeline.py:parse_with_dlq``; reference ingest is the
-    same decode at ``spark_streaming_consumer.py:114-126``).
-
-    Deliberately NOT ``spark.read.json`` with PERMISSIVE +
-    ``_corrupt_record``: filtering on the internal corrupt column
-    requires caching the parsed frame first (a documented Spark
-    limitation) — a non-starter when the input is 100 TB. Instead the
-    file is read as text lines (splittable, parallel) and parsed with
-    ``from_json`` against the DECLARED schema; each non-blank line is
-    classified exactly once:
-
-    - good: parses as a JSON object -> typed columns (missing fields
-      are NULL — semantic validation belongs to downstream gates, e.g.
-      the data-quality metrics or a txlog CHECK constraint);
-    - dlq: unparsable line, preserved VERBATIM for replay/forensics.
-
-    Corrupt detection uses ``from_json``'s in-schema corrupt-record
-    field (``columnNameOfCorruptRecord``) — NOT ``data IS NULL``,
-    because PERMISSIVE ``from_json`` yields a struct of NULL fields
-    for malformed input, indistinguishable from a legitimate ``{}``.
-
-    Returns ``(good, dlq)`` — both lazy; nothing is scanned twice
-    (two consumers of one text scan; Spark reuses the exchange-free
-    file source, and at scale each side prunes to its own columns)."""
-    from pyspark.sql import types as T
-
-    corrupt = "_corrupt_record"
-    parse_schema = T.StructType(
-        [*schema.fields, T.StructField(corrupt, T.StringType())]
-    )
-    raw = spark.read.text(path).withColumnRenamed("value", "raw_line")
-    nonblank = F.trim(F.col("raw_line")) != ""
-    parsed = raw.filter(nonblank).select(
-        "raw_line",
-        F.from_json(
-            F.col("raw_line"),
-            parse_schema,
-            {"columnNameOfCorruptRecord": corrupt, "mode": "PERMISSIVE"},
-        ).alias("data"),
-    )
-    ok = F.col(f"data.{corrupt}").isNull()
-    good = parsed.filter(ok).select(*(f"data.{f.name}" for f in schema.fields))
-    dlq = parsed.filter(~ok).select("raw_line")
-    return good, dlq

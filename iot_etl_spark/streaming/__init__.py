@@ -2,7 +2,6 @@ from iot_etl_spark.streaming.pipeline import (
     read_stream_source,
     apply_stream_transforms,
     windowed_aggregate,
-    start_parquet_upsert_sink,
     run_stream_to_memory,
 )
 
@@ -10,6 +9,5 @@ __all__ = [
     "read_stream_source",
     "apply_stream_transforms",
     "windowed_aggregate",
-    "start_parquet_upsert_sink",
     "run_stream_to_memory",
 ]

@@ -12,9 +12,10 @@ Spark-first deltas (SURVEY.md §2.9):
   update mode with no watermark -> unbounded state. This engine bounds
   state with ``withWatermark`` and documents the late-data drop.
 - **Idempotent sink** (T8): the reference relies on a target-table PK
-  to absorb at-least-once replays; here foreachBatch writes parquet
-  partitioned by window date with dynamic partition overwrite, so a
-  replayed micro-batch rewrites, not duplicates.
+  to absorb at-least-once replays; here ``start_txlog_upsert_sink``
+  appends each micro-batch's changed groups to a transaction-log table
+  keyed by epoch id, so a replayed micro-batch is recognized and
+  skipped, and ``read_upserted`` resolves the latest row per group.
 - **Source-agnostic ingest**: the same parse/transform stages run on
   Kafka (prod) or file/rate sources (hermetic tests) — the Kafka DSL
   is behind an option so tests never need a broker.
@@ -308,48 +309,6 @@ def windowed_aggregate(
     )
 
 
-def start_parquet_upsert_sink(
-    df: DataFrame,
-    out_path: str,
-    checkpoint: str,
-    trigger_seconds: int = DEFAULT_TRIGGER_S,
-    key_cols: tuple[str, ...] = ("event_type",),
-):
-    """foreachBatch parquet sink with group-key partition overwrite
-    (T8): update-mode emits only the (window, key) groups whose
-    aggregate changed in the micro-batch, so the overwrite partition
-    granularity MUST equal the group key — each emitted group rewrites
-    exactly its own (window_key, *key_cols) partition directory and
-    touches nothing else. Partitioning any coarser (e.g. by day)
-    silently deletes that partition's un-emitted sibling groups on
-    every incremental batch. This is the Spark answer to the
-    reference's PK-upsert intent (create_stream_tables.sql:19-23);
-    with a transactional table format the same contract is a MERGE on
-    the group key. One directory per group is the documented cost —
-    at 1-minute windows that is 1,440 * |keys| dirs/day, compacted by
-    the warehouse lifecycle job."""
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn(
-                "window_key", F.date_format("window_start", "yyyyMMdd_HHmmss")
-            )
-            .write.mode("overwrite")
-            # writer-scoped option: do NOT mutate the shared session conf
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("window_key", *key_cols)
-            .parquet(out_path)
-        )
-
-    return (
-        df.writeStream.outputMode("update")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
-
-
 def dedup_stream(
     df: DataFrame,
     keys: tuple[str, ...],
@@ -438,57 +397,6 @@ def start_txlog_sink(
     )
 
 
-UPSERT_SEQ_COL = "_upsert_seq"
-
-
-def start_txlog_fanout_sink(
-    df: DataFrame,
-    tables,
-    checkpoint: str,
-    trigger_seconds: int = DEFAULT_TRIGGER_S,
-    ledger_id: str | None = None,
-):
-    """Exactly-once streaming fan-out into SEVERAL transactional
-    tables from one stream (the serving-table + audit-table shape):
-    foreachBatch appends the micro-batch to every table via
-    ``append_batch``, each keyed by the same (ledger scope, epoch id).
-
-    The multi-sink failure window — crash AFTER table k committed but
-    BEFORE table k+1 — heals on replay because idempotence is
-    PER TABLE: the re-delivered epoch is recognized and skipped by the
-    tables that already hold it and applied by the ones that do not,
-    converging every table to exactly-once (pinned in
-    tests/test_streaming.py with a simulated partial failure). There
-    is deliberately no cross-table transaction: between crash and
-    replay the tables may expose different epochs (eventual
-    consistency across sinks, exact consistency within each), the
-    same contract Delta/Iceberg multi-sink pipelines settle for.
-
-    Caveat — convergence assumes the per-table failure is TRANSIENT.
-    A persistent failure on one table (e.g. a CHECK constraint that
-    rejects the batch every time) wedges the stream: every replay
-    fails at that table after the earlier tables committed, and the
-    tables stay divergent until the constraint (or the data) is
-    fixed. For constraint-bearing tables use
-    ``start_txlog_quarantine_sink`` instead, which routes violating
-    rows to a DLQ table so bad data cannot poison the epoch.
-
-    ``tables``: iterable of ``TxTable`` (duck-typed)."""
-    tables = list(tables)
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        for t in tables:
-            t.append_batch(batch_df, int(epoch_id), ledger_id=ledger_id)
-
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
-
-
 def start_txlog_quarantine_sink(
     df: DataFrame,
     table,
@@ -497,20 +405,20 @@ def start_txlog_quarantine_sink(
     trigger_seconds: int = DEFAULT_TRIGGER_S,
     ledger_id: str | None = None,
 ):
-    """Exactly-once streaming append with CHECK-violation DLQ routing —
-    the constraint-safe composition the fanout sink's docstring
-    prescribes: rows failing ``table``'s CHECK constraints divert to
-    ``quarantine`` (tagged with the failed rule names) instead of
-    failing the epoch, so a PERSISTENT bad-data condition cannot wedge
-    the stream the way a plain constrained append would (every replay
-    re-failing after earlier tables committed).
+    """Exactly-once streaming append with CHECK-violation DLQ routing:
+    rows failing ``table``'s CHECK constraints divert to ``quarantine``
+    (tagged with the failed rule names) instead of failing the epoch,
+    so a PERSISTENT bad-data condition cannot wedge the stream the way
+    a plain constrained append would (every replay re-failing on the
+    same rows).
 
     Exactly-once: both sides commit through ``append_batch``'s
     (ledger, batch) idempotence ledger with DISTINCT ledger scopes, so
     a crash between the valid commit and the quarantine commit heals
     on replay — the valid side recognizes the epoch and skips, the
-    quarantine side applies it (the per-table-idempotence argument of
-    start_txlog_fanout_sink, specialized to the two-sided split).
+    quarantine side applies it. Idempotence is per table; there is no
+    cross-table transaction, so between a crash and its replay the two
+    tables may hold different epochs.
 
     The split itself is computed ONCE per epoch
     (``TxTable.split_by_constraints`` localCheckpoints the tagged
@@ -540,6 +448,9 @@ def start_txlog_quarantine_sink(
     )
 
 
+UPSERT_SEQ_COL = "_upsert_seq"
+
+
 def start_txlog_upsert_sink(
     df: DataFrame,
     table,
@@ -547,10 +458,9 @@ def start_txlog_upsert_sink(
     trigger_seconds: int = DEFAULT_TRIGGER_S,
     ledger_id: str | None = None,
 ):
-    """Update-mode upsert as APPEND + read-side latest-per-key — the
-    100 TB answer to ``start_parquet_upsert_sink``'s per-group
-    directory storm (its own docstring concedes the cost: one
-    partition dir per changed (window, key) group per micro-batch).
+    """Update-mode upsert as APPEND + read-side latest-per-key (T8):
+    the engine's one streaming upsert path (the reference's PK upsert,
+    create_stream_tables.sql:19-23).
 
     Each micro-batch's changed groups are appended to the
     transactional table with the epoch id stamped in ``_upsert_seq``;
@@ -621,42 +531,6 @@ def start_console_sink(df: DataFrame, num_rows: int = 10, truncate: bool = True)
         .option("truncate", str(truncate).lower())
         .start()
     )
-
-
-def run_fanout(
-    spark: SparkSession,
-    source_df: DataFrame,
-    raw_path: str,
-    agg_path: str,
-    checkpoint_root: str,
-    window: str = "1 minute",
-    trigger_seconds: int = DEFAULT_TRIGGER_S,
-    time_col: str = "ts",
-    key_cols: tuple[str, ...] = ("event_type",),
-):
-    """Multi-query fan-out (T7, spark_streaming_consumer.py:296-340):
-    ONE source lineage feeds two independent sinks — valid raw rows
-    append to ``raw_path``; the watermarked tumbling aggregate upserts
-    into ``agg_path``. Returns both StreamingQuery handles; stop via
-    ``stop_all_queries``. Each query runs its own micro-batch thread
-    with its own checkpoint, exactly like the reference's raw +
-    windowed-agg pair."""
-    tx = apply_stream_transforms(source_df, time_col=time_col)
-    raw_q = (
-        tx.filter(F.col("is_valid_record"))
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", raw_path)
-        .option("checkpointLocation", f"{checkpoint_root}/raw")
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
-    agg = windowed_aggregate(tx, window=window, time_col=time_col, key_cols=key_cols)
-    agg_q = start_parquet_upsert_sink(
-        agg, agg_path, f"{checkpoint_root}/agg",
-        trigger_seconds=trigger_seconds, key_cols=key_cols,
-    )
-    return raw_q, agg_q
 
 
 def stop_all_queries(spark: SparkSession) -> int:

@@ -11,7 +11,6 @@ overwrite; retention drops whole date partitions.
 
 from iot_etl_spark.warehouse.txlog import TxTable, ConcurrentCommitError
 from iot_etl_spark.warehouse.lifecycle import (
-    compact_partitions,
     hourly_agg,
     daily_agg,
     materialize_agg,
@@ -21,7 +20,6 @@ from iot_etl_spark.warehouse.lifecycle import (
 )
 
 __all__ = [
-    "compact_partitions",
     "hourly_agg",
     "daily_agg",
     "materialize_agg",

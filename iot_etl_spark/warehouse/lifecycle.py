@@ -154,332 +154,3 @@ def read_agg(spark: SparkSession, path: str) -> DataFrame:
     """Scan the materialized aggregate; time predicates on agg_date are
     partition-pruned."""
     return spark.read.parquet(path)
-
-
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_col: str = "agg_date",
-    target_files_per_partition: int = 1,
-    partitions: list | None = None,
-) -> int:
-    """Small-file compaction for incrementally-written tables (the
-    streaming upsert sink leaves one directory per updated group; a
-    periodic compaction keeps file counts bounded — Timescale gets
-    this for free from chunk storage, parquet tables schedule it).
-
-    Each partition is compacted independently: read its directory,
-    rewrite exactly ``target_files_per_partition`` files into a
-    staging directory, then swap staged-for-live with two renames.
-    The table is never read-and-overwritten in one job, so a mid-job
-    failure leaves every partition either fully old or fully new —
-    at worst an orphaned ``._compact_*`` staging dir or a ``._old``
-    retirement dir to sweep, never missing data. Per-partition file
-    count is exact (one ``repartition(n)`` per partition value, not
-    one hash-bucketed job whose colliding values share tasks).
-
-    ``partitions`` restricts compaction to those partition values —
-    run it on cold partitions (older than the streaming watermark) so
-    it never races an in-flight upsert. Returns the number of data
-    files under ``path`` after compaction.
-
-    Scale note: the per-partition loop is an ops-plane iteration over
-    O(days) directory names, not a data collect; each iteration is a
-    distributed job. The rename swap assumes a filesystem with atomic
-    rename (local/HDFS); on object stores compaction belongs to a
-    transactional table format (Iceberg/Delta rewrite-data-files).
-    """
-    import os
-    import shutil
-    import uuid
-
-    prefix = f"{partition_col}="
-    part_dirs = sorted(
-        d
-        for d in os.listdir(path)
-        if d.startswith(prefix) and os.path.isdir(os.path.join(path, d))
-    )
-    if partitions is not None:
-        wanted = {f"{prefix}{v}" for v in partitions}
-        part_dirs = [d for d in part_dirs if d in wanted]
-    for d in part_dirs:
-        live = os.path.join(path, d)
-        stage = os.path.join(path, f"._compact_{uuid.uuid4().hex}")
-        (
-            spark.read.parquet(live)
-            .repartition(target_files_per_partition)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        retired = live + "._old"
-        os.rename(live, retired)
-        os.rename(stage, live)
-        shutil.rmtree(retired)
-    n = 0
-    for _root, _dirs, files in os.walk(path):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
-
-
-def compact_leaf_partitions(
-    spark: SparkSession,
-    path: str,
-    target_files_per_partition: int = 1,
-) -> int:
-    """Multi-level twin of ``compact_partitions`` for the streaming
-    upsert sink's nested layout (``window_key=.../event_type=.../``,
-    streaming/pipeline.py:start_parquet_upsert_sink) — the compaction
-    job VERDICT r5 item 6 asked for: the sink's documented cost is one
-    directory per updated group, and without a scheduled compactor the
-    serving table degrades into a small-files store.
-
-    Every LEAF partition directory (one directly holding parquet
-    files) is compacted independently with the same stage/rename-swap
-    crash-safety as ``compact_partitions``: a mid-job failure leaves
-    each leaf fully old or fully new, never missing. Run it on cold
-    partitions (behind the streaming watermark) so it never races an
-    in-flight upsert — the sink only rewrites groups the watermark
-    still admits. Returns the number of parquet files under ``path``
-    after compaction. Ops-plane loop over O(windows x keys) directory
-    names; each rewrite is a distributed job."""
-    import os
-    import shutil
-    import uuid
-
-    leaves = []
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith("._")]
-        if any(f.endswith(".parquet") for f in files):
-            leaves.append(root)
-    for live in sorted(leaves):
-        n_parquet = sum(1 for f in os.listdir(live) if f.endswith(".parquet"))
-        if n_parquet <= target_files_per_partition:
-            continue
-        # stage/retired are dot-prefixed SIBLINGS, not suffixes of the
-        # live name: partition discovery ignores ._* entries entirely,
-        # so even a crash-orphaned dir never pollutes reads (a
-        # `key=v._old` suffix would parse as partition value "v._old")
-        parent = os.path.dirname(live)
-        stage = os.path.join(parent, f"._compact_{uuid.uuid4().hex}")
-        (
-            spark.read.parquet(live)
-            .repartition(target_files_per_partition)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        retired = os.path.join(parent, f"._retired_{uuid.uuid4().hex}")
-        os.rename(live, retired)
-        os.rename(stage, live)
-        shutil.rmtree(retired)
-    n = 0
-    for _root, _dirs, files in os.walk(path):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
-
-
-def append_evolved(df: DataFrame, path: str) -> None:
-    """Append a batch whose schema may have GAINED columns since the
-    table was created (the long-lived-table reality: firmware adds a
-    sensor field, the wire contract grows). Parquet appends are
-    per-file self-describing, so widening is always safe; readers opt
-    into the union view via ``read_evolved``."""
-    df.write.mode("append").parquet(path)
-
-
-def read_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """Union-schema read over a table written by batches with
-    different (widening) schemas: ``mergeSchema`` unions the footers;
-    files written before a column existed yield NULLs for it —
-    exactly the ALTER TABLE ADD COLUMN semantics of the reference's
-    warehouse, with no rewrite of old data.
-
-    Scale note: schema merging reads every file footer at planning
-    time — at 100 TB pin the merged schema in a catalog/metastore
-    after each widening instead of re-deriving it per query; column
-    pruning and filter pushdown work unchanged either way."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: tuple[str, ...],
-) -> DataFrame:
-    """Reconcile two snapshots of a table: full outer join on the key,
-    classify every row as added / removed / changed / unchanged by
-    comparing a hash of the non-key columns. The audit step of any
-    backfill or migration ("what exactly did the rerun change?") and
-    the input to an incremental publish (ship only added+changed).
-
-    Scale: one shuffle per side on the key; the non-key comparison is
-    a single xxhash64 over a struct (no per-column join conditions),
-    and unchanged rows can be filtered before any downstream write."""
-    val_cols = [c for c in new.columns if c not in key_cols]
-    kl = list(key_cols)
-
-    def hashed(df, tag):
-        return df.select(
-            *kl, F.xxhash64(F.struct(*[F.col(c) for c in val_cols])).alias(f"_h_{tag}")
-        )
-
-    j = hashed(old, "old").join(hashed(new, "new"), kl, "full_outer")
-    status = (
-        F.when(F.col("_h_old").isNull(), F.lit("added"))
-        .when(F.col("_h_new").isNull(), F.lit("removed"))
-        .when(F.col("_h_old") != F.col("_h_new"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return j.select(*kl, status.alias("diff_status"))
-
-
-def route_to_agg(
-    spark,
-    events: DataFrame,
-    agg_path: str,
-    bucket: str = "hour",
-    time_col: str = "ts",
-    key_cols: tuple[str, ...] = ("event_type",),
-) -> DataFrame:
-    """Materialized-view routing (the TimescaleDB real-time
-    continuous-aggregate read path, create_dwh_schema.sql:216-233's
-    consumer side): answer the bucket-aggregate query FROM the
-    materialized table when one exists and is complete, else compute
-    from raw events.
-
-    Freshness = bucket coverage: the MV serves only if its max bucket
-    covers the raw table's max event time (both read from parquet
-    footer statistics — two metadata-only lookups, no data scan). A
-    stale MV falls back to raw compute; production would instead
-    UNION the MV's buckets with a raw-compute tail over the
-    uncovered window — that variant is `refresh_agg` + this router
-    run after it, which is why the router stays binary here.
-
-    CALLER CONTRACT: max-bucket coverage cannot see backfilled or
-    late rows landing INSIDE buckets the MV already covers, nor an MV
-    materialized from a different events frame than the one passed
-    here — after any backfill (or when routing against a new frame),
-    run `refresh_agg` first or the router will serve stale buckets
-    with no signal.
-
-    Scale: routing decisions are O(footer); a routed query reads the
-    (buckets x keys)-grained MV — typically 4-6 orders of magnitude
-    smaller than the fact table it stands for."""
-    import os
-
-    compute = lambda: _BUILDERS[bucket](  # noqa: E731 - tiny local thunk
-        events, time_col=time_col, key_cols=key_cols
-    )
-    if not os.path.isdir(agg_path):
-        return compute()
-    mv = spark.read.parquet(agg_path)
-    mv_max_bucket = mv.agg(F.max("bucket")).first()[0]
-    raw_max_ts = events.agg(F.max(time_col)).first()[0]
-    if mv_max_bucket is None or raw_max_ts is None:
-        return compute()
-    # the MV covers raw iff raw's newest event falls inside (or before)
-    # the MV's newest bucket
-    covered = {"hour": 3600, "day": 86400}[bucket]
-    if raw_max_ts.timestamp() >= mv_max_bucket.timestamp() + covered:
-        return compute()
-    return mv.drop("agg_date")
-
-
-def delete_keys(
-    spark: SparkSession,
-    path: str,
-    key_col: str,
-    keys: list,
-    partition_col: str = "agg_date",
-) -> dict:
-    """Targeted key erasure (the GDPR right-to-be-forgotten path,
-    SURVEY §2.11 lifecycle family): delete every row whose ``key_col``
-    is in ``keys``, rewriting ONLY the partitions that can actually
-    contain one of the keys.
-
-    Candidate partitions are selected from parquet FOOTER STATISTICS
-    (row-group min/max of ``key_col`` — the same no-data-scan idiom as
-    route_to_agg's freshness check): a partition whose every row group
-    bounds exclude all keys is provably clean and is never read,
-    rewritten, or even touched — at 100 TB with date partitions and
-    ``sortWithinPartitions(key)`` layout (SCALE.md storage table),
-    erasing one device touches O(files containing that device), not
-    the table. Affected partitions rewrite with the compact_partitions
-    staging-dir + rename swap, so a mid-job failure leaves each
-    partition fully old or fully new.
-
-    Deleted-row accounting comes from footer row counts before/after —
-    no counting scan. Returns ``{"partitions_scanned", 
-    "partitions_rewritten", "rows_deleted"}``.
-
-    Scale note: the partition loop is ops-plane iteration over
-    O(days) directory names (the drop_partitions_older_than
-    convention); each rewrite is a distributed job. On object stores
-    the swap belongs to a transactional format (Iceberg/Delta
-    DELETE), which performs this identical file-level pruning from
-    its manifest stats.
-    """
-    import uuid
-
-    import pyarrow.parquet as pq
-
-    keyset = sorted(set(keys))
-
-    def _footer_rows(d: str) -> int:
-        n = 0
-        for root, _dirs, files in os.walk(d):
-            for f in files:
-                if f.endswith(".parquet"):
-                    n += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        return n
-
-    def _may_contain(d: str) -> bool:
-        for root, _dirs, files in os.walk(d):
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                md = pq.ParquetFile(os.path.join(root, f)).metadata
-                schema_names = [md.schema.column(i).name for i in range(md.num_columns)]
-                if key_col not in schema_names:
-                    return True  # cannot prove absence
-                ci = schema_names.index(key_col)
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(ci).statistics
-                    if st is None or not st.has_min_max:
-                        return True
-                    if any(st.min <= k <= st.max for k in keyset):
-                        return True
-        return False
-
-    prefix = f"{partition_col}="
-    part_dirs = sorted(
-        d
-        for d in os.listdir(path)
-        if d.startswith(prefix) and os.path.isdir(os.path.join(path, d))
-    )
-    rewritten, deleted = [], 0
-    for d in part_dirs:
-        live = os.path.join(path, d)
-        if not _may_contain(live):
-            continue
-        before = _footer_rows(live)
-        stage = os.path.join(path, f"._erase_{uuid.uuid4().hex}")
-        (
-            spark.read.parquet(live)
-            # NULL-keyed rows must survive: bare ~isin() is NULL for a
-            # NULL key, and a NULL predicate filters the row out —
-            # silent data loss on unkeyed rows
-            .filter(~F.col(key_col).isin(keyset) | F.col(key_col).isNull())
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        retired = live + "._old"
-        os.rename(live, retired)
-        os.rename(stage, live)
-        shutil.rmtree(retired)
-        deleted += before - _footer_rows(live)
-        rewritten.append(d)
-    return {
-        "partitions_scanned": len(part_dirs),
-        "partitions_rewritten": rewritten,
-        "rows_deleted": deleted,
-    }

@@ -147,22 +147,6 @@ def test_salted_aggregate_matches_plain(spark):
     assert salted == direct
 
 
-def test_salted_join_matches_plain(spark):
-    """Salted skew join must produce exactly the plain join's rows."""
-    from pyspark.sql import functions as F
-    from iot_etl_spark.operators.skew import salted_join
-    from iot_etl_spark.sources.tables import load_events, load_table
-    from tests.conftest import SF_DIR
-
-    ev = load_events(spark, SF_DIR).select(
-        "event_id", F.col("user_id").alias("c_custkey"), "value"
-    )
-    cust = load_table(spark, SF_DIR, "customer").select("c_custkey", "c_name")
-    plain = ev.join(cust, "c_custkey").select("event_id", "c_name")
-    salted = salted_join(ev, cust, on="c_custkey", buckets=8).select("event_id", "c_name")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
 def test_planted_anomaly_recall(spark):
     """SURVEY §5 item 4: seeded data with reference-simulator semantics
     (base value + bounded noise; anomalies at 3-5x the variation,
@@ -246,29 +230,12 @@ def test_time_grid_gapfill_edges(spark, tmp_path):
     assert out[b[3]].value_interp == 30.0 and out[b[3]].reading_count == 2
 
 
-def test_join_medium_dim_plans_shuffled_hash_join(spark):
-    """SHUFFLE_HASH hint: no sort of the fact side, no broadcast —
-    a ShuffledHashJoin node with exchanges on the key."""
-    from iot_etl_spark.operators.enrich import join_medium_dim
-    from iot_etl_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
-    orders = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_custkey")
-    j = join_medium_dim(li, orders, li.l_orderkey == orders.o_orderkey)
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan
-    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
-
-
 def test_constraint_report_foreign_key_and_rules(spark):
     """constraint_report: row-level rules share one aggregation pass;
-    FK rules count orphans via broadcast anti-join; violation counts
-    match hand computation."""
+    violation counts match hand computation."""
     from iot_etl_spark.operators.quality import (
         constraint_report,
         expression,
-        foreign_key,
         in_range,
         not_null,
         unique,
@@ -280,7 +247,6 @@ def test_constraint_report_foreign_key_and_rules(spark):
          (4, 250.0, "z"), (4, 7.0, "a")],
         "id LONG, value DOUBLE, dim_key STRING",
     )
-    dim = spark.createDataFrame([("a",), ("b",)], "dim_key STRING")
     rep = {
         r.constraint: r
         for r in constraint_report(
@@ -290,7 +256,6 @@ def test_constraint_report_foreign_key_and_rules(spark):
                 in_range("value", 0, 100),
                 unique("id"),
                 expression("positive_id", "id > 0"),
-                foreign_key("dim_key", dim, "dim_key"),
             ],
         ).collect()
     }
@@ -298,28 +263,17 @@ def test_constraint_report_foreign_key_and_rules(spark):
     assert rep["in_range_value"].n_violations == 2          # -5 and 250
     assert rep["unique_id"].n_violations == 1               # id=4 twice
     assert rep["positive_id"].n_violations == 0 and rep["positive_id"].passed
-    assert rep["fk_dim_key"].n_violations == 1              # 'z' orphan
     assert all(r.n_rows == 5 for r in rep.values())
-    assert not rep["fk_dim_key"].passed
 
 
 def test_constraint_report_fk_only_and_empty_suites(spark):
-    """A suite with only foreign_key rules (or none at all) must not
-    emit a malformed stack(0,) select — fk-only reports come back with
-    the same schema, an empty suite yields an empty frame."""
-    from iot_etl_spark.operators.quality import constraint_report, foreign_key
+    """An empty suite must not emit a malformed stack(0,) select: it
+    yields an empty frame with the report's schema."""
+    from iot_etl_spark.operators.quality import constraint_report
 
     df = spark.createDataFrame(
         [(1, "a"), (2, "z")], "id LONG, dim_key STRING"
     )
-    dim = spark.createDataFrame([("a",), ("b",)], "dim_key STRING")
-
-    fk_only = constraint_report(df, [foreign_key("dim_key", dim, "dim_key")])
-    rows = fk_only.collect()
-    assert len(rows) == 1
-    assert rows[0].constraint == "fk_dim_key"
-    assert rows[0].n_rows == 2 and rows[0].n_violations == 1
-    assert not rows[0].passed
 
     empty = constraint_report(df, [])
     assert empty.columns == ["constraint", "kind", "n_rows", "n_violations", "passed"]

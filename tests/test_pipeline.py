@@ -4,48 +4,85 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from iot_etl_spark.pipeline.batch import run_batch_pipeline
 from tests.conftest import SF_DIR
 
 
-def test_run_batch_pipeline_end_to_end(spark):
-    tmp = tempfile.mkdtemp(prefix="iot_etl_batch_")
-    try:
-        audit = run_batch_pipeline(spark, SF_DIR, tmp)
-        assert audit["total"] == 1000  # sf0.001 events
-        assert 0 < audit["valid"] <= audit["total"]
+def _planted_sf_dir(tmp: str) -> str:
+    """sf0.001's customer and nation beside an events file of twice
+    sf0.001's events (ids and times shifted for the copy) with planted
+    NULL and negative values and one reading far above its device's
+    others (|z| > 3)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-        fact = spark.read.parquet(os.path.join(tmp, "fact_events_enriched"))
-        assert fact.count() == audit["valid"]
-        # date partitioning materialized (hypertable-chunk analog)
-        assert "event_date" in fact.columns
-        assert any(
-            p.startswith("event_date=")
-            for p in os.listdir(os.path.join(tmp, "fact_events_enriched"))
-        )
-        # fact rows all valid + stamped
-        assert fact.filter(~fact.is_valid_record).count() == 0
-        assert "etl_loaded_at" in fact.columns
+    os.makedirs(tmp)
+    for t in ("customer", "nation"):
+        shutil.copy(os.path.join(SF_DIR, f"{t}.parquet"), tmp)
+    ev = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
+    copy = ev.set_column(0, "event_id", pc.add(ev.column("event_id"), 10_000))
+    copy = copy.set_column(
+        1, "ts", pc.add(copy.column("ts"), pa.scalar(86_400_000_000, pa.duration("us")))
+    )
+    ev = pa.concat_tables([ev, copy])
+    value = ev.column("value").to_numpy(zero_copy_only=False).copy()
+    i = np.arange(len(value))
+    null, neg = i % 50 == 0, i % 37 == 1
+    value[neg] *= -1.0
+    value[np.flatnonzero((ev.column("user_id").to_numpy() == 14) & ~null & ~neg)[0]] = 1e6
+    ev = ev.set_column(4, "value", pa.array(value, mask=null))
+    pq.write_table(ev, os.path.join(tmp, "events.parquet"))
+    return tmp
 
-        dim = spark.read.parquet(os.path.join(tmp, "dim_customer"))
-        assert dim.count() > 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
+def test_run_batch_pipeline_end_to_end(spark, tmp_path):
+    """The observed audit counts equal an independent recount over
+    transform_all's output (invalid rows included); the fact table
+    holds exactly the valid rows, date-partitioned and stamped; test
+    mode audits its 1000-row limit."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
 
-def test_write_csv_roundtrip(spark, tmp_path):
-    """S16 CSV sink: distributed write, lossless round-trip."""
-    from iot_etl_spark.pipeline.batch import write_csv
-    from iot_etl_spark.sources.tables import load_table
+    from iot_etl_spark.pipeline.batch import transform_all
+    from iot_etl_spark.sources.tables import load_events, load_table
 
-    nation = load_table(spark, SF_DIR, "nation")
-    out = str(tmp_path / "nation_csv")
-    write_csv(nation, out)
-    back = spark.read.option("header", "true").option("inferSchema", "true").csv(out)
-    assert back.count() == nation.count()
-    assert set(back.columns) == set(nation.columns)
+    sf = _planted_sf_dir(str(tmp_path / "sf"))
+    tx = transform_all(
+        load_events(spark, sf), load_table(spark, sf, "customer"), load_table(spark, sf, "nation")
+    )
+    want = {
+        "total": tx.count(),
+        "valid": tx.filter(F.col("is_valid_record")).count(),
+        "anomalies": tx.filter(F.col("is_anomaly_combined")).count(),
+    }
+    value = pq.read_table(os.path.join(sf, "events.parquet")).column("value").to_pylist()
+    assert want["total"] == len(value) == 2000
+    assert want["valid"] == sum(v is not None and v >= 0 for v in value) < 2000
+    assert want["anomalies"] >= 1
+
+    out = str(tmp_path / "out")
+    assert run_batch_pipeline(spark, sf, out) == want
+    fact = spark.read.parquet(os.path.join(out, "fact_events_enriched"))
+    assert fact.count() == want["valid"]
+    # date partitioning materialized (hypertable-chunk analog)
+    assert "event_date" in fact.columns
+    assert any(
+        p.startswith("event_date=")
+        for p in os.listdir(os.path.join(out, "fact_events_enriched"))
+    )
+    # fact rows all valid + stamped
+    assert fact.filter(~fact.is_valid_record).count() == 0
+    assert "etl_loaded_at" in fact.columns
+    assert spark.read.parquet(os.path.join(out, "dim_customer")).count() > 0
+
+    out = str(tmp_path / "out_test_mode")
+    audit = run_batch_pipeline(spark, sf, out, test_mode=True)
+    assert audit["total"] == 1000
+    fact = spark.read.parquet(os.path.join(out, "fact_events_enriched"))
+    assert fact.count() == audit["valid"] <= 1000
 
 
 def test_console_sink_starts_and_stops(spark):
@@ -102,33 +139,11 @@ def test_cli_list_and_unknown_query(capsys):
     assert main(["query", "no_such_query"]) == 2
 
 
-def test_write_with_audit_collects_metrics_in_one_action(spark, tmp_path):
-    """Observation-based audit: the write itself yields row counts and
-    custom metrics — no second scan (the reference re-executed the
-    lineage per count() audit; SURVEY §4 anti-pattern)."""
-    from pyspark.sql import functions as F
-
-    from iot_etl_spark.pipeline.batch import write_with_audit
-    from iot_etl_spark.sources.tables import load_events
-    from tests.conftest import SF_DIR
-
-    ev = load_events(spark, SF_DIR).select("event_id", "user_id", "value")
-    got = write_with_audit(
-        ev,
-        f"{tmp_path}/out",
-        metrics={"null_values": F.sum(F.col("value").isNull().cast("long"))},
-        mode="overwrite",
-    )
-    written = spark.read.parquet(f"{tmp_path}/out")
-    assert got["rows_written"] == written.count()
-    assert got["null_values"] == written.filter(F.col("value").isNull()).count()
-
-
 def test_stream_to_continuous_aggregate_end_to_end(spark, tmp_path):
     """The reference's PRIMARY loop composed end to end from this
     engine's pieces: stream ingest -> fact table -> continuous-
     aggregate materialization -> late backfill -> dirty-window refresh
-    -> reads routed to the (now fresh) materialized aggregate.
+    -> the refreshed materialized aggregate equals a direct one.
     (Reference: Kafka -> spark_streaming_consumer.py -> hypertable ->
     create_dwh_schema.sql:142-233 continuous aggregate + policy.)"""
     import pyspark.sql.functions as F
@@ -136,8 +151,8 @@ def test_stream_to_continuous_aggregate_end_to_end(spark, tmp_path):
     from iot_etl_spark.warehouse.lifecycle import (
         hourly_agg,
         materialize_agg,
+        read_agg,
         refresh_agg,
-        route_to_agg,
     )
     from tests.conftest import SF_DIR
 
@@ -161,14 +176,15 @@ def test_stream_to_continuous_aggregate_end_to_end(spark, tmp_path):
     facts = spark.read.parquet(facts_dir)
     assert facts.count() > 0
 
+    def mv_rows():
+        return {tuple(r) for r in read_agg(spark, mv).drop("agg_date").collect()}
+
     # 2. materialize the hourly continuous aggregate from the facts
     materialize_agg(facts, mv, bucket="hour")
-    routed = route_to_agg(spark, facts, mv, bucket="hour")
-    plan = routed._jdf.queryExecution().executedPlan().toString()
-    assert "HashAggregate" not in plan, "fresh MV must serve the read"
+    assert mv_rows() == {tuple(r) for r in hourly_agg(facts).collect()}
 
-    # 3. late backfill lands (one day re-delivered 2 days later);
-    #    router must refuse the stale MV until the refresh runs.
+    # 3. late backfill lands (one day re-delivered 2 days later); the
+    #    MV lacks its buckets until the refresh runs.
     #    The backfill gets its OWN directory: a streaming file sink
     #    owns its path via the _spark_metadata log, so batch-appended
     #    files there are silently invisible to readers — the union
@@ -180,51 +196,11 @@ def test_stream_to_continuous_aggregate_end_to_end(spark, tmp_path):
     )
     late.write.mode("overwrite").parquet(backfill_dir)
     all_facts = facts.unionByName(spark.read.parquet(backfill_dir))
-    stale = route_to_agg(spark, all_facts, mv, bucket="hour")
-    assert "HashAggregate" in stale._jdf.queryExecution().executedPlan().toString()
+    want = {tuple(r) for r in hourly_agg(all_facts).collect()}
+    assert mv_rows() != want
 
-    # 4. dirty-window refresh, then the routed read serves the MV and
-    #    matches a direct aggregate bit-for-bit
+    # 4. dirty-window refresh, then the MV matches a direct aggregate
+    #    bit-for-bit
     refresh_agg(all_facts, mv, since=str(last_day), bucket="hour")
-    fresh = route_to_agg(spark, all_facts, mv, bucket="hour")
-    assert "HashAggregate" not in fresh._jdf.queryExecution().executedPlan().toString()
-    direct = hourly_agg(all_facts)
-    got = {tuple(r) for r in fresh.collect()}
-    want = {tuple(r) for r in direct.collect()}
-    assert got == want
+    assert mv_rows() == want
 
-
-def test_write_orc_roundtrip_pushdown_and_partitioning(spark, tmp_path):
-    """ORC round-trips exactly (values AND schema), partition columns
-    prune directories, and filters reach the ORC scan as
-    PushedFilters — the same scan discipline the parquet paths pin."""
-    from pyspark.sql import functions as F
-
-    from iot_etl_spark.pipeline.batch import read_orc, write_orc
-    from iot_etl_spark.sources.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").withColumn(
-        "event_date", F.to_date("ts")
-    )
-    out = str(tmp_path / "events_orc")
-    write_orc(ev, out, partition_by=("event_type",),
-              bloom_filter_cols=("user_id",))
-    back = read_orc(spark, out)
-    assert back.count() == ev.count()
-    # exact value round-trip on a deterministic digest of every column
-    digest = lambda df: df.select(  # noqa: E731
-        F.md5(F.concat_ws("|", F.col("event_id"), F.col("user_id"),
-                          F.unix_micros("ts"), F.col("event_type"),
-                          F.format_number("value", 6)))
-        .alias("h")
-    ).agg(F.sum(F.conv(F.substring("h", 1, 8), 16, 10).cast("long"))).first()[0]
-    assert digest(back) == digest(ev)
-    # predicate pushdown reaches the ORC scan
-    plan = (
-        back.filter((F.col("user_id") == 3) & (F.col("event_type") == "click"))
-        ._jdf.queryExecution().toString()
-    )
-    assert "PushedFilters: [" in plan and "user_id" in plan
-    # partition pruning: only the matching directory is listed
-    import os
-    assert any(d.startswith("event_type=") for d in os.listdir(out))

@@ -1,37 +1,6 @@
-"""Batch source tests: JSONL ingest with dead-letter split."""
+"""Batch source tests: view registration over the parquet loaders."""
 
 from __future__ import annotations
-def test_load_jsonl_dlq_split(spark, tmp_path):
-    """Batch JSONL ingest: good lines parse to typed columns, corrupt
-    lines land verbatim in the DLQ, blank lines vanish, and the two
-    sides partition the non-blank input exactly."""
-    from pyspark.sql import types as T
-
-    from iot_etl_spark.sources.tables import load_jsonl
-
-    p = tmp_path / "in.jsonl"
-    p.write_text(
-        '{"id": 1, "name": "a", "v": 1.5}\n'
-        "\n"
-        '{"id": 2, "name": "b"}\n'
-        "this is not json\n"
-        '{"id": 3, "name": "c", "v": -2.0}\n'
-        '{"broken": \n'
-    )
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    good, dlq = load_jsonl(spark, str(p), schema)
-    rows = {r.id: r for r in good.collect()}
-    assert set(rows) == {1, 2, 3}
-    assert rows[1].v == 1.5 and rows[3].v == -2.0
-    assert rows[2].v is None  # missing field -> NULL, not DLQ
-    bad = sorted(r.raw_line for r in dlq.collect())
-    assert bad == ["this is not json", '{"broken": ']
 
 
 def test_register_views_memoized_and_sf_switch(spark):

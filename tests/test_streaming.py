@@ -15,7 +15,6 @@ from iot_etl_spark.streaming.pipeline import (
     apply_stream_transforms,
     read_stream_source,
     run_stream_to_memory,
-    start_parquet_upsert_sink,
     windowed_aggregate,
 )
 from tests.conftest import SF_DIR
@@ -74,27 +73,6 @@ def test_watermark_drops_late_rows_in_append_mode(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_upsert_sink_idempotent_on_replay(spark):
-    """Replaying the same micro-batch must not duplicate window rows
-    (T8: dynamic partition overwrite in foreachBatch)."""
-    tmp = tempfile.mkdtemp(prefix="iot_etl_upsert_")
-    try:
-        out_path = os.path.join(tmp, "out")
-        src = read_stream_source(spark, "parquet", path=f"{SF_DIR}/events.parquet")
-        agg = windowed_aggregate(src, window="1 hour", watermark=None)
-        for i in range(2):  # fresh checkpoint each run = full replay
-            ckpt = os.path.join(tmp, f"ckpt{i}")
-            q = start_parquet_upsert_sink(agg, out_path, ckpt, trigger_seconds=1)
-            q.processAllAvailable()
-            q.stop()
-        result = spark.read.parquet(out_path)
-        total = result.count()
-        distinct = result.select("window_start", "event_type").distinct().count()
-        assert total == distinct, "replay duplicated window rows"
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def test_stream_transforms_latency_and_validity(spark):
     src = read_stream_source(spark, "parquet", path=f"{SF_DIR}/events.parquet")
     tx = apply_stream_transforms(src)
@@ -105,54 +83,6 @@ def test_stream_transforms_latency_and_validity(spark):
     assert rows
     # 2024 event times vs wall clock -> positive latency
     assert all(r.latency_seconds > 0 for r in rows)
-
-
-def test_upsert_sink_incremental_update_keeps_sibling_groups(spark):
-    """A micro-batch that updates ONE group of a window must not wipe
-    the window's other groups from the sink (update-mode emits only
-    changed groups; overwrite granularity must equal the group key)."""
-    tmp = tempfile.mkdtemp(prefix="iot_etl_incr_")
-    try:
-        base = datetime.datetime(2024, 1, 1, 10, 0, 0)
-        schema = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
-        src_dir = os.path.join(tmp, "src")
-        os.makedirs(src_dir)
-
-        def write_batch(rows, name):
-            spark.createDataFrame(rows, schema).withColumn(
-                "ts", F.expr("CAST(unix_micros(ts) * 1000 AS LONG)")
-            ).write.parquet(os.path.join(src_dir, name))
-
-        # batch1 populates two groups of the same 1-minute window
-        write_batch(
-            [
-                (1, base + datetime.timedelta(seconds=10), 1, "view", 1.0, None),
-                (2, base + datetime.timedelta(seconds=20), 1, "click", 2.0, None),
-            ],
-            "b1",
-        )
-        stream = read_stream_source(spark, "parquet", path=src_dir + "/*")
-        agg = windowed_aggregate(stream, window="1 minute", watermark=None)
-        out_path = os.path.join(tmp, "out")
-        q = start_parquet_upsert_sink(agg, out_path, os.path.join(tmp, "ckpt"), trigger_seconds=1)
-        try:
-            q.processAllAvailable()
-            # batch2 updates ONLY the 'click' group of that window
-            write_batch([(3, base + datetime.timedelta(seconds=30), 1, "click", 4.0, None)], "b2")
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        rows = {
-            r.event_type: r
-            for r in spark.read.parquet(out_path)
-            .select("event_type", "reading_count", "max_value")
-            .collect()
-        }
-        assert set(rows) == {"view", "click"}, "sibling group was wiped by incremental update"
-        assert rows["view"].reading_count == 1
-        assert rows["click"].reading_count == 2 and rows["click"].max_value == 4.0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_parse_sensor_json_malformed_rows_yield_nulls(spark):
@@ -181,37 +111,6 @@ def test_parse_sensor_json_malformed_rows_yield_nulls(spark):
     # parseable siblings survive
     assert out[3].time is None and out[3].value is None
     assert out[3].device_id == "TEMP-002" and out[3].is_anomaly is True
-
-
-def test_fanout_two_sinks_and_graceful_stop(spark):
-    """T7: one source lineage -> raw append sink + windowed agg upsert
-    sink, both produce output, stop_all_queries stops them cleanly
-    (spark_streaming_consumer.py:296-360)."""
-    from iot_etl_spark.streaming.pipeline import run_fanout, stop_all_queries
-
-    tmp = tempfile.mkdtemp(prefix="iot_etl_fanout_")
-    try:
-        src = read_stream_source(spark, "parquet", path=f"{SF_DIR}/events.parquet")
-        raw_q, agg_q = run_fanout(
-            spark, src,
-            raw_path=os.path.join(tmp, "raw"),
-            agg_path=os.path.join(tmp, "agg"),
-            checkpoint_root=os.path.join(tmp, "ckpt"),
-            window="1 hour",
-            trigger_seconds=1,
-        )
-        raw_q.processAllAvailable()
-        agg_q.processAllAvailable()
-        n_stopped = stop_all_queries(spark)
-        assert n_stopped >= 2
-        assert not raw_q.isActive and not agg_q.isActive
-        raw = spark.read.parquet(os.path.join(tmp, "raw"))
-        agg = spark.read.parquet(os.path.join(tmp, "agg"))
-        assert raw.count() > 0 and agg.count() > 0
-        # raw sink carries only valid records (spark_load.py:100 semantics)
-        assert raw.filter(~F.col("is_valid_record")).count() == 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_session_window_runs_under_streaming(spark):
@@ -249,6 +148,9 @@ def test_session_window_runs_under_streaming(spark):
 def test_checkpoint_restart_resumes_incrementally(spark):
     """T5: a new query over the SAME checkpoint resumes from committed
     offsets — post-restart output reflects all data exactly once."""
+    from iot_etl_spark.streaming.pipeline import read_upserted, start_txlog_upsert_sink
+    from iot_etl_spark.warehouse.txlog import TxTable
+
     tmp = tempfile.mkdtemp(prefix="iot_etl_ckpt_")
     try:
         base = datetime.datetime(2024, 1, 2, 8, 0, 0)
@@ -261,12 +163,12 @@ def test_checkpoint_restart_resumes_incrementally(spark):
                 "ts", F.expr("CAST(unix_micros(ts) * 1000 AS LONG)")
             ).write.parquet(os.path.join(src_dir, name))
 
-        out_path, ckpt = os.path.join(tmp, "out"), os.path.join(tmp, "ckpt")
+        table, ckpt = TxTable(os.path.join(tmp, "serve")), os.path.join(tmp, "ckpt")
 
         def start():
             stream = read_stream_source(spark, "parquet", path=src_dir + "/*")
             agg = windowed_aggregate(stream, window="1 minute", watermark=None)
-            return start_parquet_upsert_sink(agg, out_path, ckpt, trigger_seconds=1)
+            return start_txlog_upsert_sink(agg, table, ckpt, trigger_seconds=1)
 
         write_batch([(1, base, 7, "view", 2.0, None)], "b1")
         q = start()
@@ -278,7 +180,9 @@ def test_checkpoint_restart_resumes_incrementally(spark):
         q2.processAllAvailable()
         q2.stop()
 
-        rows = spark.read.parquet(out_path).collect()
+        rows = read_upserted(
+            spark, table, ("window_start", "window_end", "event_type")
+        ).collect()
         assert len(rows) == 1  # one (window, event_type) group
         assert rows[0].reading_count == 2 and rows[0].max_value == 4.0
     finally:
@@ -502,8 +406,14 @@ def test_dedup_stream_collapses_within_hour_and_across_batches(spark):
 def test_dlq_split_quarantines_malformed_rows(spark):
     """DLQ pattern: decodable rows land in the valid sink without the
     plumbing columns; undecodable rows (broken JSON, bad time) land in
-    the dead-letter sink with their ORIGINAL bytes intact."""
-    from iot_etl_spark.streaming.pipeline import parse_with_dlq, run_dlq_split
+    the dead-letter sink with their ORIGINAL bytes intact. Both queries
+    stop through stop_all_queries (T7's graceful stop,
+    spark_streaming_consumer.py:296-360)."""
+    from iot_etl_spark.streaming.pipeline import (
+        parse_with_dlq,
+        run_dlq_split,
+        stop_all_queries,
+    )
 
     tmp = tempfile.mkdtemp(prefix="iot_etl_dlq_")
     try:
@@ -527,6 +437,8 @@ def test_dlq_split_quarantines_malformed_rows(spark):
         try:
             vq.processAllAvailable()
             dq.processAllAvailable()
+            assert stop_all_queries(spark) >= 2
+            assert not vq.isActive and not dq.isActive
         finally:
             vq.stop()
             dq.stop()
@@ -633,8 +545,7 @@ def test_stateful_query_runs_on_rocksdb_state_store(spark):
 
 
 def test_txlog_upsert_sink_latest_per_key_resolution_and_compaction(spark):
-    """start_txlog_upsert_sink (the 100 TB replacement for the
-    per-group-directory parquet upsert sink): update-mode micro-batches
+    """start_txlog_upsert_sink: update-mode micro-batches
     APPEND changed groups with their epoch seq; read_upserted resolves
     latest-per-key — an updated group supersedes its earlier row, a
     sibling group untouched by the update survives. OPTIMIZE compacts
@@ -1087,68 +998,6 @@ def test_dedup_within_watermark_ttl_semantics(spark):
     ])
     got = sorted(r.event_id for r in rows if r.user_id == 7)
     assert got == [1, 2], f"expected TTL re-emission, got {got}"
-
-
-def test_txlog_fanout_sink_heals_partial_multi_sink_failure(spark):
-    """Exactly-once fan-out into TWO transactional tables: the
-    multi-sink failure window (crash after table A committed epoch 0
-    but before table B) is simulated by pre-applying the batch to A
-    only; the streamed fan-out replay then skips A (ledger hit) and
-    applies B, converging BOTH tables to exactly one copy. A second
-    full replay through a fresh checkpoint changes nothing."""
-    from iot_etl_spark.streaming.pipeline import start_txlog_fanout_sink
-    from iot_etl_spark.warehouse.txlog import TxTable
-
-    tmp = tempfile.mkdtemp(prefix="iot_etl_fan_")
-    try:
-        base = datetime.datetime(2024, 1, 1, 10, 0, 0)
-        schema = (
-            "event_id LONG, ts TIMESTAMP, user_id LONG, "
-            "event_type STRING, value DOUBLE, props STRING"
-        )
-        src_dir = os.path.join(tmp, "src")
-        os.makedirs(src_dir)
-        rows = [
-            (1, base + datetime.timedelta(seconds=10), 1, "view", 1.0, None),
-            (2, base + datetime.timedelta(seconds=20), 2, "click", 2.0, None),
-        ]
-        spark.createDataFrame(rows, schema).withColumn(
-            "ts", F.expr("CAST(unix_micros(ts) * 1000 AS LONG)")
-        ).write.parquet(os.path.join(src_dir, "b0"))
-
-        ta = TxTable(os.path.join(tmp, "serve_a"))
-        tb = TxTable(os.path.join(tmp, "serve_b"))
-
-        # simulate the partial failure: epoch 0 already landed in A
-        batch0 = spark.read.parquet(src_dir + "/*").withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        ).select("event_id", "event_type", "value")
-        assert ta.append_batch(batch0, 0, ledger_id="fan") is not None
-
-        for i in range(2):  # run 2 = full replay via fresh checkpoint
-            stream = read_stream_source(
-                spark, "parquet", path=src_dir + "/*"
-            ).select("event_id", "event_type", "value")
-            q = start_txlog_fanout_sink(
-                stream,
-                [ta, tb],
-                os.path.join(tmp, f"ck{i}"),
-                trigger_seconds=1,
-                ledger_id="fan",
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-
-        for t, name in ((ta, "A"), (tb, "B")):
-            got = sorted(
-                (r.event_id, r.event_type, r.value)
-                for r in t.read(spark).collect()
-            )
-            assert got == [(1, "view", 1.0), (2, "click", 2.0)], name
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_stateful_funnel_state_survives_across_batches(spark):

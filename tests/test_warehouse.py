@@ -124,34 +124,6 @@ def test_daily_agg_business_hours_split(spark):
     assert row["avg_value_business_hours"] != row["avg_value_non_business_hours"]
 
 
-def test_compact_partitions_preserves_data(spark):
-    """Compaction rewrites partitions into bounded file counts without
-    changing a single row (the small-file follow-up to the streaming
-    upsert sink's per-group directories)."""
-    import os as _os
-    from iot_etl_spark.warehouse import compact_partitions
-
-    tmp = tempfile.mkdtemp(prefix="iot_etl_cmp_")
-    try:
-        events = load_events(spark, SF_DIR)
-        path = _os.path.join(tmp, "hourly")
-        # fragment: write the agg 8-way so each partition has many files
-        from iot_etl_spark.warehouse import hourly_agg
-        agg = hourly_agg(events).withColumn("agg_date", F.to_date("bucket"))
-        agg.repartition(8).write.partitionBy("agg_date").parquet(path)
-        before = _canon(spark.read.parquet(path))
-        n_before = sum(
-            1 for _r, _d, fs in _os.walk(path) for f in fs if f.endswith(".parquet")
-        )
-        n_after = compact_partitions(spark, path)
-        assert n_after < n_before
-        parts = [p for p in _os.listdir(path) if p.startswith("agg_date=")]
-        assert n_after == len(parts)  # one file per partition
-        assert _canon(spark.read.parquet(path)) == before
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def test_bucketed_join_has_zero_shuffle_exchanges(spark):
     """Two tables bucketed by the join key with the same bucket count
     sort-merge-join with NO Exchange on either side (the write-time
@@ -200,163 +172,6 @@ def test_bucketed_join_has_zero_shuffle_exchanges(spark):
         import shutil
 
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_schema_evolution_widening_append(spark):
-    """A batch with a new column appends without rewriting old files;
-    the merged read NULLs the column for pre-widening rows, and
-    projection/pushdown still prune at the scan."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from iot_etl_spark.warehouse.lifecycle import append_evolved, read_evolved
-
-    tmp = tempfile.mkdtemp(prefix="iot_etl_evolve_")
-    try:
-        v1 = spark.createDataFrame(
-            [(1, 21.5), (2, 22.0)], "event_id LONG, value DOUBLE"
-        )
-        v2 = spark.createDataFrame(
-            [(3, 23.0, 85)], "event_id LONG, value DOUBLE, quality_score INT"
-        )
-        append_evolved(v1, f"{tmp}/t")
-        append_evolved(v2, f"{tmp}/t")
-        out = read_evolved(spark, f"{tmp}/t")
-        assert set(out.columns) == {"event_id", "value", "quality_score"}
-        rows = {r.event_id: r for r in out.collect()}
-        assert rows[1].quality_score is None and rows[3].quality_score == 85
-        # old column predicates still push down on the merged view
-        plan = out.filter(F.col("event_id") == 3)._jdf.queryExecution().toString()
-        assert "PushedFilters: [IsNotNull(event_id), EqualTo(event_id,3)" in plan
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_snapshot_diff_classifies_rows(spark):
-    """snapshot_diff: added/removed/changed/unchanged per key, NULL
-    value columns compared safely through the struct hash."""
-    from iot_etl_spark.warehouse.lifecycle import snapshot_diff
-
-    old = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", None), (3, "c", 30.0), (4, "d", 40.0)],
-        "id LONG, name STRING, score DOUBLE",
-    )
-    new = spark.createDataFrame(
-        [(1, "a", 10.0),        # unchanged
-         (2, "b", 20.0),        # changed (NULL -> value)
-         (4, "D", 40.0),        # changed (name case)
-         (5, "e", 50.0)],       # added; id 3 removed
-        "id LONG, name STRING, score DOUBLE",
-    )
-    out = {r.id: r.diff_status for r in snapshot_diff(old, new, ("id",)).collect()}
-    assert out == {1: "unchanged", 2: "changed", 3: "removed", 4: "changed", 5: "added"}
-
-
-def test_route_to_agg_serves_mv_when_fresh(spark, tmp_path):
-    """Materialized-view routing: a fresh MV answers the hourly query
-    (plan scans the MV path, values equal direct compute); a stale MV
-    (newer raw events than its last bucket) falls back to raw."""
-    from iot_etl_spark.sources.tables import load_events
-    from iot_etl_spark.warehouse.lifecycle import (
-        hourly_agg,
-        materialize_agg,
-        route_to_agg,
-    )
-
-    ev = load_events(spark, "/root/testdata/sf0.001")
-    mv_path = str(tmp_path / "hourly_mv")
-    materialize_agg(ev, mv_path, bucket="hour")
-
-    routed = route_to_agg(spark, ev, mv_path, bucket="hour")
-    plan = routed._jdf.queryExecution().executedPlan().toString()
-    # a routed query is a pure scan+project of the MV — no aggregation
-    assert "HashAggregate" not in plan, "fresh MV was not routed to"
-    direct = hourly_agg(ev)
-    assert routed.exceptAll(direct).count() == 0
-    assert direct.exceptAll(routed).count() == 0
-
-    # stale: raw now extends past the MV's last bucket -> fall back
-    import pyspark.sql.functions as F
-
-    later = ev.withColumn("ts", F.col("ts") + F.expr("INTERVAL 400 DAYS"))
-    fresh_plus = ev.unionByName(later)
-    fallback = route_to_agg(spark, fresh_plus, mv_path, bucket="hour")
-    plan2 = fallback._jdf.queryExecution().executedPlan().toString()
-    assert "HashAggregate" in plan2, "stale MV must not serve"
-
-    # no MV at all -> raw compute
-    none = route_to_agg(spark, ev, str(tmp_path / "missing"), bucket="hour")
-    assert "FileScan" in none._jdf.queryExecution().executedPlan().toString()
-
-
-def test_delete_keys_rewrites_only_containing_partitions(spark, tmp_path):
-    """GDPR erasure: keyed rows vanish, clean partitions are never
-    touched (footer-stat pruning proven by file mtimes), accounting is
-    exact, and absent keys are a no-op."""
-    import os
-    import pyspark.sql.functions as F
-    from iot_etl_spark.warehouse.lifecycle import delete_keys
-
-    path = str(tmp_path / "facts")
-    # device 1 only in date A; device 99 only in date C; dates sorted
-    # by device so row-group stats are tight
-    rows = [
-        (1, "2024-01-01", 10.0), (2, "2024-01-01", 11.0),
-        (2, "2024-01-02", 12.0), (3, "2024-01-02", 13.0),
-        (99, "2024-01-03", 14.0), (3, "2024-01-03", 15.0),
-    ]
-    df = spark.createDataFrame(rows, "device_id long, agg_date string, value double")
-    (df.repartition(1).sortWithinPartitions("agg_date", "device_id")
-       .write.partitionBy("agg_date").mode("overwrite").parquet(path))
-
-    def mtimes():
-        out = {}
-        for d in os.listdir(path):
-            if d.startswith("agg_date="):
-                full = os.path.join(path, d)
-                out[d] = max(
-                    os.path.getmtime(os.path.join(full, f))
-                    for f in os.listdir(full) if f.endswith(".parquet")
-                )
-        return out
-
-    before = mtimes()
-    res = delete_keys(spark, path, "device_id", [1, 99])
-    assert res["rows_deleted"] == 2
-    assert sorted(res["partitions_rewritten"]) == [
-        "agg_date=2024-01-01", "agg_date=2024-01-03",
-    ]
-    assert res["partitions_scanned"] == 3
-    # untouched partition keeps its exact files
-    after = mtimes()
-    assert after["agg_date=2024-01-02"] == before["agg_date=2024-01-02"]
-    # data correctness: keys gone, everything else intact
-    back = spark.read.parquet(path)
-    assert back.filter(F.col("device_id").isin(1, 99)).count() == 0
-    assert back.count() == 4
-    # absent key -> zero rewrites
-    res2 = delete_keys(spark, path, "device_id", [12345])
-    assert res2["partitions_rewritten"] == [] and res2["rows_deleted"] == 0
-
-
-def test_delete_keys_preserves_null_keyed_rows(spark, tmp_path):
-    """~isin() is NULL for NULL keys and a NULL predicate drops the
-    row — the erase filter must keep unkeyed rows explicitly."""
-    import pyspark.sql.functions as F
-    from iot_etl_spark.warehouse.lifecycle import delete_keys
-
-    path = str(tmp_path / "facts")
-    rows = [(1, "2024-01-01", 1.0), (None, "2024-01-01", 2.0),
-            (3, "2024-01-01", 3.0)]
-    df = spark.createDataFrame(rows, "device_id long, agg_date string, value double")
-    df.write.partitionBy("agg_date").mode("overwrite").parquet(path)
-    res = delete_keys(spark, path, "device_id", [1])
-    assert res["rows_deleted"] == 1
-    back = spark.read.parquet(path)
-    assert back.count() == 2
-    assert back.filter(F.col("device_id").isNull()).count() == 1
 
 
 # ------------------------------------------------- transaction log
@@ -617,80 +432,6 @@ def test_bucketed_layout_cross_session_reuse_no_rewrite(spark):
     assert second == first
     after = snapshot()
     assert after == before, "second session rewrote or evicted live bucket files"
-
-
-def test_compact_leaf_partitions_on_upsert_sink_layout(spark, tmp_path):
-    """VERDICT r5 item 6: the streaming upsert sink's nested
-    (window_key=..., event_type=...) layout accumulates tiny files;
-    compact_leaf_partitions rewrites every leaf to one file with the
-    stage/swap crash-safety, and reads are identical after."""
-    import glob
-    import os
-
-    from iot_etl_spark.warehouse.lifecycle import compact_leaf_partitions
-
-    path = str(tmp_path / "serve")
-    rows = [
-        ("20240101_100000", et, i, float(i))
-        for et in ("view", "click")
-        for i in range(4)
-    ] + [("20240101_110000", "view", 9, 9.0)]
-    df = spark.createDataFrame(
-        rows, "window_key STRING, event_type STRING, n LONG, v DOUBLE"
-    )
-    # two appends -> >=2 files per touched leaf (the sink's many-
-    # micro-batch shape)
-    for _ in range(2):
-        df.write.mode("append").partitionBy("window_key", "event_type").parquet(path)
-
-    def snap():
-        out = spark.read.parquet(path)
-        return sorted(tuple(r) for r in out.collect())
-
-    before = snap()
-    leaves = {
-        os.path.dirname(f)
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    }
-    n_before = len(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-    assert n_before > len(leaves), "test premise: multiple files per leaf"
-    n_after = compact_leaf_partitions(spark, path)
-    assert n_after == len(leaves), "each leaf must compact to one file"
-    assert snap() == before, "compaction changed the data"
-    # idempotent: already-compacted leaves are skipped
-    assert compact_leaf_partitions(spark, path) == n_after
-
-
-def test_compact_leaf_partitions_ignores_orphaned_staging(spark, tmp_path):
-    """Crash-safety of the leaf compactor: a dot-prefixed staging dir
-    orphaned by a mid-job crash is invisible to partition discovery
-    (reads unchanged) and is not treated as a leaf by a later
-    compaction run."""
-    import os
-
-    from iot_etl_spark.warehouse.lifecycle import compact_leaf_partitions
-
-    path = str(tmp_path / "serve")
-    df = spark.createDataFrame(
-        [("20240101_100000", "view", i, float(i)) for i in range(4)],
-        "window_key STRING, event_type STRING, n LONG, v DOUBLE",
-    )
-    for _ in range(2):
-        df.write.mode("append").partitionBy("window_key", "event_type").parquet(path)
-
-    def snap():
-        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
-
-    before = snap()
-    # simulate a crashed compaction: orphaned staging next to the leaf
-    orphan = os.path.join(
-        path, "window_key=20240101_100000", "._compact_deadbeef"
-    )
-    df.limit(1).select("n", "v").write.parquet(orphan)
-    assert snap() == before, "orphaned ._compact_ dir leaked into reads"
-    compact_leaf_partitions(spark, path)
-    assert snap() == before
-    assert os.path.isdir(orphan), "compactor must not treat staging as a leaf"
 
 
 def test_txlog_check_constraints_enforced_on_writes(spark, tmp_path):

@@ -498,26 +498,24 @@ def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     can't rank inside an update-mode aggregate; a dashboard reads the
     ranked view). Deterministic tiebreak on event_type.
 
-    The serving table + checkpoint live under a fingerprint-keyed dir
-    (source mtime/size + this builder's code), so repeated bench/
+    The serving table + checkpoint live under a ``keyed_dir``
+    (plans/stagecache.py: source mtime/size + code), so repeated bench/
     driver runs REUSE the checkpointed result instead of littering
     /tmp with fresh mkdtemp dirs (ADVICE r5) — a re-run over unchanged
     input finds no new files and serves the committed table; stale
-    fingerprints are swept by the shared eviction.
+    keys are swept by the shared eviction. The checkpoint records the
+    source paths the pipeline helpers resolve, so ``_singleton_dir``
+    and ``read_stream_source`` are in the key: a plumbing edit mints a
+    fresh dir instead of resuming a checkpoint whose recorded basePath
+    no longer matches.
 
     Oracle: plain batch hourly counts + ROW_NUMBER — the upsert sink's
     latest-seq-wins contract means the resolved counts equal the batch
     counts exactly, or the hash breaks."""
-    import hashlib
-    import inspect
     import os
 
-    from iot_etl_spark.plans.stagecache import (
-        _CACHE_ROOT,
-        _source_fingerprint,
-        evict_stale_tags,
-        sf_family,
-    )
+    from iot_etl_spark.plans.stagecache import keyed_dir
+    from iot_etl_spark.streaming import pipeline as _pl
     from iot_etl_spark.streaming.pipeline import (
         read_upserted,
         start_txlog_upsert_sink,
@@ -525,45 +523,25 @@ def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from iot_etl_spark.warehouse.txlog import TxTable
 
-    from iot_etl_spark.streaming import pipeline as _pl
-
-    # the checkpoint hard-codes source paths resolved by the pipeline
-    # helpers, so their source is part of the tag too: a plumbing edit
-    # (e.g. the singleton-dir layout) mints a fresh serving dir instead
-    # of resuming a checkpoint whose recorded basePath no longer matches
-    code = inspect.getsource(stream_trending_topk) + inspect.getsource(
-        _pl._singleton_dir
-    ) + inspect.getsource(_pl.read_stream_source)
-    tag = hashlib.md5(
-        f"trend_topk|{_source_fingerprint(sf_dir, ('events',))}|{code}".encode()
-    ).hexdigest()[:12]
-    # dir + eviction family scoped per (name, sf_dir) — the tag
-    # fingerprints sf_dir, so concurrent different-SF runs under a bare
-    # name prefix would rmtree each other's LIVE serving tables
-    # (ADVICE r9; same race class as the round-8 stage-cache fix)
-    fam = sf_family("trend_topk", sf_dir)
-    d = os.path.join(_CACHE_ROOT, f"{fam}_{tag}")
-    os.makedirs(d, exist_ok=True)
-    t = TxTable(os.path.join(d, "serve"))
-
-    src = read_stream_source(spark, "parquet", path=f"{sf_dir.rstrip('/')}/events.parquet")
-    agg = (
-        src.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("window.start").alias("window_start"), "event_type", "n_events")
-    )
-    with stream_shuffle_scope(spark):
-        q = start_txlog_upsert_sink(agg, t, os.path.join(d, "ck"), trigger_seconds=1)
-    q.processAllAvailable()
-    q.stop()
-    t.optimize(spark)  # compaction lifecycle: serving file count stays flat
-    marker = os.path.join(d, "_READY")
-    if not os.path.exists(marker):
-        with open(marker, "w") as fh:
-            fh.write(tag)
-    evict_stale_tags(_CACHE_ROOT, fam, tag)
-    evict_stale_tags(_CACHE_ROOT, "trend_topk", "")  # retire pre-family dirs
+    with keyed_dir(
+        "trend_topk", sf_dir, ("events",),
+        (stream_trending_topk, _pl._singleton_dir, _pl.read_stream_source),
+    ) as (d, _):
+        t = TxTable(os.path.join(d, "serve"))
+        src = read_stream_source(
+            spark, "parquet", path=f"{sf_dir.rstrip('/')}/events.parquet"
+        )
+        agg = (
+            src.withWatermark("ts", "2 hours")
+            .groupBy(F.window("ts", "1 hour"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(F.col("window.start").alias("window_start"), "event_type", "n_events")
+        )
+        with stream_shuffle_scope(spark):
+            q = start_txlog_upsert_sink(agg, t, os.path.join(d, "ck"), trigger_seconds=1)
+        q.processAllAvailable()
+        q.stop()
+        t.optimize(spark)  # compaction lifecycle: serving file count stays flat
 
     from pyspark.sql import Window as W
 
@@ -606,49 +584,33 @@ def stream_txlog_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     top of immutable staged parquet; the replay ledger is the log
     itself (file lists, not data).
 
-    The table + both checkpoints live under a fingerprint-keyed dir
-    (same convention as stream_trending_topk), so repeated bench/
-    driver runs REUSE the committed table instead of littering /tmp
-    with per-invocation mkdtemp dirs: on a re-run both checkpoints are
+    The table + both checkpoints live under a ``keyed_dir`` (as in
+    stream_trending_topk), so repeated bench/driver runs REUSE the
+    committed table instead of littering /tmp with per-invocation
+    mkdtemp dirs: on a re-run both checkpoints are
     already complete, both drains find no new files, and the table
     still holds exactly one copy — idempotence of the whole QUERY, on
     top of the per-batch idempotence it proves."""
-    import hashlib
-    import inspect
     import os
 
-    from iot_etl_spark.plans.stagecache import (
-        _CACHE_ROOT,
-        _source_fingerprint,
-        evict_stale_tags,
-        sf_family,
-    )
+    from iot_etl_spark.plans.stagecache import keyed_dir
     from iot_etl_spark.streaming import pipeline as _pl
     from iot_etl_spark.streaming.pipeline import start_txlog_sink
     from iot_etl_spark.warehouse.txlog import TxTable
 
-    code = inspect.getsource(stream_txlog_ingest) + inspect.getsource(
-        _pl._singleton_dir
-    ) + inspect.getsource(_pl.read_stream_source)
-    tag = hashlib.md5(
-        f"txs_ingest|{_source_fingerprint(sf_dir, ('events',))}|{code}".encode()
-    ).hexdigest()[:12]
-    fam = sf_family("txs_ingest", sf_dir)  # cross-SF-safe (ADVICE r9)
-    d = os.path.join(_CACHE_ROOT, f"{fam}_{tag}")
-    os.makedirs(d, exist_ok=True)
-    t = TxTable(os.path.join(d, "tx"))
-    src = read_stream_source(spark, "parquet", path=f"{sf_dir.rstrip('/')}/events.parquet")
-    proj = src.select("event_id", "event_type", "value")
-    for i in range(2):  # run 2 = full replay (fresh checkpoint, same ids)
-        q = start_txlog_sink(proj, t, os.path.join(d, f"ck{i}"), trigger_seconds=1)
-        q.processAllAvailable()
-        q.stop()
-    marker = os.path.join(d, "_READY")
-    if not os.path.exists(marker):
-        with open(marker, "w") as fh:
-            fh.write(tag)
-    evict_stale_tags(_CACHE_ROOT, fam, tag)
-    evict_stale_tags(_CACHE_ROOT, "txs_ingest", "")  # retire pre-family dirs
+    with keyed_dir(
+        "txs_ingest", sf_dir, ("events",),
+        (stream_txlog_ingest, _pl._singleton_dir, _pl.read_stream_source),
+    ) as (d, _):
+        t = TxTable(os.path.join(d, "tx"))
+        src = read_stream_source(
+            spark, "parquet", path=f"{sf_dir.rstrip('/')}/events.parquet"
+        )
+        proj = src.select("event_id", "event_type", "value")
+        for i in range(2):  # run 2 = full replay (fresh checkpoint, same ids)
+            q = start_txlog_sink(proj, t, os.path.join(d, f"ck{i}"), trigger_seconds=1)
+            q.processAllAvailable()
+            q.stop()
     return t.read(spark).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.round(
@@ -1032,69 +994,49 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     the seq-guarded update condition instead (merge_into's
     update_condition) — documented, not needed here.
 
-    Table + checkpoint live under a fingerprint-keyed dir with
-    stale-tag eviction (the stream_txlog_ingest convention): re-runs
-    find the checkpoint complete and REUSE the merged table.
+    Table + checkpoint live under a ``keyed_dir`` (as in
+    stream_trending_topk): re-runs find the checkpoint complete and
+    REUSE the merged table.
 
     100 TB shape: per batch, one key-shuffle for the netting window
     and two atomic MERGE commits; state lives in the table itself
     (no unbounded stream state). The serving read is a plain
     snapshot scan."""
-    import hashlib
-    import inspect
     import os
 
-    from iot_etl_spark.plans.stagecache import (
-        _CACHE_ROOT,
-        _source_fingerprint,
-        evict_stale_tags,
-        sf_family,
-    )
+    from iot_etl_spark.plans.stagecache import keyed_dir
     from iot_etl_spark.streaming import pipeline as _pl
     from iot_etl_spark.warehouse import merge as _mg
     from iot_etl_spark.warehouse.txlog import TxTable
 
-    code = (
-        inspect.getsource(stream_cdc_apply)
-        + inspect.getsource(_mg.apply_cdc_batch)
-        + inspect.getsource(_pl.read_stream_source)
-    )
-    tag = hashlib.md5(
-        f"cdc_apply|{_source_fingerprint(sf_dir, ('events',))}|{code}".encode()
-    ).hexdigest()[:12]
-    fam = sf_family("cdc_apply", sf_dir)  # cross-SF-safe (ADVICE r9)
-    d = os.path.join(_CACHE_ROOT, f"{fam}_{tag}")
-    os.makedirs(d, exist_ok=True)
-    t = TxTable(os.path.join(d, "tx"))
-    if t.latest_version() is None:  # seed the empty target (version 0)
-        t.overwrite(
-            spark.createDataFrame(
-                [], "user_id LONG, event_type STRING, vq LONG"
+    with keyed_dir(
+        "cdc_apply", sf_dir, ("events",),
+        (stream_cdc_apply, _mg.apply_cdc_batch, _pl.read_stream_source),
+    ) as (d, _):
+        t = TxTable(os.path.join(d, "tx"))
+        if t.latest_version() is None:  # seed the empty target (version 0)
+            t.overwrite(
+                spark.createDataFrame(
+                    [], "user_id LONG, event_type STRING, vq LONG"
+                )
             )
+        src = read_stream_source(
+            spark, "parquet", path=f"{sf_dir.rstrip('/')}/events.parquet"
         )
-    src = read_stream_source(
-        spark, "parquet", path=f"{sf_dir.rstrip('/')}/events.parquet"
-    )
-    changes = src.select(
-        F.col("user_id"),
-        F.col("event_type"),
-        F.expr("CAST(ROUND(value * 1e6) AS BIGINT)").alias("vq"),
-        F.col("event_id").alias("seq"),
-        F.when(F.col("event_type") == "error", F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-    )
-    q = _mg.start_cdc_merge_sink(
-        changes, t, os.path.join(d, "ck"), ["user_id"], trigger_seconds=1
-    )
-    q.processAllAvailable()
-    q.stop()
-    marker = os.path.join(d, "_READY")
-    if not os.path.exists(marker):
-        with open(marker, "w") as fh:
-            fh.write(tag)
-    evict_stale_tags(_CACHE_ROOT, fam, tag)
-    evict_stale_tags(_CACHE_ROOT, "cdc_apply", "")  # retire pre-family dirs
+        changes = src.select(
+            F.col("user_id"),
+            F.col("event_type"),
+            F.expr("CAST(ROUND(value * 1e6) AS BIGINT)").alias("vq"),
+            F.col("event_id").alias("seq"),
+            F.when(F.col("event_type") == "error", F.lit("D"))
+            .otherwise(F.lit("U"))
+            .alias("op"),
+        )
+        q = _mg.start_cdc_merge_sink(
+            changes, t, os.path.join(d, "ck"), ["user_id"], trigger_seconds=1
+        )
+        q.processAllAvailable()
+        q.stop()
     return t.read(spark).select(
         F.col("user_id").cast("long").alias("user_id"),
         F.col("event_type").alias("last_type"),
@@ -1288,57 +1230,43 @@ def stream_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: the split is computed once per epoch (localCheckpoint
     in split_by_constraints), both commits are O(1) log appends over
     staged parquet, and the quarantine side sees only the violating
-    trickle. Table + checkpoints live under a fingerprint-keyed dir,
-    so bench/driver re-runs REUSE the committed tables (query-level
-    idempotence on top of per-batch idempotence)."""
-    import hashlib
-    import inspect
+    trickle. Table + checkpoints live under a ``keyed_dir`` (as in
+    stream_trending_topk), so bench/driver re-runs REUSE the committed
+    tables (query-level idempotence on top of per-batch idempotence)."""
     import os
 
-    from iot_etl_spark.plans.stagecache import (
-        _CACHE_ROOT,
-        _source_fingerprint,
-        evict_stale_tags,
-        sf_family,
-    )
+    from iot_etl_spark.plans.stagecache import keyed_dir
     from iot_etl_spark.streaming import pipeline as _pl
     from iot_etl_spark.streaming.pipeline import start_txlog_quarantine_sink
     from iot_etl_spark.warehouse.txlog import TxTable
 
-    code = inspect.getsource(stream_quarantine_ingest) + inspect.getsource(
-        _pl.start_txlog_quarantine_sink
-    ) + inspect.getsource(_pl.read_stream_source)
-    tag = hashlib.md5(
-        f"txs_quar|{_source_fingerprint(sf_dir, ('events',))}|{code}".encode()
-    ).hexdigest()[:12]
-    fam = sf_family("txs_quar", sf_dir)  # cross-SF-safe (ADVICE r9)
-    d = os.path.join(_CACHE_ROOT, f"{fam}_{tag}")
-    os.makedirs(d, exist_ok=True)
-    t = TxTable(os.path.join(d, "tx"))
-    dlq = TxTable(os.path.join(d, "dlq"))
-    if "value_le_300" not in t.constraints():
-        t.add_constraint(spark, "value_le_300", "value <= 300")
-    src = read_stream_source(
-        spark, "parquet", path=f"{sf_dir.rstrip('/')}/events.parquet"
-    )
-    proj = src.filter(F.col("value").isNotNull()).select(
-        "event_id", "event_type", "value"
-    )
-    for i in range(2):  # run 2 = full replay (fresh checkpoint, same ids)
-        q = start_txlog_quarantine_sink(
-            proj, t, dlq, os.path.join(d, f"ck{i}"),
-            trigger_seconds=1, ledger_id="quar_ingest",
+    with keyed_dir(
+        "txs_quar", sf_dir, ("events",),
+        (
+            stream_quarantine_ingest,
+            _pl.start_txlog_quarantine_sink,
+            _pl.read_stream_source,
+        ),
+    ) as (d, _):
+        t = TxTable(os.path.join(d, "tx"))
+        dlq = TxTable(os.path.join(d, "dlq"))
+        if "value_le_300" not in t.constraints():
+            t.add_constraint(spark, "value_le_300", "value <= 300")
+        src = read_stream_source(
+            spark, "parquet", path=f"{sf_dir.rstrip('/')}/events.parquet"
         )
-        q.processAllAvailable()
-        if q.exception() is not None:
-            raise q.exception()
-        q.stop()
-    marker = os.path.join(d, "_READY")
-    if not os.path.exists(marker):
-        with open(marker, "w") as fh:
-            fh.write(tag)
-    evict_stale_tags(_CACHE_ROOT, fam, tag)
-    evict_stale_tags(_CACHE_ROOT, "txs_quar", "")  # retire pre-family dirs
+        proj = src.filter(F.col("value").isNotNull()).select(
+            "event_id", "event_type", "value"
+        )
+        for i in range(2):  # run 2 = full replay (fresh checkpoint, same ids)
+            q = start_txlog_quarantine_sink(
+                proj, t, dlq, os.path.join(d, f"ck{i}"),
+                trigger_seconds=1, ledger_id="quar_ingest",
+            )
+            q.processAllAvailable()
+            if q.exception() is not None:
+                raise q.exception()
+            q.stop()
 
     def summarize(table, side):
         return table.read(spark).groupBy("event_type").agg(

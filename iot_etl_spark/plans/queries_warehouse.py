@@ -105,10 +105,17 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer to repeated fact-fact joins (shuffle paid once at write,
     amortized over every query). The zero-Exchange plan property is
     pinned by tests/test_warehouse.py; this query proves the bucketed
-    round-trip + join result is byte-identical to the logical join."""
-    import hashlib
+    round-trip + join result is byte-identical to the logical join.
+
+    The bucket files live under a ``keyed_dir`` (plans/stagecache.py)
+    keyed on the SOURCE parquet fingerprints and this code, so a
+    testdata regen or an edit to the bucket spec rewrites, and a
+    matching key on disk reuses the files: re-registering the external
+    tables claims the layout in a fresh session without re-shuffling —
+    the write is paid once at ingest, as on a real warehouse."""
     import os
 
+    from iot_etl_spark.plans.stagecache import keyed_dir
     from iot_etl_spark.sources.tables import load_table
     from iot_etl_spark.warehouse.bucketing import (
         colocated_join,
@@ -116,83 +123,38 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_bucketed,
     )
 
-    # Cache tag fingerprints the SOURCE parquet (path + mtime + size),
-    # not just sf_dir: the test harness regenerates the same paths with
-    # new data between rounds, and a path-only tag would silently serve
-    # stale buckets. Matching tag on disk -> reuse the bucket files
-    # (re-registering the external table claims the layout in a fresh
-    # session without re-shuffling — the write is paid once at ingest,
-    # as on a real warehouse); any source change -> rewrite.
-    def _fp(name: str) -> str:
-        st = os.stat(os.path.join(sf_dir, f"{name}.parquet"))
-        return f"{name}:{st.st_mtime_ns}:{st.st_size}"
-
-    tag = hashlib.md5(
-        f"{sf_dir}|{_fp('orders')}|{_fp('lineitem')}".encode()
-    ).hexdigest()[:8]
-    # root + eviction family scoped per sf_dir — the tag fingerprints
-    # sf_dir, so concurrent different-SF runs under a bare prefix would
-    # evict each other's LIVE bucket layouts (same race class ADVICE r9
-    # flagged for the streaming serving tables)
-    from iot_etl_spark.plans.stagecache import sf_family
-
-    fam = sf_family("iot_etl_bucketed", sf_dir)
-    root = f"/tmp/{fam}_{tag}"
     n_buckets = 8
-    done_marker = os.path.join(root, "_BUCKETS_READY")
     orders_proj = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
     lineitem_proj = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
-
-    def _ddl(df) -> str:
-        # schema access plans nothing; the DDL mirrors exactly what
-        # write_bucketed persisted for this fingerprint tag
-        return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
-
-    if os.path.exists(done_marker):
-        register_bucketed_external(
-            spark, f"bkt_orders_{tag}", os.path.join(root, "orders"),
-            _ddl(orders_proj),
-            ("o_orderkey",), n_buckets, sort_cols=("o_orderkey",),
-        )
-        register_bucketed_external(
-            spark, f"bkt_lineitem_{tag}", os.path.join(root, "lineitem"),
-            _ddl(lineitem_proj),
-            ("l_orderkey",), n_buckets, sort_cols=("l_orderkey",),
-        )
-    else:
-        write_bucketed(
-            orders_proj,
-            f"bkt_orders_{tag}", os.path.join(root, "orders"),
-            ("o_orderkey",), n_buckets, sort_cols=("o_orderkey",),
-        )
-        write_bucketed(
-            lineitem_proj,
-            f"bkt_lineitem_{tag}", os.path.join(root, "lineitem"),
-            ("l_orderkey",), n_buckets, sort_cols=("l_orderkey",),
-        )
-        with open(done_marker, "w") as fh:
-            fh.write(tag)
-        # evict bucket layouts for superseded source fingerprints —
-        # every testdata regen mints a new tag; marker-first safety
-        # and the cross-process race handling live in the shared sweep
-        from iot_etl_spark.plans.stagecache import evict_stale_tags
-
-        evict_stale_tags(
-            os.path.dirname(root), fam, tag,
-            tag_len=8, marker_name="_BUCKETS_READY",
-        )
-        # retire pre-family dirs (iot_etl_bucketed_{8hex}); family dirs
-        # are immune — their suffix after the bare prefix is 15 chars
-        evict_stale_tags(
-            os.path.dirname(root), "iot_etl_bucketed", "",
-            tag_len=8, marker_name="_BUCKETS_READY",
-        )
+    with keyed_dir(
+        "bucketed", sf_dir, ("orders", "lineitem"),
+        (bucketed_join_revenue, write_bucketed),
+    ) as (root, ready):
+        # the dir name is unique per key, so the tables registered over
+        # it are too
+        key = os.path.basename(root)
+        for proj, side, col in (
+            (orders_proj, "orders", "o_orderkey"),
+            (lineitem_proj, "lineitem", "l_orderkey"),
+        ):
+            table, path = f"bkt_{side}_{key}", os.path.join(root, side)
+            if ready:
+                # schema access plans nothing; the DDL mirrors exactly
+                # what write_bucketed persisted under this key
+                ddl = ", ".join(
+                    f"{f.name} {f.dataType.simpleString()}" for f in proj.schema
+                )
+                register_bucketed_external(
+                    spark, table, path, ddl, (col,), n_buckets, sort_cols=(col,)
+                )
+            else:
+                write_bucketed(proj, table, path, (col,), n_buckets, sort_cols=(col,))
     joined = colocated_join(
-        spark, f"bkt_orders_{tag}", f"bkt_lineitem_{tag}",
+        spark, f"bkt_orders_{key}", f"bkt_lineitem_{key}",
         on=[F.col("o_orderkey") == F.col("l_orderkey")],
     )
     return joined.groupBy("o_orderpriority").agg(
@@ -257,52 +219,39 @@ def hourly_agg_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFram
     100 TB shape: the stale build writes date partitions once; the
     refresh recomputes ONLY buckets inside the dirty window and
     dynamically overwrites exactly those agg_date partitions —
-    history cost is zero, refresh cost is O(dirty window). The
-    fingerprint-keyed table dir makes bench/driver re-runs reuse the
-    committed table (the stream_quarantine_ingest idempotence
-    pattern); the max-date probe is one bounded scalar action."""
+    history cost is zero, refresh cost is O(dirty window). The table
+    lives under a ``keyed_dir`` (plans/stagecache.py), so bench/driver
+    re-runs reuse the committed table (the stream_quarantine_ingest
+    idempotence pattern); the max-date probe is one bounded scalar
+    action."""
     import datetime
-    import hashlib
-    import inspect
     import os
 
-    from iot_etl_spark.plans.stagecache import (
-        _CACHE_ROOT,
-        _source_fingerprint,
-        evict_stale_tags,
-        sf_family,
-    )
+    from iot_etl_spark.plans.stagecache import keyed_dir
     from iot_etl_spark.sources.tables import load_table
     from iot_etl_spark.warehouse import lifecycle
 
-    code = (
-        inspect.getsource(hourly_agg_incremental_refresh)
-        + inspect.getsource(lifecycle.materialize_agg)
-        + inspect.getsource(lifecycle.refresh_agg)
-        + inspect.getsource(lifecycle.hourly_agg)
-    )
-    tag = hashlib.md5(
-        f"aggrefresh|{_source_fingerprint(sf_dir, ('events',))}|{code}".encode()
-    ).hexdigest()[:12]
-    fam = sf_family("aggrefresh", sf_dir)
-    d = os.path.join(_CACHE_ROOT, f"{fam}_{tag}")
-    tbl = os.path.join(d, "fact_hourly_agg")
-    marker = os.path.join(d, "_READY")
-    ev = load_table(spark, sf_dir, "events")
-    if not os.path.exists(marker):
-        os.makedirs(d, exist_ok=True)
-        maxd = ev.agg(F.max(F.to_date("ts")).alias("d")).collect()[0]["d"]
-        stale_cut = maxd - datetime.timedelta(days=AGG_REFRESH_STALE_DAYS)
-        since = maxd - datetime.timedelta(days=AGG_REFRESH_DIRTY_DAYS)
-        # yesterday's build: events past the stale cut never seen
-        lifecycle.materialize_agg(
-            ev.filter(F.to_date("ts") < F.lit(str(stale_cut))), tbl
-        )
-        # one policy tick: recompute the dirty window from full data
-        lifecycle.refresh_agg(ev, tbl, since=since)
-        with open(marker, "w") as fh:
-            fh.write(tag)
-    evict_stale_tags(_CACHE_ROOT, fam, tag)
+    with keyed_dir(
+        "aggrefresh", sf_dir, ("events",),
+        (
+            hourly_agg_incremental_refresh,
+            lifecycle.materialize_agg,
+            lifecycle.refresh_agg,
+            lifecycle.hourly_agg,
+        ),
+    ) as (d, ready):
+        tbl = os.path.join(d, "fact_hourly_agg")
+        if not ready:
+            ev = load_table(spark, sf_dir, "events")
+            maxd = ev.agg(F.max(F.to_date("ts")).alias("d")).collect()[0]["d"]
+            stale_cut = maxd - datetime.timedelta(days=AGG_REFRESH_STALE_DAYS)
+            since = maxd - datetime.timedelta(days=AGG_REFRESH_DIRTY_DAYS)
+            # yesterday's build: events past the stale cut never seen
+            lifecycle.materialize_agg(
+                ev.filter(F.to_date("ts") < F.lit(str(stale_cut))), tbl
+            )
+            # one policy tick: recompute the dirty window from full data
+            lifecycle.refresh_agg(ev, tbl, since=since)
     agg = lifecycle.read_agg(spark, tbl)
     return agg.select(
         F.unix_timestamp("bucket").cast("long").alias("bucket_epoch"),

@@ -130,8 +130,8 @@ def _singleton_dir(file_path: str) -> str:
     """Directory containing a symlink to exactly one parquet file.
 
     DETERMINISTIC per source path (md5-keyed, not mkdtemp): streaming
-    checkpoints record the source's basePath, so a fingerprint-keyed
-    checkpoint resumed in a LATER PROCESS must resolve the same
+    checkpoints record the source's basePath, so a checkpoint kept in a
+    ``keyed_dir`` (plans/stagecache.py) and resumed in a LATER PROCESS must resolve the same
     directory or the file source fails with "Wrong basePath". A lost
     creation race with a concurrent process is benign — both build the
     identical symlink."""

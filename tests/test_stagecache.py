@@ -259,10 +259,9 @@ def test_serving_table_families_are_cross_sf_disjoint(tmp_path):
     root used a BARE name prefix for eviction while their tags
     fingerprint sf_dir — concurrent pytest (sf0.001) + sweep (sf0.01)
     runs minted different tags under one prefix and rmtree'd each
-    other's LIVE tables mid-stream. They now scope dir + eviction per
-    (name, sf_dir) via sf_family, like cached_stage: an eviction in
-    one SF's family must never touch the other's, and the legacy
-    bare-name sweep must leave family dirs alone."""
+    other's LIVE tables mid-stream. Every keyed dir now scopes dir +
+    eviction per (name, sf_dir) via sf_family: an eviction in one SF's
+    family must never touch the other's."""
     from iot_etl_spark.plans.stagecache import evict_stale_tags, sf_family
 
     root = str(tmp_path / "stages")
@@ -276,19 +275,94 @@ def test_serving_table_families_are_cross_sf_disjoint(tmp_path):
         os.makedirs(d)
         with open(os.path.join(d, "_READY"), "w") as fh:
             fh.write(tag)
-    # legacy pre-family dir (bare name + 12-hex tag)
-    legacy = os.path.join(root, f"txs_quar_{tag_stale}")
-    os.makedirs(legacy)
-    with open(os.path.join(legacy, "_READY"), "w") as fh:
-        fh.write(tag_stale)
 
     evicted = evict_stale_tags(root, fam_a, tag_live)
     assert evicted == [f"{fam_a}_{tag_stale}"]  # only fam_a's stale sibling
-    assert os.path.exists(os.path.join(root, f"{fam_b}_{tag_live}", "_READY"))
-
-    # the one-time legacy sweep retires bare-name dirs but is blind to
-    # family dirs (their suffix after "name_" is 19 chars, not 12-hex)
-    evicted = evict_stale_tags(root, "txs_quar", "")
-    assert evicted == [f"txs_quar_{tag_stale}"]
     assert os.path.exists(os.path.join(root, f"{fam_a}_{tag_live}", "_READY"))
     assert os.path.exists(os.path.join(root, f"{fam_b}_{tag_live}", "_READY"))
+
+
+def _dep_v1():
+    return 1
+
+
+def _dep_v2():
+    return 2
+
+
+def test_keyed_dir_code_dep_change_mints_new_dir_and_evicts_old(
+    tmp_path, spark, cache_root
+):
+    """Editing a code dep (here: swapping it) mints a new dir; the
+    clean exit marks it and evicts the superseded marked sibling."""
+    from iot_etl_spark.plans.stagecache import keyed_dir
+
+    sf = _source_dir(tmp_path, spark, 1)
+    with keyed_dir("serve", sf, ("documents",), (_dep_v1,)) as (d1, ready):
+        assert not ready
+        open(os.path.join(d1, "state"), "w").close()
+    assert os.path.exists(os.path.join(d1, "_READY"))
+    with keyed_dir("serve", sf, ("documents",), (_dep_v1,)) as (again, ready):
+        assert (again, ready) == (d1, True)
+    with keyed_dir("serve", sf, ("documents",), (_dep_v2,)) as (d2, ready):
+        assert d2 != d1 and not ready
+        assert os.path.isdir(d1)  # nothing evicted inside the block
+    assert os.path.exists(os.path.join(d2, "_READY"))
+    assert os.listdir(cache_root) == [os.path.basename(d2)]
+
+
+def test_keyed_dir_failed_block_leaves_dir_unmarked(tmp_path, spark, cache_root):
+    """A block that raises leaves its dir unmarked and evicts nothing:
+    the next call over the same key yields ready=False and runs again."""
+    from iot_etl_spark.plans.stagecache import keyed_dir
+
+    sf = _source_dir(tmp_path, spark, 1)
+    with keyed_dir("serve", sf, ("documents",), (_dep_v1,)) as (old, _):
+        pass
+    with pytest.raises(RuntimeError, match="mid-build"):
+        with keyed_dir("serve", sf, ("documents",), (_dep_v2,)) as (d, ready):
+            assert not ready
+            raise RuntimeError("mid-build")
+    assert not os.path.exists(os.path.join(d, "_READY"))
+    assert os.path.exists(os.path.join(old, "_READY"))  # not evicted
+    with keyed_dir("serve", sf, ("documents",), (_dep_v2,)) as (retry, ready):
+        assert (retry, ready) == (d, False)
+    assert os.path.exists(os.path.join(d, "_READY"))
+    assert not os.path.exists(old)
+
+
+def test_cached_stage_serves_entry_keyed_by_the_old_formula(
+    spark, tmp_path, cache_root
+):
+    """Tag parity: an entry written under the directory name the
+    earlier inline formula produced (md5 of name, source fingerprint
+    and the builder's then its deps' source; 12 hex; family prefix) is
+    a hit — no rebuild, and its _READY marker is not rewritten."""
+    import hashlib
+    import inspect
+    import time
+
+    sf = _source_dir(tmp_path, spark, 1)
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.read.parquet(os.path.join(sf, "documents.parquet"))
+
+    st = os.stat(os.path.join(sf, "documents.parquet"))
+    fp = f"{sf}|documents:{st.st_mtime_ns}:{st.st_size}"
+    code = inspect.getsource(build) + inspect.getsource(_dep_v1)
+    tag = hashlib.md5(f"s|{fp}|{code}".encode()).hexdigest()[:12]
+    family = f"s_{hashlib.md5(sf.encode()).hexdigest()[:6]}"
+    path = os.path.join(cache_root, f"{family}_{tag}")
+    spark.range(5).selectExpr("id AS doc_id", "id AS v").write.parquet(path)
+    with open(os.path.join(path, "_READY"), "w") as fh:
+        fh.write(tag)
+    marker_mtime = os.stat(os.path.join(path, "_READY")).st_mtime_ns
+    time.sleep(0.01)
+
+    df = cached_stage(spark, "s", sf, ("documents",), build, code_deps=(_dep_v1,))
+    assert df.count() == 5
+    assert calls == []  # served from the pre-existing entry
+    assert os.stat(os.path.join(path, "_READY")).st_mtime_ns == marker_mtime
+    assert os.listdir(cache_root) == [os.path.basename(path)]

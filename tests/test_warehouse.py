@@ -398,22 +398,30 @@ def test_txlog_batch_ledger_scoping(spark, tmp_path):
     assert t.read(spark).count() == 3
 
 
-def test_bucketed_layout_cross_session_reuse_no_rewrite(spark):
+def test_bucketed_layout_cross_session_reuse_no_rewrite(spark, tmp_path, monkeypatch):
     """VERDICT r5 item 3: with unchanged inputs, a SECOND session must
     re-register the existing bucket tables (no re-shuffle, no rewrite
     — the write is paid once at ingest) and the stale-tag eviction
     sweep must remove nothing. Pinned by bucket-file mtimes: byte-for-
-    byte the same files serve both sessions, and results agree."""
+    byte the same files serve both sessions, and results agree. The
+    layout lives in the stage cache root (a ``keyed_dir``), so it is
+    found there and nothing is written under the old
+    ``/tmp/iot_etl_bucketed_*`` roots."""
     import glob
     import os
 
+    from iot_etl_spark.plans import stagecache
     from iot_etl_spark.plans.registry import QUERIES
+
+    cache_root = str(tmp_path / "stages")
+    monkeypatch.setattr(stagecache, "_CACHE_ROOT", cache_root)
+    old_roots = set(glob.glob("/tmp/iot_etl_bucketed_*"))
 
     q = QUERIES["bucketed_join_revenue"]
     first = {tuple(sorted(r.asDict().items())) for r in q(spark, SF_DIR).collect()}
-    roots = sorted(glob.glob("/tmp/iot_etl_bucketed_*"))
+    roots = sorted(glob.glob(os.path.join(cache_root, "bucketed_*")))
     assert roots, "bucket layout was not materialized"
-    ready = [r for r in roots if os.path.exists(os.path.join(r, "_BUCKETS_READY"))]
+    ready = [r for r in roots if os.path.exists(os.path.join(r, "_READY"))]
     assert ready, "no completed bucket layout on disk"
 
     def snapshot():
@@ -425,6 +433,8 @@ def test_bucketed_layout_cross_session_reuse_no_rewrite(spark):
         return out
 
     before = snapshot()
+    assert any("/orders/" in f for f in before)
+    assert any("/lineitem/" in f for f in before)
     # fresh catalog, same JVM: the external bucket tables of session 1
     # are gone from the catalog and must be re-claimed from disk
     s2 = spark.newSession()
@@ -432,6 +442,7 @@ def test_bucketed_layout_cross_session_reuse_no_rewrite(spark):
     assert second == first
     after = snapshot()
     assert after == before, "second session rewrote or evicted live bucket files"
+    assert set(glob.glob("/tmp/iot_etl_bucketed_*")) == old_roots
 
 
 def test_txlog_check_constraints_enforced_on_writes(spark, tmp_path):

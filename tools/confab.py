@@ -24,17 +24,16 @@ def main() -> int:
     sf_dir = sys.argv[4] if len(sys.argv) > 4 else "/root/testdata/sf0.1"
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from iot_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("confab")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.codegen.cache.maxEntries", "20000")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="confab",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": "16g",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

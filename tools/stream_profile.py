@@ -21,8 +21,9 @@ def main() -> int:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql.streaming import StreamingQueryListener
+
+    from iot_etl_spark.session import get_spark
 
     progresses: list[dict] = []
 
@@ -40,14 +41,14 @@ def main() -> int:
         def onQueryTerminated(self, event):
             pass
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stream_profile")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="stream_profile",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": "16g",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     spark.streams.addListener(Capture())

@@ -84,16 +84,15 @@ def main() -> int:
     pat = sys.argv[2] if len(sys.argv) > 2 else ""
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from iot_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]")
-        .appName("bitexact-sweep")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "16")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="bitexact-sweep",
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]",
+        shuffle_partitions=16,
+        extra_conf={"spark.driver.memory": "1g"},  # Spark's default heap
     )
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()

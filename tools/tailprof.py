@@ -26,20 +26,16 @@ def main() -> int:
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from iot_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("tailprof")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_CODEGEN_CACHE_ENTRIES", "20000"),
-        )
-        .getOrCreate()
+    spark = get_spark(
+        app_name="tailprof",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -95,7 +95,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
+        shuffle_partitions = int(cpus)
 
     builder = (
         SparkSession.builder.master(master)
@@ -110,10 +110,7 @@ def get_spark(
         # scratch. Sized to distinct-plan count, not cores/data, so it
         # is not a local-mode tune. Measured 2x off an 80-query warm
         # pass (bench.py has the A/B numbers).
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_CODEGEN_CACHE_ENTRIES", "20000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "20000")
         # PySpark call-site capture (STATIC conf, same builder-only
         # rule as above). With it on, every DataFrame/Column API call
         # looks up the active session, reads

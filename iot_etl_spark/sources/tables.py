@@ -46,16 +46,16 @@ _TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan of one star-schema table.
+def normalize_timestamps(df: DataFrame) -> DataFrame:
+    """Timestamp columns as (UTC-zoned) TimestampType regardless of how
+    the generator wrote them — the one normalization of the batch
+    loader and the streaming file source:
 
-    Timestamp columns are normalized to (UTC-zoned) TimestampType
-    regardless of how the generator wrote them:
-
-    - nanosecond int64 (``events.ts`` in some generations, surfaced as
-      bigint under ``nanosAsLong``): integer-divided to microseconds —
-      float division would round half-up and diverge from DuckDB's
-      TIMESTAMP_NS -> TIMESTAMP truncation for ~50% of rows;
+    - nanosecond int64 ``ts`` (``events.ts`` in some generations,
+      surfaced as bigint under ``nanosAsLong``): integer-divided to
+      microseconds — float division would round half-up and diverge
+      from DuckDB's TIMESTAMP_NS -> TIMESTAMP truncation for ~50% of
+      rows;
     - microsecond parquet timestamps with isAdjustedToUTC=false (what
       pandas/pyarrow write by default), which Spark 4 reads as
       TIMESTAMP_NTZ: cast to TimestampType. The session timezone is
@@ -63,6 +63,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       time functions (``unix_micros``, windows, intervals) — which
       reject NTZ inputs — all work downstream.
     """
+    dtypes = df.dtypes
+    if dict(dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    for col, dtype in dtypes:
+        if dtype == "timestamp_ntz":
+            df = df.withColumn(col, F.col(col).cast("timestamp"))
+    return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Lazy parquet scan of one star-schema table, with its timestamp
+    columns normalized by ``normalize_timestamps``."""
     ensure_runtime_confs(spark)
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     try:
@@ -75,12 +87,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         hit = per_session.get(key)
         if hit is not None:
             return hit
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    for col, dtype in df.dtypes:
-        if dtype == "timestamp_ntz":
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
+    df = normalize_timestamps(spark.read.parquet(path))
     if key is not None:
         per_session[key] = df
     return df

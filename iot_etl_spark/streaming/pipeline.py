@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from iot_etl_spark.schemas import SENSOR_READING_SCHEMA
 from iot_etl_spark.session import ensure_runtime_confs
+from iot_etl_spark.sources.tables import normalize_timestamps
 
 DEFAULT_TRIGGER_S = 5  # reference STREAM_WINDOW_SECONDS=5 (config.py:121)
 DEFAULT_WATERMARK = "2 minutes"
@@ -203,20 +204,12 @@ def read_stream_source(
         # The file source needs an explicit schema; take it from a
         # batch footer read (driver-side, no data scan, memoized on
         # file mtime/size) so the stream tracks whatever precision the
-        # generator wrote, then apply the same ts normalization the
-        # batch loader performs (ns-int64 -> truncate to us; NTZ us ->
-        # UTC TimestampType).
-        file_schema = _stream_source_schema(spark, path)
-        reader = spark.readStream.schema(file_schema)
+        # generator wrote, then normalize timestamps as the batch
+        # loader does.
+        reader = spark.readStream.schema(_stream_source_schema(spark, path))
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        raw = reader.parquet(path)
-        ts_type = dict((f.name, f.dataType.simpleString()) for f in file_schema)
-        if ts_type.get("ts") == "bigint":
-            raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type.get("ts") == "timestamp_ntz":
-            raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        return raw
+        return normalize_timestamps(reader.parquet(path))
     if source == "json":
         # JSON-lines file source through the SAME parse stage as Kafka:
         # read each line as an opaque string, then parse_sensor_json.
@@ -356,6 +349,23 @@ def dedup_stream_within_watermark(
     )
 
 
+def _start_foreach_batch(
+    df: DataFrame, write_batch, checkpoint: str, trigger_seconds: int,
+    output_mode: str = "append",
+):
+    """Start ``df`` into ``write_batch(batch_df, batch_id)`` through
+    foreachBatch, with ``checkpoint`` and a processing-time trigger of
+    ``trigger_seconds``: the one starter of every sink that commits
+    micro-batches to a transactional table."""
+    return (
+        df.writeStream.outputMode(output_mode)
+        .foreachBatch(lambda batch_df, epoch_id: write_batch(batch_df, int(epoch_id)))
+        .option("checkpointLocation", checkpoint)
+        .trigger(processingTime=f"{trigger_seconds} seconds")
+        .start()
+    )
+
+
 def start_txlog_sink(
     df: DataFrame,
     table,
@@ -385,16 +395,10 @@ def start_txlog_sink(
     ``table``: a ``TxTable`` (duck-typed to avoid a hard import in
     the streaming module)."""
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        table.append_batch(batch_df, int(epoch_id), ledger_id=ledger_id)
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        table.append_batch(batch_df, batch_id, ledger_id=ledger_id)
 
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_foreach_batch(df, write_batch, checkpoint, trigger_seconds)
 
 
 def start_txlog_quarantine_sink(
@@ -410,42 +414,16 @@ def start_txlog_quarantine_sink(
     (tagged with the failed rule names) instead of failing the epoch,
     so a PERSISTENT bad-data condition cannot wedge the stream the way
     a plain constrained append would (every replay re-failing on the
-    same rows).
+    same rows). Each epoch goes through
+    ``TxTable.append_with_quarantine`` with its epoch id: both sides
+    commit through the (ledger, batch) idempotence ledger under
+    distinct scopes, and the split is computed once per epoch (see
+    that method for the replay and crash contract)."""
 
-    Exactly-once: both sides commit through ``append_batch``'s
-    (ledger, batch) idempotence ledger with DISTINCT ledger scopes, so
-    a crash between the valid commit and the quarantine commit heals
-    on replay — the valid side recognizes the epoch and skips, the
-    quarantine side applies it. Idempotence is per table; there is no
-    cross-table transaction, so between a crash and its replay the two
-    tables may hold different epochs.
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        table.append_with_quarantine(batch_df, quarantine, batch_id, ledger_id)
 
-    The split itself is computed ONCE per epoch
-    (``TxTable.split_by_constraints`` localCheckpoints the tagged
-    frame), so a non-deterministic upstream cannot route a row to both
-    tables or neither."""
-    q_ledger = f"{ledger_id or 'q'}::quarantine"
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        valid, bad = table.split_by_constraints(batch_df)
-        table.append_batch(valid, int(epoch_id), ledger_id=ledger_id)
-        if bad is not None and bad.limit(1).count():
-            # allow_evolution: the bad frame carries the added
-            # 'violated' tag column; a quarantine table seeded (or
-            # previously used) without it must widen, not wedge the
-            # stream with SchemaMismatchError every epoch — mirroring
-            # the batch path append_with_quarantine (ADVICE r8).
-            quarantine.append_batch(
-                bad, int(epoch_id), ledger_id=q_ledger, allow_evolution=True
-            )
-
-    return (
-        df.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_foreach_batch(df, write_batch, checkpoint, trigger_seconds)
 
 
 UPSERT_SEQ_COL = "_upsert_seq"
@@ -475,10 +453,10 @@ def start_txlog_upsert_sink(
     log-structured emulation (write-cheap, read resolves), the
     standard LSM/CDC trade."""
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         v = table.append_batch(
-            batch_df.withColumn(UPSERT_SEQ_COL, F.lit(int(epoch_id))),
-            int(epoch_id),
+            batch_df.withColumn(UPSERT_SEQ_COL, F.lit(batch_id)),
+            batch_id,
             ledger_id=ledger_id,
         )
         if v is None:
@@ -490,12 +468,8 @@ def start_txlog_upsert_sink(
             # with STATE_STORE_COMMIT_VALIDATION_FAILED.
             batch_df.write.format("noop").mode("overwrite").save()
 
-    return (
-        df.writeStream.outputMode("update")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
+    return _start_foreach_batch(
+        df, write_batch, checkpoint, trigger_seconds, output_mode="update"
     )
 
 

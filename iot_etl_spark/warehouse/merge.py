@@ -38,6 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from iot_etl_spark.streaming.pipeline import _start_foreach_batch
 from iot_etl_spark.warehouse.txlog import TxTable
 
 
@@ -200,9 +201,4 @@ def start_cdc_merge_sink(
             bdf.sparkSession, table, bdf, on, seq_col=seq_col, op_col=op_col
         )
 
-    return (
-        df.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
+    return _start_foreach_batch(df, apply_batch, checkpoint, trigger_seconds)

@@ -28,8 +28,12 @@ Design (the standard log-structured table layout):
   vacuum's age gate removes.
 - The log is ``<table>/_txlog/<version 8-digit>.json``, one entry per
   commit: operation, files added, files logically removed, and for
-  schema-bearing commits the exact Spark schema. The current snapshot
-  = replay of entries 0..N (removed files drop out).
+  schema-bearing commits the exact Spark schema. Every piece of table
+  state — the live files, the read schema, the schema signature, the
+  active constraints, the batch ids per ledger and the history — comes
+  from ONE forward replay of entries 0..N (``TxTable._replay``;
+  removed files drop out), and each write plans its commit from the
+  replay it read.
 - **Commit = atomic put-if-absent of the next version file.** The
   entry is written to a temp file and fsynced, then ``os.link``-ed to
   the version name, which is atomic on a local/HDFS-semantics
@@ -65,6 +69,7 @@ shape.
 from __future__ import annotations
 
 import contextlib
+import dataclasses
 import json
 import os
 import shutil
@@ -89,6 +94,11 @@ class SchemaMismatchError(ValueError):
 
 def _schema_sig(df: DataFrame) -> dict[str, str]:
     return {f.name: f.dataType.simpleString() for f in df.schema.fields}
+
+
+def _versions(log_names: list[str]) -> list[int]:
+    # a commit's temp file ends in .tmp, so it is never a version
+    return sorted(int(f.split(".")[0]) for f in log_names if f.endswith(".json"))
 
 
 _ARROW_ATOMIC = (
@@ -126,6 +136,62 @@ def _fits_driver(df: DataFrame) -> bool:
     return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= limit
 
 
+_COMMIT_RETRIES = 3  # lost version races an append retries before raising
+
+
+def _check_sig(
+    current: dict[str, str] | None, sig: dict[str, str], allow_evolution: bool
+) -> None:
+    """Schema enforcement on the write path (the table-format contract
+    plain parquet directories lack): an append must match the table
+    schema ``current`` exactly, or — with ``allow_evolution`` — may ADD
+    columns while keeping every existing column's type. A drifted
+    producer fails at commit time, not at some future reader's schema
+    surprise. Runs on signatures only, so the commit loop re-runs it
+    against the schema of every re-derived snapshot: a lost race may
+    have redefined the table (a concurrent overwrite), and a blind
+    retry would stamp a conflicting schema back on, silently mixing
+    incompatible files."""
+    if current is None or sig == current:
+        return
+    widened = allow_evolution and all(sig.get(c) == t for c, t in current.items())
+    if not widened:
+        raise SchemaMismatchError(
+            f"append schema {sig} conflicts with table schema {current}"
+            + ("" if allow_evolution else " (pass allow_evolution=True to add columns)")
+        )
+
+
+@dataclasses.dataclass
+class _Snapshot:
+    """Table state at one version, folded from the log by ``_replay``."""
+
+    version: int | None = None
+    # data file -> version that logically removed it (None: live), in
+    # the order the files were added
+    lifetimes: dict[str, int | None] = dataclasses.field(default_factory=dict)
+    # Spark schema JSON of the latest schema-bearing commit, or the DDL
+    # of its signature when it was logged without one
+    read_schema: dict | str | None = None
+    schema: dict[str, str] | None = None
+    constraints: dict[str, str] = dataclasses.field(default_factory=dict)
+    batch_ids: dict[str | None, set[int]] = dataclasses.field(default_factory=dict)
+    history: list[dict] = dataclasses.field(default_factory=list)
+    # commit temp files seen in the same listing (vacuum's age-gated sweep)
+    tmp_files: list[str] = dataclasses.field(default_factory=list)
+
+    @property
+    def files(self) -> list[str]:
+        return [f for f, gone in self.lifetimes.items() if gone is None]
+
+    @property
+    def next_version(self) -> int:
+        return 0 if self.version is None else self.version + 1
+
+    def claimed(self, batch_id: int | None, ledger_id: str | None) -> bool:
+        return batch_id is not None and batch_id in self.batch_ids.get(ledger_id, ())
+
+
 class TxTable:
     """Transactional parquet table rooted at ``path``."""
 
@@ -138,12 +204,7 @@ class TxTable:
 
     # ------------------------------------------------------------ log
     def versions(self) -> list[int]:
-        # a commit's temp file ends in .tmp, so it is never a version
-        return sorted(
-            int(f.split(".")[0])
-            for f in os.listdir(self.log_dir)
-            if f.endswith(".json")
-        )
+        return _versions(os.listdir(self.log_dir))
 
     def latest_version(self) -> int | None:
         vs = self.versions()
@@ -153,23 +214,82 @@ class TxTable:
         with open(os.path.join(self.log_dir, f"{version:08d}.json")) as fh:
             return json.load(fh)
 
-    def snapshot_files(self, version: int | None = None) -> list[str]:
-        """Replay the log through ``version`` (default: latest):
-        the live data-file list for that snapshot."""
-        latest = self.latest_version()
-        if latest is None:
-            return []
-        if version is None:
-            version = latest
-        if version not in self.versions():
-            raise ValueError(f"version {version} does not exist (have {self.versions()})")
-        live: list[str] = []
-        for v in range(version + 1):
+    def _replay(self, version: int | None = None) -> _Snapshot:
+        """The table state at ``version`` (default: latest): one listing
+        of the log and one forward fold that reads each entry 0..version
+        once. Every state accessor and every write's plan is a
+        projection of this result. Entries written by older code fold
+        too: ``stats``/``bloom`` keys are ignored, metadata-only commits
+        add no files, and a commit without ``spark_schema`` reads with
+        the DDL of its signature (nested field names must then parse as
+        plain identifiers, as every table this engine writes does)."""
+        names = os.listdir(self.log_dir)
+        vs = _versions(names)
+        if version is not None and vs and version not in vs:
+            raise ValueError(f"version {version} does not exist (have {vs})")
+        s = _Snapshot(tmp_files=[n for n in names if n.endswith(".tmp")])
+        for v in vs:
+            if version is not None and v > version:
+                break
             e = self._entry(v)
-            removed = set(e.get("removed", ()))
-            live = [f for f in live if f not in removed]
-            live.extend(e.get("added", ()))
-        return [os.path.join(self.data_dir, f) for f in live]
+            s.version = v
+            for f in e.get("removed", ()):
+                if f in s.lifetimes and s.lifetimes[f] is None:  # only a live file
+                    s.lifetimes[f] = v
+            for f in e.get("added", ()):
+                s.lifetimes.pop(f, None)
+                s.lifetimes[f] = None
+            if "spark_schema" in e:
+                s.read_schema = e["spark_schema"]
+            elif e.get("schema"):
+                s.read_schema = ", ".join(
+                    "`" + c.replace("`", "``") + f"` {t}" for c, t in e["schema"].items()
+                )
+            if e.get("schema"):
+                s.schema = e["schema"]
+            if e.get("op") == "add_constraint":
+                s.constraints[e["constraint"]] = e["expr"]
+            elif e.get("op") == "drop_constraint":
+                s.constraints.pop(e["constraint"], None)
+            if e.get("batch_id") is not None:
+                s.batch_ids.setdefault(e.get("ledger_id"), set()).add(e["batch_id"])
+            s.history.append(
+                {
+                    "version": v,
+                    "op": e.get("op"),
+                    "n_added": len(e.get("added", ())),
+                    "n_removed": len(e.get("removed", ())),
+                    "batch_id": e.get("batch_id"),
+                    "ledger_id": e.get("ledger_id"),
+                    "constraint": e.get("constraint"),
+                }
+            )
+        return s
+
+    def _paths(self, names: list[str]) -> list[str]:
+        return [os.path.join(self.data_dir, f) for f in names]
+
+    def snapshot_files(self, version: int | None = None) -> list[str]:
+        """The live data-file list at ``version`` (default: latest)."""
+        return self._paths(self._replay(version).files)
+
+    def table_schema(self) -> dict[str, str] | None:
+        """Column -> type of the current table schema (the latest
+        commit carrying one wins)."""
+        return self._replay().schema
+
+    def history(self) -> list[dict]:
+        """DESCRIBE HISTORY: one summary dict per commit (version, op,
+        file delta, streaming batch key, constraint touched) — the
+        audit surface for "who did what to this table", without
+        exposing raw log internals."""
+        return self._replay().history
+
+    def committed_batch_ids(self, ledger_id: str | None = None) -> set[int]:
+        """Batch ids recorded by ``append_batch`` commits WITHIN one
+        ledger scope — the idempotence ledger for exactly-once
+        streaming."""
+        return set(self._replay().batch_ids.get(ledger_id, ()))
 
     def _commit(self, entry: dict, version: int | None = None) -> int:
         """Atomically claim ``version`` (default: next after latest):
@@ -235,89 +355,23 @@ class TxTable:
         shutil.rmtree(staging)
         return names
 
-    def _scan(
-        self, spark: SparkSession, files: list[str], version: int | None = None
-    ) -> DataFrame:
-        """Read ``files`` with the table schema at ``version`` (default
-        latest) — no footer inference and no schema-merge job. That
-        schema is the Spark schema recorded by the latest schema-bearing
-        commit at or before ``version``, or, for a commit logged without
-        one, the DDL of its column -> type signature (nested field names
-        must then parse as plain identifiers, as every table this engine
-        writes does). Files written before an evolution read the added
-        columns as NULL."""
-        latest = self.latest_version() if version is None else version
-        for v in range(latest, -1, -1):
-            e = self._entry(v)
-            if "spark_schema" in e:
-                schema = T.StructType.fromJson(e["spark_schema"])
-                break
-            if e.get("schema"):
-                schema = ", ".join(
-                    "`" + c.replace("`", "``") + f"` {t}" for c, t in e["schema"].items()
-                )
-                break
-        else:
-            raise ValueError(f"no commit up to version {latest} records a schema")
-        return spark.read.schema(schema).parquet(*files)
+    def _discard(self, added: list[str]) -> None:
+        """Delete staged files no log entry references."""
+        for f in added:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(self.data_dir, f))
 
-    def table_schema(self) -> dict[str, str] | None:
-        """Column -> type of the current table schema (recorded at
-        each commit; the latest entry carrying one wins)."""
-        for v in reversed(self.versions()):
-            sig = self._entry(v).get("schema")
-            if sig:
-                return sig
-        return None
-
-    def _check_schema(self, df: DataFrame, allow_evolution: bool) -> dict[str, str]:
-        """Schema enforcement on the write path (the table-format
-        contract plain parquet directories lack): an append must match
-        the table schema exactly, or — with ``allow_evolution`` — may
-        ADD columns while keeping every existing column's type. A
-        drifted producer fails at commit time, not at some future
-        reader's schema surprise."""
-        return self._check_sig(_schema_sig(df), allow_evolution)
-
-    def _check_sig(self, sig: dict[str, str], allow_evolution: bool) -> dict[str, str]:
-        """Signature-level check, re-runnable inside a commit retry
-        loop without touching the DataFrame (the table schema may have
-        changed under a lost race — e.g. a concurrent overwrite
-        redefined it — and a blind retry would stamp a conflicting
-        schema back on, silently mixing incompatible files)."""
-        current = self.table_schema()
-        if current is None or sig == current:
-            return sig
-        widened = allow_evolution and all(
-            sig.get(c) == t for c, t in current.items()
-        )
-        if not widened:
-            raise SchemaMismatchError(
-                f"append schema {sig} conflicts with table schema {current}"
-                + ("" if allow_evolution else " (pass allow_evolution=True to add columns)")
-            )
-        return sig
-
-    def history(self) -> list[dict]:
-        """DESCRIBE HISTORY: one summary dict per commit (version, op,
-        file delta, streaming batch key, constraint touched) — the
-        audit surface for "who did what to this table", without
-        exposing raw log internals."""
-        out = []
-        for v in self.versions():
-            e = self._entry(v)
-            out.append(
-                {
-                    "version": v,
-                    "op": e.get("op"),
-                    "n_added": len(e.get("added", ())),
-                    "n_removed": len(e.get("removed", ())),
-                    "batch_id": e.get("batch_id"),
-                    "ledger_id": e.get("ledger_id"),
-                    "constraint": e.get("constraint"),
-                }
-            )
-        return out
+    def _scan(self, spark: SparkSession, s: _Snapshot) -> DataFrame:
+        """Read the live files of ``s`` with the schema the log recorded
+        at that version — no footer inference and no schema-merge job.
+        Files written before an evolution read the added columns as
+        NULL."""
+        if s.read_schema is None:
+            raise ValueError(f"no commit up to version {s.version} records a schema")
+        schema = s.read_schema
+        if isinstance(schema, dict):
+            schema = T.StructType.fromJson(schema)
+        return spark.read.schema(schema).parquet(*self._paths(s.files))
 
     # ----------------------------------------------- CHECK constraints
     def constraints(self) -> dict[str, str]:
@@ -325,14 +379,7 @@ class TxTable:
         from the log. Constraints are TABLE METADATA: an overwrite
         replaces the data and may redefine the schema, but the
         constraints persist until an explicit drop — same as Delta."""
-        active: dict[str, str] = {}
-        for v in self.versions():
-            e = self._entry(v)
-            if e.get("op") == "add_constraint":
-                active[e["constraint"]] = e["expr"]
-            elif e.get("op") == "drop_constraint":
-                active.pop(e["constraint"], None)
-        return active
+        return self._replay().constraints
 
     def add_constraint(self, spark: SparkSession, name: str, expr: str) -> int:
         """ALTER TABLE ADD CONSTRAINT name CHECK (expr): validates the
@@ -341,11 +388,12 @@ class TxTable:
         commits a metadata-only log entry. Delta NULL semantics: a row
         violates only when the predicate evaluates to FALSE — NULL
         passes (add an IS NOT NULL conjunct to forbid it)."""
-        if name in self.constraints():
+        s = self._replay()
+        if name in s.constraints:
             raise ValueError(f"constraint {name!r} already exists")
-        if self.snapshot_files():
+        if s.files:
             bad = (
-                self.read(spark)
+                self._scan(spark, s)
                 .filter(f"NOT coalesce(({expr}), true)")
                 .limit(1)
                 .collect()
@@ -367,26 +415,23 @@ class TxTable:
              "added": [], "removed": []}
         )
 
-    def _enforce_constraints(self, spark: SparkSession, added: list[str]) -> None:
-        """Write-path CHECK enforcement, run on the STAGED files after
-        ``_stage`` and before the commit: re-reading the just-written
-        parquet costs one local scan of the new files only (never a
-        recompute of the upstream plan) and checks exactly the bytes
-        the commit would publish. On violation the invisible staged
-        files are deleted and the write raises — the table never
+    def _enforce_constraints(
+        self, spark: SparkSession, cons: dict[str, str], added: list[str]
+    ) -> None:
+        """Write-path CHECK enforcement of ``cons``, run on the STAGED
+        files after ``_stage`` and before the commit: re-reading the
+        just-written parquet costs one local scan of the new files only
+        (never a recompute of the upstream plan) and checks exactly the
+        bytes the commit would publish. On violation the invisible
+        staged files are deleted and the write raises — the table never
         exposes a state that fails its contract."""
-        cons = self.constraints()
         if not cons or not added:
             return
-        staged = spark.read.parquet(
-            *(os.path.join(self.data_dir, n) for n in added)
-        )
+        staged = spark.read.parquet(*self._paths(added))
         for name, expr in cons.items():
             bad = staged.filter(f"NOT coalesce(({expr}), true)").limit(1).collect()
             if bad:
-                for f in added:
-                    with contextlib.suppress(FileNotFoundError):
-                        os.remove(os.path.join(self.data_dir, f))
+                self._discard(added)
                 raise ConstraintViolationError(
                     f"write violates CHECK {name!r} ({expr}): {bad[0]}"
                 )
@@ -395,8 +440,9 @@ class TxTable:
         self,
         df: DataFrame,
         quarantine: "TxTable",
-        max_retries: int = 3,
-    ) -> tuple[int, int | None]:
+        batch_id: int | None = None,
+        ledger_id: str | None = None,
+    ) -> tuple[int | None, int | None]:
         """Append with CHECK-violation QUARANTINE instead of rejection
         (the dbt ``store_failures`` / DLQ-table shape): rows passing
         every active constraint commit to THIS table; violating rows
@@ -408,7 +454,19 @@ class TxTable:
         table never publishes a bad state — this path trades strictness
         for progress: the pipeline keeps flowing and the bad rows stay
         visible, auditable, and replayable beside it. NULL semantics
-        match CHECK enforcement: a NULL predicate passes.
+        match CHECK enforcement: a NULL predicate passes. The quarantine
+        side appends with ``allow_evolution``: a quarantine table seeded
+        without the ``violated`` column widens instead of failing every
+        write.
+
+        With ``batch_id`` (the streaming quarantine sink) both sides
+        commit through ``append_batch``'s idempotence ledger under
+        DISTINCT scopes — ``ledger_id`` here, ``<ledger_id or
+        'q'>::quarantine`` on the quarantine table — so a crash between
+        the two commits heals on replay: the valid side recognizes the
+        batch (its version is then None) and the quarantine side
+        applies it. There is no cross-table transaction, so between a
+        crash and its replay the two tables may hold different batches.
 
         The tagged frame is localCheckpoint-ed before splitting so the
         valid/bad routing is computed exactly once: a non-deterministic
@@ -417,113 +475,64 @@ class TxTable:
         carries a ``violated`` column (the tag would silently clobber
         it and the quarantine rows would lose the caller's data).
 
-        Scale: one materialization of the incoming micro-batch (the
-        checkpoint), then one filter pass per side; the rule
-        evaluation is a row-local expression (no shuffle)."""
-        valid, bad = self.split_by_constraints(df)
-        v = self.append(valid, max_retries=max_retries)
+        Scale: one materialization of the incoming frame (the
+        checkpoint), then one filter pass per side; the rule evaluation
+        is a row-local expression (no shuffle)."""
+        from pyspark.sql import functions as F
+
+        valid, bad = df, None
+        cons = self.constraints()
+        if cons:
+            if "violated" in df.columns:
+                raise ValueError(
+                    "append_with_quarantine reserves the 'violated' column; "
+                    "rename or drop it on the incoming frame"
+                )
+            fails = [
+                F.when(~F.coalesce(F.expr(expr), F.lit(True)), F.lit(name))
+                for name, expr in sorted(cons.items())
+            ]
+            tagged = df.withColumn(
+                "violated", F.concat_ws(",", F.array_compact(F.array(*fails)))
+            ).localCheckpoint(eager=True)
+            valid = tagged.filter(F.col("violated") == "").drop("violated")
+            bad = tagged.filter(F.col("violated") != "")
+        v = self.append_batch(valid, batch_id, ledger_id)
         qv = None
         if bad is not None and bad.limit(1).count():
-            qv = quarantine.append(
-                bad, max_retries=max_retries, allow_evolution=True
+            qv = quarantine.append_batch(
+                bad, batch_id, f"{ledger_id or 'q'}::quarantine", allow_evolution=True
             )
         return v, qv
 
-    def split_by_constraints(
-        self, df: DataFrame
-    ) -> tuple[DataFrame, DataFrame | None]:
-        """Partition ``df`` by this table's active CHECK constraints:
-        (valid, bad) where bad rows carry a ``violated`` column naming
-        the failed rules (sorted, comma-joined); bad is None when the
-        table has no constraints. The tagged frame is
-        localCheckpoint-ed so routing is computed exactly once — a
-        non-deterministic upstream could otherwise send a row to both
-        sides or neither. Shared by ``append_with_quarantine`` (batch)
-        and ``start_txlog_quarantine_sink`` (streaming DLQ routing).
-
-        Raises ValueError if df already carries ``violated`` (the tag
-        would silently clobber the caller's data)."""
-        from pyspark.sql import functions as F
-
-        cons = self.constraints()
-        if not cons:
-            return df, None
-        if "violated" in df.columns:
-            raise ValueError(
-                "split_by_constraints reserves the 'violated' column; "
-                "rename or drop it on the incoming frame"
-            )
-        fails = [
-            F.when(
-                ~F.coalesce(F.expr(expr), F.lit(True)), F.lit(name)
-            )
-            for name, expr in sorted(cons.items())
-        ]
-        tagged = df.withColumn(
-            "violated",
-            F.concat_ws(",", F.array_compact(F.array(*fails))),
-        ).localCheckpoint(eager=True)
-        valid = tagged.filter(F.col("violated") == "").drop("violated")
-        bad = tagged.filter(F.col("violated") != "")
-        return valid, bad
-
-    def append(
-        self, df: DataFrame, max_retries: int = 3, allow_evolution: bool = False
-    ) -> int:
-        """ACID append: stage files, then one atomic commit at the
-        version planned from the read snapshot. Appends commute, so a
-        lost race is safely retried at the new head (the staged files
-        are reused — they were never visible). Schema-enforced BOTH
-        before staging and on every retry: if the race was lost to an
-        overwrite that redefined the table schema, the retry raises
-        SchemaMismatchError instead of committing conflicting files
-        (the staged parts stay invisible; vacuum sweeps them)."""
-        sig = self._check_schema(df, allow_evolution)
-        added = self._stage(df)
-        self._enforce_constraints(df.sparkSession, added)
-        for _ in range(max_retries + 1):
-            self._check_sig(sig, allow_evolution)
-            latest = self.latest_version()
-            planned = 0 if latest is None else latest + 1
-            try:
-                return self._commit(
-                    {"op": "append", "added": added, "removed": [], "schema": sig,
-                     "spark_schema": df.schema.jsonValue()},
-                    planned,
-                )
-            except ConcurrentCommitError:
-                continue
-        raise ConcurrentCommitError(f"append lost {max_retries + 1} commit races")
-
-    def committed_batch_ids(self, ledger_id: str | None = None) -> set[int]:
-        """Batch ids recorded by ``append_batch`` commits WITHIN one
-        ledger scope — the idempotence ledger for exactly-once
-        streaming. The log is file lists, not data, so this scan is
-        O(commits) tiny reads; a long-lived table would checkpoint the
-        set forward."""
-        ids = set()
-        for v in self.versions():
-            e = self._entry(v)
-            b = e.get("batch_id")
-            if b is not None and e.get("ledger_id") == ledger_id:
-                ids.add(b)
-        return ids
+    def append(self, df: DataFrame, allow_evolution: bool = False) -> int:
+        """ACID append: ``append_batch`` without a ledger key."""
+        return self.append_batch(df, None, allow_evolution=allow_evolution)
 
     def append_batch(
         self,
         df: DataFrame,
-        batch_id: int,
+        batch_id: int | None,
         ledger_id: str | None = None,
-        max_retries: int = 3,
         allow_evolution: bool = False,
     ) -> int | None:
-        """Idempotent append keyed by (ledger scope, micro-batch id): a
-        replayed batch (foreachBatch re-delivery after a
-        failure/restart) is detected in the log and skipped — TOGETHER
-        with the atomic commit this upgrades Structured Streaming's
-        at-least-once foreachBatch contract to exactly-once into this
-        table. Returns the new version, or None for a recognized
-        replay.
+        """ACID append: stage files, then one atomic commit at the
+        version planned from the read snapshot. Appends commute, so a
+        lost race is retried at the new head with the same staged files
+        (they were never visible), on a re-derived snapshot: the schema
+        is enforced before staging and again on every retry, so a race
+        lost to an overwrite that redefined the table schema raises
+        SchemaMismatchError instead of committing conflicting files
+        (the staged parts stay invisible; vacuum sweeps them).
+
+        With a ``batch_id`` the append is idempotent, keyed by (ledger
+        scope, micro-batch id): a replayed batch (foreachBatch
+        re-delivery after a failure/restart) is detected in the log and
+        skipped — TOGETHER with the atomic commit this upgrades
+        Structured Streaming's at-least-once foreachBatch contract to
+        exactly-once into this table. Returns the new version, or None
+        for a recognized replay. ``batch_id=None`` records no key (a
+        plain ``append``).
 
         LEDGER VALIDITY — Spark's epoch-id contract only guarantees
         that the SAME batch id carries the SAME rows within one
@@ -536,39 +545,31 @@ class TxTable:
         checkpoint/query id is the safe production default.
 
         The check-then-commit window is closed by the commit itself:
-        on a lost version race the ledger is RE-READ — if the winning
-        commit claimed this (ledger, batch) key, the replay is
-        recognized and the retry abandoned."""
-        if batch_id in self.committed_batch_ids(ledger_id):
+        the re-derived snapshot after a lost race also re-reads the
+        ledger — if the winning commit claimed this (ledger, batch)
+        key, the replay is recognized, the loser's staged files (which
+        no entry references) are removed, and the retry abandoned."""
+        s = self._replay()
+        if s.claimed(batch_id, ledger_id):
             return None
-        sig = self._check_schema(df, allow_evolution=allow_evolution)
+        sig = _schema_sig(df)
+        _check_sig(s.schema, sig, allow_evolution)
         added = self._stage(df)
-        self._enforce_constraints(df.sparkSession, added)
-        for _ in range(max_retries + 1):
-            self._check_sig(sig, allow_evolution=allow_evolution)
-            latest = self.latest_version()
-            planned = 0 if latest is None else latest + 1
+        self._enforce_constraints(df.sparkSession, s.constraints, added)
+        entry = {"op": "append", "added": added, "removed": []}
+        if batch_id is not None:
+            entry.update(batch_id=batch_id, ledger_id=ledger_id)
+        entry.update(schema=sig, spark_schema=df.schema.jsonValue())
+        for _ in range(_COMMIT_RETRIES + 1):
             try:
-                return self._commit(
-                    {"op": "append", "added": added, "removed": [],
-                     "batch_id": batch_id, "ledger_id": ledger_id, "schema": sig,
-                     "spark_schema": df.schema.jsonValue()},
-                    planned,
-                )
+                return self._commit(entry, s.next_version)
             except ConcurrentCommitError:
-                # the winner may have BEEN this batch (two sinks racing
-                # the same replay): re-read the ledger before retrying
-                if batch_id in self.committed_batch_ids(ledger_id):
-                    # the loser's staged files are referenced by no log
-                    # entry — removing them is safe and avoids orphans
-                    # that would otherwise sit on disk until a vacuum
-                    # with elapsed retention runs (ADVICE r5)
-                    for f in added:
-                        with contextlib.suppress(FileNotFoundError):
-                            os.remove(os.path.join(self.data_dir, f))
+                s = self._replay()
+                if s.claimed(batch_id, ledger_id):
+                    self._discard(added)
                     return None
-                continue
-        raise ConcurrentCommitError(f"append_batch lost {max_retries + 1} commit races")
+                _check_sig(s.schema, sig, allow_evolution)
+        raise ConcurrentCommitError(f"append lost {_COMMIT_RETRIES + 1} commit races")
 
     def overwrite(self, df: DataFrame) -> int:
         """ACID overwrite: new files in, every file live IN THE READ
@@ -576,16 +577,14 @@ class TxTable:
         them until vacuum). A lost race RAISES rather than retrying:
         unlike append, overwrite's removed-list depends on the
         snapshot it read, which the winning commit invalidated."""
-        latest = self.latest_version()
-        planned = 0 if latest is None else latest + 1
-        live = [os.path.basename(f) for f in self.snapshot_files()]
+        s = self._replay()
         added = self._stage(df)
-        self._enforce_constraints(df.sparkSession, added)
+        self._enforce_constraints(df.sparkSession, s.constraints, added)
         return self._commit(
             # overwrite may redefine the schema
-            {"op": "overwrite", "added": added, "removed": live,
+            {"op": "overwrite", "added": added, "removed": s.files,
              "schema": _schema_sig(df), "spark_schema": df.schema.jsonValue()},
-            planned,
+            s.next_version,
         )
 
     # ----------------------------------------------------------- read
@@ -593,10 +592,10 @@ class TxTable:
         """Snapshot read (time travel with ``version=``): resolves the
         immutable file list once; concurrent later commits are
         invisible to this DataFrame."""
-        files = self.snapshot_files(version)
-        if not files:
+        s = self._replay(version)
+        if not s.files:
             raise ValueError("table has no committed data")
-        return self._scan(spark, files, version)
+        return self._scan(spark, s)
 
     def optimize(self, spark: SparkSession, target_files: int = 1) -> int | None:
         """OPTIMIZE: rewrite the current snapshot's files into at most
@@ -607,20 +606,13 @@ class TxTable:
         version race makes this raise rather than drop its rows —
         rerun on the new snapshot. No-op (returns None) if the
         snapshot is already within the target."""
-        live = self.snapshot_files()
-        if len(live) <= target_files:
+        s = self._replay()
+        if len(s.files) <= target_files:
             return None
-        latest = self.latest_version()
-        planned = latest + 1
-        df = self._scan(spark, live, latest).coalesce(target_files)
-        added = self._stage(df)
+        added = self._stage(self._scan(spark, s).coalesce(target_files))
         return self._commit(
-            {
-                "op": "optimize",
-                "added": added,
-                "removed": [os.path.basename(f) for f in live],
-            },
-            planned,
+            {"op": "optimize", "added": added, "removed": s.files},
+            s.next_version,
         )
 
     # --------------------------------------------------------- vacuum
@@ -642,11 +634,13 @@ class TxTable:
         live snapshot is never vacuumable. Also sweeps aged orphans
         from crashed stagings and commits (staging dirs, log temp
         files). Returns deleted data file names."""
-        retain_last = max(1, retain_last)
-        vs = self.versions()
+        s = self._replay()
         keep: set[str] = set()
-        for v in vs[-retain_last:]:
-            keep.update(os.path.basename(f) for f in self.snapshot_files(v))
+        if s.history:
+            # a file is live at some retained version iff the oldest
+            # retained version had not removed it yet
+            oldest = s.history[-max(1, retain_last):][0]["version"]
+            keep = {f for f, gone in s.lifetimes.items() if gone is None or gone > oldest}
         horizon = time.time() - retention_seconds
         deleted = []
         for f in os.listdir(self.data_dir):
@@ -660,8 +654,9 @@ class TxTable:
             if d.startswith("_staging_") and os.path.getmtime(p) <= horizon:
                 shutil.rmtree(p, ignore_errors=True)
         # crashed commits (writer died before the link): same age gate
-        for f in os.listdir(self.log_dir):
+        for f in s.tmp_files:
             p = os.path.join(self.log_dir, f)
-            if f.endswith(".tmp") and os.path.getmtime(p) <= horizon:
-                os.remove(p)
+            with contextlib.suppress(FileNotFoundError):
+                if os.path.getmtime(p) <= horizon:
+                    os.remove(p)
         return sorted(deleted)

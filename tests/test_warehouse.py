@@ -522,6 +522,14 @@ def test_txlog_history_summarizes_commits(spark, tmp_path):
     assert h[3]["n_removed"] == h[0]["n_added"] + h[1]["n_added"] > 0
 
 
+_QUARANTINE_ROWS = [
+    (3, 30.0),        # clean
+    (4, -1.0),        # violates v_positive
+    (400, -2.0),      # violates both
+    (5, None),        # NULL passes (CHECK semantics)
+]
+
+
 def test_append_with_quarantine_routes_violations(spark, tmp_path):
     """CHECK-violation quarantine: valid rows commit to the main
     table, violating rows land in the DLQ table tagged with every
@@ -537,15 +545,7 @@ def test_append_with_quarantine_routes_violations(spark, tmp_path):
     t.add_constraint(spark, "v_positive", "v > 0")
     t.add_constraint(spark, "k_small", "k < 100")
 
-    batch = spark.createDataFrame(
-        [
-            (3, 30.0),        # clean
-            (4, -1.0),        # violates v_positive
-            (400, -2.0),      # violates both
-            (5, None),        # NULL passes (CHECK semantics)
-        ],
-        "k LONG, v DOUBLE",
-    )
+    batch = spark.createDataFrame(_QUARANTINE_ROWS, "k LONG, v DOUBLE")
     v, qv = t.append_with_quarantine(batch, q)
     assert v is not None and qv is not None
     main_rows = {r.k for r in t.read(spark).collect()}
@@ -562,6 +562,92 @@ def test_append_with_quarantine_routes_violations(spark, tmp_path):
     )
     assert qv2 is None and {r.k for r in t2.read(spark).collect()} == {1, 2}
     assert q2.latest_version() is None
+
+
+def test_quarantine_epoch_tags_match_batch_path(spark, tmp_path):
+    """The streaming quarantine sink routes each epoch through the same
+    method as the batch path: one epoch with a batch id gives the same
+    main rows and ``violated`` tags, commits under the (ledger, batch)
+    key on both sides, and a replayed epoch commits nothing."""
+    import iot_etl_spark.warehouse.txlog as txlog
+
+    def routed(tag, **key):
+        t = txlog.TxTable(str(tmp_path / f"main_{tag}"))
+        q = txlog.TxTable(str(tmp_path / f"dlq_{tag}"))
+        t.overwrite(spark.createDataFrame([(1, 10.0), (2, 20.0)], "k LONG, v DOUBLE"))
+        t.add_constraint(spark, "v_positive", "v > 0")
+        t.add_constraint(spark, "k_small", "k < 100")
+        batch = spark.createDataFrame(_QUARANTINE_ROWS, "k LONG, v DOUBLE")
+        versions = t.append_with_quarantine(batch, q, **key)
+        main = sorted(r.k for r in t.read(spark).collect())
+        dlq = {r.k: r.violated for r in q.read(spark).collect()}
+        return t, q, batch, versions, main, dlq
+
+    _, _, _, _, batch_main, batch_dlq = routed("batch")
+    t, q, batch, versions, main, dlq = routed("epoch", batch_id=7, ledger_id="led")
+    assert None not in versions
+    assert (main, dlq) == (batch_main, batch_dlq)
+    assert dlq == {4: "v_positive", 400: "k_small,v_positive"}
+    assert t.committed_batch_ids("led") == {7}
+    assert q.committed_batch_ids("led::quarantine") == {7}
+    assert t.append_with_quarantine(batch, q, batch_id=7, ledger_id="led") == (None, None)
+    assert sorted(r.k for r in t.read(spark).collect()) == main
+    assert q.read(spark).count() == len(dlq)
+
+
+def test_txlog_state_comes_from_one_replay(spark, tmp_path, monkeypatch):
+    """Every piece of table state is one forward fold over the log: a
+    race-free append_batch, read, overwrite or vacuum lists ``_txlog/``
+    once and reads each log entry at most once, however many versions
+    the table holds. Vacuum keeps every file a retained version still
+    references."""
+    import collections
+
+    from iot_etl_spark.warehouse import txlog
+
+    t = txlog.TxTable(str(tmp_path / "tx"))
+    for i in range(6):
+        t.append_batch(spark.createDataFrame([(i, str(i))], "k INT, v STRING"), i)
+    t.add_constraint(spark, "k_nonneg", "k >= 0")
+
+    reads: collections.Counter = collections.Counter()
+    listings = []
+    real_entry, real_listdir = txlog.TxTable._entry, os.listdir
+
+    def counting_entry(self, version):
+        reads[version] += 1
+        return real_entry(self, version)
+
+    def counting_listdir(path="."):
+        if os.path.realpath(path) == os.path.realpath(t.log_dir):
+            listings.append(path)
+        return real_listdir(path)
+
+    def counted(call):
+        n = len(t.versions())
+        reads.clear()
+        listings.clear()
+        monkeypatch.setattr(txlog.TxTable, "_entry", counting_entry)
+        monkeypatch.setattr(os, "listdir", counting_listdir)
+        try:
+            out = call()
+        finally:
+            monkeypatch.undo()
+        assert sorted(reads) == list(range(n)), reads
+        assert set(reads.values()) == {1}, reads
+        assert len(listings) == 1, listings
+        return out
+
+    df = spark.createDataFrame([(6, "6")], "k INT, v STRING")
+    assert counted(lambda: t.append_batch(df, 6)) == 7
+    assert counted(lambda: t.append_batch(df, 6)) is None  # replay, seen in the same pass
+    assert _tx_rows(counted(lambda: t.read(spark))) == [(i, str(i)) for i in range(7)]
+    before = counted(lambda: t.overwrite(spark.createDataFrame([(9, "z")], "k INT, v STRING")))
+    assert counted(lambda: t.vacuum(retain_last=2, retention_seconds=0)) == []
+    assert len(_tx_rows(t.read(spark, version=before - 1))) == 7
+    replaced = {os.path.basename(f) for f in t.snapshot_files(before - 1)}
+    assert set(counted(lambda: t.vacuum(retain_last=1, retention_seconds=0))) == replaced
+    assert _tx_rows(t.read(spark)) == [(9, "z")]
 
 
 # ------------------------------------- txlog staging paths and commit

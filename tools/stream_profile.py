@@ -2,6 +2,9 @@
 """Profile a streaming query drain: run the query like the bench does,
 then dump every micro-batch's StreamingQueryProgress durationMs map
 (captured via a listener so post-drain q.stop() doesn't lose them).
+The stage cache root points at a fresh temp dir for the run (removed
+at exit), so a stream query whose serving table an earlier run already
+built still drains its micro-batches here.
 
 Usage: python tools/stream_profile.py stream_query_name [sf_dir]
 """
@@ -11,6 +14,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -23,6 +27,7 @@ def main() -> int:
 
     from pyspark.sql.streaming import StreamingQueryListener
 
+    from iot_etl_spark.plans import stagecache
     from iot_etl_spark.session import get_spark
 
     progresses: list[dict] = []
@@ -53,6 +58,12 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     spark.streams.addListener(Capture())
 
+    with tempfile.TemporaryDirectory(prefix="stream_profile_stages_") as root:
+        stagecache._CACHE_ROOT = root
+        return _profile(spark, name, sf_dir, progresses)
+
+
+def _profile(spark, name: str, sf_dir: str, progresses: list[dict]) -> int:
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()

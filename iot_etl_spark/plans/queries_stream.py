@@ -16,7 +16,7 @@ from iot_etl_spark.streaming.pipeline import (
     apply_stream_transforms,
     windowed_aggregate,
     run_stream_to_memory,
-    stream_join_partitions,
+    STREAM_JOIN_PARTITIONS,
 )
 
 SENSOR_FIXTURE = "/root/repo/tests/fixtures/sensor_stream.jsonl"
@@ -290,7 +290,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "click_value",
     )
     _, out = run_stream_to_memory(
-        out_cols, output_mode="append", width=stream_join_partitions()
+        out_cols, output_mode="append", width=STREAM_JOIN_PARTITIONS
     )
     return out
 
@@ -779,7 +779,7 @@ def stream_outer_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
     _, out = run_stream_to_memory(
         joined.select("event_id", "on_key", "purchase_ts", "click_value"),
         output_mode="append",
-        width=stream_join_partitions(),
+        width=STREAM_JOIN_PARTITIONS,
     )
     bound = load_table(spark, sf_dir, "events").agg(
         (F.max("ts") - F.expr(f"INTERVAL {OUTER_JOIN_TAIL_CUT_S} SECONDS")).alias("cutoff")
@@ -899,7 +899,7 @@ def stream_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, out = run_stream_to_memory(
         joined.select("on_key", "purchase_ts", "click_ts", "click_value"),
         output_mode="append",
-        width=stream_join_partitions(),
+        width=STREAM_JOIN_PARTITIONS,
     )
     bound = load_table(spark, sf_dir, "events").agg(
         (F.max("ts") - F.expr(f"INTERVAL {FO_PURCHASE_CUT_S} SECONDS")).alias("cp"),
@@ -1523,7 +1523,7 @@ def stream_join_then_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.window("purchase_ts", "1 day"), "on_key"
     ).agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
     _, out = run_stream_to_memory(
-        agg, output_mode="append", width=stream_join_partitions()
+        agg, output_mode="append", width=STREAM_JOIN_PARTITIONS
     )
     bound = load_table(spark, sf_dir, "events").agg(
         (F.max("ts") - F.expr(f"INTERVAL {JOIN_AGG_CUT_S} SECONDS")).alias("cutoff")

@@ -15,7 +15,9 @@ Invalidation is the whole game:
 - the tag also hashes the builder function's SOURCE CODE, so editing
   the stage logic invalidates without remembering to bump a version;
 - a ``_READY`` marker is written only after the parquet write
-  completes, so a crashed half-write is never read.
+  completes, and only after every file it vouches for is fsynced, so
+  neither a crashed half-write nor an OS crash leaves a marker whose
+  data is missing.
 
 ``keyed_dir`` gives the same key, marker and eviction to state a query
 builds in place rather than as one parquet frame: the streaming
@@ -146,6 +148,28 @@ def _sweep_orphan_stagings(root: str) -> list[str]:
     return removed
 
 
+def _fsync(path: str) -> None:
+    """fsync one file or directory by path."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def _fsync_tree(root: str) -> None:
+    """fsync every regular file under ``root``, then every directory
+    bottom-up (``root`` last), so the data and the names that reach it
+    are on disk before a marker or a rename vouches for them. An entry
+    that vanishes mid-walk (a temp file its writer removed) is
+    skipped."""
+    for d, _, files in os.walk(root, topdown=False):
+        paths = [p for p in (os.path.join(d, f) for f in files) if os.path.isfile(p)]
+        for p in (*paths, d):
+            with contextlib.suppress(FileNotFoundError):
+                _fsync(p)
+
+
 def sf_family(name: str, sf_dir: str) -> str:
     """Directory/eviction family scoped per (name, sf_dir). Concurrent
     processes at DIFFERENT scale factors (pytest at sf0.001, the sweep
@@ -203,14 +227,21 @@ def keyed_dir(
     block raises, the dir stays unmarked and nothing is evicted, so
     the next call yields ``ready=False`` and the block runs again over
     whatever the failed run left (a checkpointed stream resumes; other
-    state must be rewritten by the block)."""
+    state must be rewritten by the block). Every file and directory
+    under the dir is fsynced before the marker is written; then the
+    marker, the dir and its parent are fsynced."""
     family, tag, path = _keyed_path(name, sf_dir, source_tables, code_deps)
     marker = os.path.join(path, "_READY")
     os.makedirs(path, exist_ok=True)
     yield path, os.path.exists(marker)
     if not os.path.exists(marker):
+        _fsync_tree(path)
         with open(marker, "w") as fh:
             fh.write(tag)
+            fh.flush()
+            os.fsync(fh.fileno())
+        _fsync(path)
+        _fsync(os.path.dirname(path))
     evict_stale_tags(_CACHE_ROOT, family, tag)
 
 
@@ -287,6 +318,11 @@ def cached_stage(
                 build().repartition(_STAGE_FILES).write.mode("overwrite").parquet(staging)
                 with open(os.path.join(staging, "_READY"), "w") as fh:
                     fh.write(tag)
+                # parts, their .crc files, _SUCCESS, _READY and the
+                # staging dir reach the disk before the rename
+                # publishes them; the root's fsync makes the rename
+                # itself durable
+                _fsync_tree(staging)
                 try:
                     os.rename(staging, path)
                 except OSError:
@@ -311,6 +347,7 @@ def cached_stage(
                             os.rename(staging, path)
                         except OSError:
                             pass
+                _fsync(_CACHE_ROOT)
             finally:
                 shutil.rmtree(staging, ignore_errors=True)
             evict_stale_tags(_CACHE_ROOT, family, tag)

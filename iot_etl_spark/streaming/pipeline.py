@@ -78,53 +78,38 @@ def _stream_source_schema(spark: SparkSession, path: str):
     return schema
 
 
+# State-store partitions of a stateful streaming query (see
+# stream_shuffle_scope). Stream-stream joins get their own, lower
+# width: a join runs FOUR state stores per partition (two per side),
+# so its per-partition fixed cost is 4x an aggregate's and its sweet
+# spot sits lower on the same hardware (r14 A/B at sf0.1: join drains
+# 10-15% faster at 4 than 8; 2 is worse; the Python-stateful class
+# regresses below 8). In production both widths scale with cluster
+# cores; the 4-store multiplier argument is scale-independent.
+STREAM_STATE_PARTITIONS = 8
+STREAM_JOIN_PARTITIONS = 4
+
+
 @contextmanager
 def stream_shuffle_scope(spark: SparkSession, width: int | None = None):
     """Scope ``spark.sql.shuffle.partitions`` to the streaming state
-    size (``SPARK_GRAFT_STREAM_PARTITIONS``, default 8) for the
+    size (``width``, default ``STREAM_STATE_PARTITIONS``) for the
     duration of a ``.start()`` call — stateful streaming pins its
     state-store partition count AT QUERY START and AQE never
     re-coalesces it, so an untuned session (Spark default 200) pays
     200 state tasks per micro-batch (measured 4x wall time). The conf
     is restored immediately after start; the caller's batch
-    configuration is untouched. In production the knob goes the other
-    way — state partitions must cover the cluster's cores — hence an
-    env knob, not a constant.
-
-    ``width`` overrides the env knob for one query class: a
-    stream-stream join runs FOUR state stores per partition (two per
-    side), so its per-partition fixed cost is 4x an aggregate's and
-    its sweet spot sits lower on the same hardware (r14 A/B at sf0.1:
-    join drains 10-15% faster at 4 than 8; 2 is worse; the
-    Python-stateful class regresses below 8 — so only the join
-    queries pass an override, themselves env-tunable via
-    SPARK_GRAFT_STREAM_JOIN_PARTITIONS)."""
+    configuration is untouched. The join queries pass
+    ``STREAM_JOIN_PARTITIONS``."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions",
-        str(width)
-        if width is not None
-        else os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
+        str(STREAM_STATE_PARTITIONS if width is None else width),
     )
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def stream_join_partitions() -> int:
-    """State-partition width for stream-stream JOIN drains (see
-    stream_shuffle_scope): 4 state stores per partition make the
-    per-partition floor 4x an aggregate's, so the join class gets its
-    own env-tunable width (default half the aggregate width, floor 4).
-    In production both knobs scale with cluster cores; the 4-store
-    multiplier argument is scale-independent."""
-    base = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_JOIN_PARTITIONS", str(max(4, base // 2))
-        )
-    )
 
 
 def _singleton_dir(file_path: str) -> str:

@@ -6,8 +6,8 @@
   non-adjacent pair carries a positive common-neighbor count, so the
   consumers' `adj == 0 AND cn >= 1` filter is precisely the old
   "wedge pairs minus edges" anti-join semantics.
-- stream_join_partitions: the join-drain width knob derives from the
-  aggregate width (floor 4) and honors its env override.
+- stream widths: stateful queries start with 8 state partitions and
+  stream-stream join drains with 4, whatever the environment holds.
 """
 
 from __future__ import annotations
@@ -65,18 +65,22 @@ def test_wedge_scores_cn_matches_bruteforce_common_neighbors(spark):
         assert r.cn == expect, (r.ua, r.ub, r.cn, expect)
 
 
-def test_stream_join_partitions_derivation_and_override(monkeypatch):
-    from iot_etl_spark.streaming.pipeline import stream_join_partitions
+def test_stream_widths_are_constants(spark, monkeypatch):
+    """The state width is 8 and the join width 4; the environment
+    variables that used to tune them are not read."""
+    from iot_etl_spark.streaming import pipeline
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_JOIN_PARTITIONS", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-    assert stream_join_partitions() == 4
+    assert pipeline.STREAM_STATE_PARTITIONS == 8
+    assert pipeline.STREAM_JOIN_PARTITIONS == 4
     monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "64")
-    assert stream_join_partitions() == 32
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "4")
-    assert stream_join_partitions() == 4  # floor
     monkeypatch.setenv("SPARK_GRAFT_STREAM_JOIN_PARTITIONS", "16")
-    assert stream_join_partitions() == 16  # explicit override wins
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with pipeline.stream_shuffle_scope(spark):
+        assert spark.conf.get(key) == "8"
+    with pipeline.stream_shuffle_scope(spark, width=pipeline.STREAM_JOIN_PARTITIONS):
+        assert spark.conf.get(key) == "4"
+    assert spark.conf.get(key) == before
 
 
 def test_bm25_postings_frame_matches_naive_tokenize(spark):

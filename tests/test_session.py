@@ -43,3 +43,35 @@ def test_errors_keep_their_class_and_condition_without_call_sites(spark):
         assert os.path.basename(__file__) not in str(err.value)
     finally:
         spark.conf.set(key, old)
+
+
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_manager_class(spark, path: str) -> str:
+    """The class of the manager Spark builds for a checkpoint at
+    ``path`` from the session's Hadoop conf, as a streaming query's
+    offset, source and commit logs and its state store do."""
+    jvm = spark._jvm
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    fm = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path), hadoop_conf
+    )
+    return fm.getClass().getSimpleName()
+
+
+def test_checkpoints_use_the_filesystem_based_manager(spark, tmp_path):
+    """The engine session, and a foreign session once
+    ``ensure_runtime_confs`` ran on it, commit streaming checkpoints
+    through the FileSystem-based manager, whose rename forks no
+    ``readlink``."""
+    from iot_etl_spark.session import ensure_runtime_confs
+
+    manager = "FileSystemBasedCheckpointFileManager"
+    assert _checkpoint_manager_class(spark, str(tmp_path)) == manager
+
+    other = spark.newSession()
+    other.conf.unset(_CKPT_MANAGER_KEY)
+    assert _checkpoint_manager_class(other, str(tmp_path)) != manager
+    ensure_runtime_confs(other)
+    assert _checkpoint_manager_class(other, str(tmp_path)) == manager

@@ -366,3 +366,73 @@ def test_cached_stage_serves_entry_keyed_by_the_old_formula(
     assert calls == []  # served from the pre-existing entry
     assert os.stat(os.path.join(path, "_READY")).st_mtime_ns == marker_mtime
     assert os.listdir(cache_root) == [os.path.basename(path)]
+
+
+@pytest.fixture()
+def fs_events(monkeypatch):
+    """Record every ``os.fsync`` (as the path its fd names) and every
+    ``os.rename``, in order."""
+    events = []
+    real_fsync, real_rename = os.fsync, os.rename
+
+    def fsync(fd):
+        events.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        real_fsync(fd)
+
+    def rename(src, dst):
+        events.append(("rename", os.path.realpath(src), os.path.realpath(dst)))
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "rename", rename)
+    return events
+
+
+def test_cached_stage_syncs_parts_and_marker_before_the_rename(
+    spark, tmp_path, cache_root, fs_events
+):
+    """Every file the committed stage holds (parts, .crc files,
+    _SUCCESS, _READY) and the staging dir are fsynced before the
+    rename publishes them; the cache root is fsynced after it."""
+    sf = _source_dir(tmp_path, spark, 1)
+    cached_stage(
+        spark, "s", sf, ("documents",),
+        lambda: spark.read.parquet(os.path.join(sf, "documents.parquet")),
+    )
+    renames = [i for i, e in enumerate(fs_events) if e[0] == "rename"]
+    assert len(renames) == 1
+    i = renames[0]
+    _, staging, path = fs_events[i]
+    synced_before = {e[1] for e in fs_events[:i] if e[0] == "fsync"}
+    names = os.listdir(path)
+    assert "_READY" in names and "_SUCCESS" in names
+    assert any(n.startswith("part-") for n in names)
+    assert any(n.endswith(".crc") for n in names)
+    for n in names:
+        assert os.path.join(staging, n) in synced_before, n
+    assert staging in synced_before
+    assert ("fsync", os.path.realpath(cache_root)) in fs_events[i + 1:]
+
+
+def test_keyed_dir_syncs_state_before_the_marker_appears(
+    tmp_path, spark, cache_root, fs_events
+):
+    """On a clean exit every file under the dir, nested ones too, is
+    fsynced while the marker does not exist yet; then the marker, the
+    dir and its parent are fsynced, in that order."""
+    from iot_etl_spark.plans.stagecache import keyed_dir
+
+    sf = _source_dir(tmp_path, spark, 1)
+    with keyed_dir("serve", sf, ("documents",), (_dep_v1,)) as (d, _):
+        os.makedirs(os.path.join(d, "state", "0"))
+        for rel in ("metadata", os.path.join("state", "0", "1.delta")):
+            with open(os.path.join(d, rel), "w") as fh:
+                fh.write("x")
+        assert fs_events == []
+    d = os.path.realpath(d)
+    marker = os.path.join(d, "_READY")
+    synced = [e[1] for e in fs_events if e[0] == "fsync"]
+    m = synced.index(marker)
+    for rel in ("metadata", os.path.join("state", "0", "1.delta")):
+        assert os.path.join(d, rel) in synced[:m], rel
+    assert synced[m + 1:m + 3] == [d, os.path.dirname(d)]

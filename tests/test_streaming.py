@@ -9,6 +9,8 @@ import os
 import shutil
 import tempfile
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from iot_etl_spark.streaming.pipeline import (
@@ -185,6 +187,113 @@ def test_checkpoint_restart_resumes_incrementally(spark):
         ).collect()
         assert len(rows) == 1  # one (window, event_type) group
         assert rows[0].reading_count == 2 and rows[0].max_value == 4.0
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+class _FailOnceTable:
+    """Duck-typed upsert-sink table that raises once on ``epoch``:
+    before delegating (nothing staged), or after the real
+    ``TxTable.append_batch`` committed but before Spark writes the
+    epoch's commit-log entry."""
+
+    def __init__(self, table, epoch: int, after_commit: bool) -> None:
+        self.table, self.epoch, self.after_commit = table, epoch, after_commit
+        self.fired = False
+
+    def append_batch(self, df, batch_id, ledger_id=None):
+        fire = batch_id == self.epoch and not self.fired
+        if fire and not self.after_commit:
+            self.fired = True
+            raise RuntimeError(f"injected before staging epoch {batch_id}")
+        v = self.table.append_batch(df, batch_id, ledger_id=ledger_id)
+        if fire:
+            self.fired = True
+            raise RuntimeError(f"injected after committing epoch {batch_id}")
+        return v
+
+
+@pytest.mark.parametrize("after_commit", [False, True], ids=["before_stage", "after_commit"])
+def test_upsert_sink_restarts_after_injected_fault(spark, after_commit):
+    """A fault inside foreachBatch on epoch 1, before anything is
+    staged or after the table commit but before the checkpoint's
+    commit log, fails the query; restarting the sink on the same
+    checkpoint re-runs epoch 1 and resumes. The resolved table equals
+    a batch aggregate of every event, each epoch is committed once,
+    and no data file is left unreferenced. Epoch 2 updates groups of
+    epochs 0 and 1, so the match also shows that the state the re-run
+    epoch 1 left (deltas written afresh, or kept from the first
+    attempt after a post-commit fault) is what the batch computes."""
+    from pyspark.errors import StreamingQueryException
+
+    from iot_etl_spark.streaming.pipeline import read_upserted, start_txlog_upsert_sink
+    from iot_etl_spark.warehouse.txlog import TxTable
+
+    tmp = tempfile.mkdtemp(prefix="iot_etl_fault_")
+    try:
+        base = datetime.datetime(2024, 1, 4, 8, 0, 0)
+        sec = datetime.timedelta(seconds=1)
+        schema = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
+        batches = [
+            [(1, base, 1, "view", 1.0, None), (2, base + 70 * sec, 1, "click", 2.5, None)],
+            # updates both groups of epoch 0 and opens a new window
+            [(3, base + 10 * sec, 2, "view", 3.0, None),
+             (4, base + 75 * sec, 2, "click", 0.5, None),
+             (5, base + 130 * sec, 3, "error", 9.0, None)],
+            [(6, base + 20 * sec, 3, "view", 4.25, None), (7, base + 140 * sec, 1, "error", 1.0, None)],
+        ]
+        src_dir = os.path.join(tmp, "src")
+        os.makedirs(src_dir)
+
+        def add_batch(i):
+            # one file, moved in whole, so each write is exactly one epoch
+            staged = os.path.join(tmp, f"staged{i}")
+            spark.createDataFrame(batches[i], schema).coalesce(1).withColumn(
+                "ts", F.expr("CAST(unix_micros(ts) * 1000 AS LONG)")
+            ).write.parquet(staged)
+            os.rename(staged, os.path.join(src_dir, f"b{i}"))
+
+        table, ckpt = TxTable(os.path.join(tmp, "serve")), os.path.join(tmp, "ckpt")
+        keys = ("window_start", "window_end", "event_type")
+
+        def start(sink_table):
+            stream = read_stream_source(spark, "parquet", path=src_dir + "/*")
+            agg = windowed_aggregate(stream, window="1 minute", watermark=None)
+            return start_txlog_upsert_sink(agg, sink_table, ckpt, trigger_seconds=1)
+
+        add_batch(0)
+        q = start(_FailOnceTable(table, epoch=1, after_commit=after_commit))
+        try:
+            q.processAllAvailable()
+            add_batch(1)
+            with pytest.raises(StreamingQueryException, match="injected"):
+                q.processAllAvailable()
+        finally:
+            q.stop()
+        committed = [h["batch_id"] for h in table.history()]
+        assert committed == ([0, 1] if after_commit else [0])
+        # the post-commit fault comes after epoch 1's state deltas
+        # were committed, so the re-run meets them on disk
+        deltas = glob.glob(os.path.join(ckpt, "state", "0", "*", "2.delta"))
+        assert bool(deltas) == after_commit
+
+        q = start(table)
+        try:
+            q.processAllAvailable()
+            add_batch(2)
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+        history = table.history()
+        assert [h["batch_id"] for h in history] == [0, 1, 2]
+        assert all(h["n_added"] >= 1 for h in history)
+        all_events = spark.createDataFrame([r for b in batches for r in b], schema)
+        expected = windowed_aggregate(all_events, window="1 minute", watermark=None)
+        got = read_upserted(spark, table, keys)
+        assert sorted(got.collect()) == sorted(expected.collect())
+        live = {os.path.basename(f) for f in table.snapshot_files()}
+        assert set(os.listdir(table.data_dir)) == live
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -9,6 +9,7 @@ text analysis, JSON props) designed for 100 TB scale.
 Layout:
     session.py    SparkSession factory + runtime conf guard
     schemas.py    canonical StructType contracts
+    durable.py    fsync by path (txlog commits, stage-cache markers)
     sources/      table loaders (parquet) + streaming sources
     operators/    enrichment joins, time features, rolling windows,
                   anomaly detection, quality gating, latest-per-key,

@@ -42,6 +42,8 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from iot_etl_spark.durable import fsync
+
 _CACHE_ROOT = "/tmp/iot_etl_stages"
 _TAG_LEN = 12
 
@@ -148,15 +150,6 @@ def _sweep_orphan_stagings(root: str) -> list[str]:
     return removed
 
 
-def _fsync(path: str) -> None:
-    """fsync one file or directory by path."""
-    fd = os.open(path, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
-
-
 def _fsync_tree(root: str) -> None:
     """fsync every regular file under ``root``, then every directory
     bottom-up (``root`` last), so the data and the names that reach it
@@ -167,7 +160,7 @@ def _fsync_tree(root: str) -> None:
         paths = [p for p in (os.path.join(d, f) for f in files) if os.path.isfile(p)]
         for p in (*paths, d):
             with contextlib.suppress(FileNotFoundError):
-                _fsync(p)
+                fsync(p)
 
 
 def sf_family(name: str, sf_dir: str) -> str:
@@ -240,8 +233,8 @@ def keyed_dir(
             fh.write(tag)
             fh.flush()
             os.fsync(fh.fileno())
-        _fsync(path)
-        _fsync(os.path.dirname(path))
+        fsync(path)
+        fsync(os.path.dirname(path))
     evict_stale_tags(_CACHE_ROOT, family, tag)
 
 
@@ -347,7 +340,7 @@ def cached_stage(
                             os.rename(staging, path)
                         except OSError:
                             pass
-                _fsync(_CACHE_ROOT)
+                fsync(_CACHE_ROOT)
             finally:
                 shutil.rmtree(staging, ignore_errors=True)
             evict_stale_tags(_CACHE_ROOT, family, tag)

@@ -426,11 +426,14 @@ def start_txlog_upsert_sink(
     create_stream_tables.sql:19-23).
 
     Each micro-batch's changed groups are appended to the
-    transactional table with the epoch id stamped in ``_upsert_seq``;
-    the current value of every key is resolved at read time by
-    ``read_upserted`` (highest-seq row wins). Sink I/O is therefore
-    O(1) per micro-batch — one staged parquet file + one atomic log
-    commit — regardless of how many groups changed, and the
+    transactional table with the epoch id stamped in ``_upsert_seq``
+    (``append_batch``'s ``batch_id_col``: on the driver staging path
+    the column is added after ``toArrow()``, so the micro-batch plan
+    holds no per-epoch literal and its generated code is reused from
+    the codegen cache); the current value of every key is resolved at
+    read time by ``read_upserted`` (highest-seq row wins). Sink I/O
+    is therefore O(1) per micro-batch — one staged parquet file + one
+    atomic log commit — regardless of how many groups changed, and the
     append_batch ledger upgrades replays to exactly-once. Nothing
     compacts automatically: the caller runs the table's OPTIMIZE, and
     superseded versions age out via vacuum. With a real table format
@@ -440,9 +443,7 @@ def start_txlog_upsert_sink(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         v = table.append_batch(
-            batch_df.withColumn(UPSERT_SEQ_COL, F.lit(batch_id)),
-            batch_id,
-            ledger_id=ledger_id,
+            batch_df, batch_id, ledger_id=ledger_id, batch_id_col=UPSERT_SEQ_COL
         )
         if v is None:
             # replay recognized BEFORE staging: the batch DataFrame was
@@ -462,16 +463,54 @@ def read_upserted(spark: SparkSession, table, key_cols: tuple[str, ...]) -> Data
     """Resolve a ``start_txlog_upsert_sink`` table to its current
     state: per group key, the row from the LATEST micro-batch wins
     (update-mode re-emits the full aggregate row for a changed group,
-    so later strictly supersedes earlier). One window over the
-    serving table, whose cardinality is bounded by keys x batches
-    that touched them: already aggregate-sized, never event-sized.
+    so later strictly supersedes earlier). The serving table's
+    cardinality is bounded by keys x batches that touched them:
+    already aggregate-sized, never event-sized.
+
+    Two paths, same rows and schema:
+    - a snapshot that ``TxTable.read_local`` serves (on-disk bytes
+      within ``spark.sql.autoBroadcastJoinThreshold``, the cut-off the
+      sink's staging already uses) whose keys are all atomic and not
+      floating is resolved in Arrow on the driver and returned as a
+      local relation: no Spark job until the caller's action. Floating
+      keys take the window because Arrow groups 0.0 and -0.0 apart
+      where Spark merges them; Arrow cannot group nested keys;
+    - any other snapshot is one window over a scan of the live files.
 
     Cost: the sink adds one file per commit and nothing here compacts
-    them, so the scan (one task per live file) and the window grow
-    with the number of commits until the caller runs
-    ``table.optimize`` or the sink gains its own compaction."""
+    them. On the driver path a read costs one footer and one column
+    read per live file; the window path pays one scan task per live
+    file plus a shuffle. With one 35-row file per commit (``local[2]``
+    on 4 vCPUs) a read into the noop sink took 0.12 s at 10 commits
+    and 0.21 s at 200 on the driver path, 0.43 s and 1.99 s on the
+    window path. Either grows with the number of commits until the
+    caller runs ``table.optimize`` or the sink gains its own
+    compaction."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql import Window as W
+    from pyspark.sql import types as T
 
+    local = table.read_local(spark)
+    if local is not None:
+        data, schema = local
+        types = {f.name: f.dataType for f in schema.fields}
+        if all(
+            k in types
+            and not isinstance(
+                types[k], (T.FloatType, T.DoubleType, T.StructType, T.ArrayType, T.MapType)
+            )
+            for k in key_cols
+        ):
+            # stable sort by seq, then the last row index per key is
+            # the row of its highest seq
+            data = data.take(pc.sort_indices(data, [(UPSERT_SEQ_COL, "ascending")]))
+            data = data.append_column("_i", pa.array(range(data.num_rows), pa.int64()))
+            last = data.group_by(list(key_cols), use_threads=False).aggregate([("_i", "max")])
+            data = data.take(last.column("_i_max")).drop_columns(["_i", UPSERT_SEQ_COL])
+            return spark.createDataFrame(
+                data, T.StructType([f for f in schema.fields if f.name != UPSERT_SEQ_COL])
+            )
     w = W.partitionBy(*key_cols).orderBy(F.desc(UPSERT_SEQ_COL))
     return (
         table.read(spark)

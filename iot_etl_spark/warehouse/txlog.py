@@ -24,8 +24,9 @@ Design (the standard log-structured table layout):
   - anything larger (or a ``-1`` threshold) takes the distributed
     ``df.write.parquet`` into a staging dir whose parts are then moved
     into data/.
-  Either way a crash mid-write leaves only unreferenced files, which
-  vacuum's age gate removes.
+  Either way every added file and data/ are fsynced before the commit,
+  and a crash mid-write leaves only unreferenced files, which vacuum's
+  age gate removes.
 - The log is ``<table>/_txlog/<version 8-digit>.json``, one entry per
   commit: operation, files added, files logically removed, and for
   schema-bearing commits the exact Spark schema. Every piece of table
@@ -48,7 +49,11 @@ Design (the standard log-structured table layout):
   commits are invisible (snapshot isolation). Evolution only adds
   columns, so files written before a widening read them as NULL.
   ``version=`` pins any historical snapshot (time travel), enabling
-  reproducible training runs over evolving corpora.
+  reproducible training runs over evolving corpora. ``read_local`` is
+  the read twin of Arrow staging, under the same cut-off: a snapshot
+  whose on-disk bytes are within the threshold is read by pyarrow on
+  the driver and cast to the logged schema, with no Spark job (the
+  upsert sink's ``read_upserted`` resolves its serving table this way).
 - **Vacuum** deletes data files referenced by NO retained version —
   physical deletion is decoupled from logical (an ``overwrite`` only
   marks files removed, so time travel keeps working until vacuum).
@@ -79,6 +84,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from iot_etl_spark.durable import fsync
+
 
 class ConcurrentCommitError(RuntimeError):
     """Another writer committed this version first; re-read and retry."""
@@ -92,8 +99,8 @@ class SchemaMismatchError(ValueError):
     """Appended frame's schema conflicts with the table schema."""
 
 
-def _schema_sig(df: DataFrame) -> dict[str, str]:
-    return {f.name: f.dataType.simpleString() for f in df.schema.fields}
+def _schema_sig(schema: T.StructType) -> dict[str, str]:
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
 
 
 def _versions(log_names: list[str]) -> list[int]:
@@ -125,15 +132,44 @@ def _parquet_via_arrow(dt: T.DataType) -> bool:
     return isinstance(dt, _ARROW_ATOMIC)
 
 
+def _driver_limit(spark: SparkSession) -> int:
+    """The most bytes a write or a read moves through the driver:
+    ``spark.sql.autoBroadcastJoinThreshold``, the cut-off Spark already
+    uses to pull a frame through the driver for a broadcast. Negative
+    disables both driver paths, as it disables broadcasts."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
 def _fits_driver(df: DataFrame) -> bool:
     """Whether ``df`` is staged through the driver: its optimizer size
-    estimate is at or under ``spark.sql.autoBroadcastJoinThreshold``
-    (negative disables, as it does broadcasts) and its schema
-    round-trips through Arrow."""
-    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    estimate is within ``_driver_limit`` and its schema round-trips
+    through Arrow."""
+    limit = _driver_limit(df.sparkSession)
     if limit < 0 or not _parquet_via_arrow(df.schema):
         return False
     return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= limit
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable: the schema
+    a file scan reports for a user-given ``dt`` (Spark's
+    ``asNullable``)."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _stamp_field(name: str, value: int) -> T.StructField:
+    """The field ``withColumn(name, F.lit(value))`` adds: non-null,
+    ``int`` when ``value`` fits 32 bits and ``bigint`` otherwise."""
+    dt = T.IntegerType() if -(2**31) <= value < 2**31 else T.LongType()
+    return T.StructField(name, dt, False)
 
 
 _COMMIT_RETRIES = 3  # lost version races an append retries before raising
@@ -314,11 +350,7 @@ class TxTable:
             os.link(tmp, target)
             # the new name itself must survive an OS crash: a caller
             # (the streaming sink) moves on once this returns
-            dfd = os.open(self.log_dir, os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
+            fsync(self.log_dir)
         except FileExistsError as exc:
             raise ConcurrentCommitError(
                 f"version {version} was committed concurrently"
@@ -329,30 +361,53 @@ class TxTable:
         return version
 
     # ---------------------------------------------------------- write
-    def _stage(self, df: DataFrame) -> list[str]:
-        """Write ``df`` into data/ under commit-unique names. A frame
-        that fits the driver (``_fits_driver``) becomes exactly one
-        pyarrow-written file; any other goes through a distributed
-        write to a staging dir whose parts are moved in. Files are
-        INVISIBLE until a log entry references them — a crash here
-        leaves only orphans for vacuum."""
+    def _stage(
+        self, df: DataFrame, stamp: tuple[T.StructField, int] | None = None
+    ) -> list[str]:
+        """Write ``df`` into data/ under commit-unique names, with the
+        constant column ``stamp`` = (field, value) appended if given, as
+        ``withColumn(field.name, F.lit(value))`` would add it. A frame that
+        fits the driver (``_fits_driver``) becomes exactly one
+        pyarrow-written file, the stamp appended after ``toArrow()``
+        (a literal in the plan would be compiled into new generated
+        code on every distinct value); any other goes through a
+        distributed write to a staging dir whose parts are moved in.
+        Every added file and data/ are fsynced before this returns, so
+        a version that names them never outlives them in an OS crash.
+        Files are INVISIBLE until a log entry references them — a crash
+        here leaves only orphans for vacuum."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql import functions as F
+        from pyspark.sql.pandas.types import to_arrow_type
 
         tag = uuid.uuid4().hex[:12]
         if _fits_driver(df):
-            name = f"{tag}-00000.parquet"
-            pq.write_table(df.toArrow(), os.path.join(self.data_dir, name))
-            return [name]
-        staging = os.path.join(self.path, f"_staging_{tag}")
-        df.write.mode("overwrite").parquet(staging)
-        names = []
-        for i, f in enumerate(sorted(os.listdir(staging))):
-            if not f.endswith(".parquet"):
-                continue
-            name = f"{tag}-{i:05d}.parquet"
-            shutil.move(os.path.join(staging, f), os.path.join(self.data_dir, name))
-            names.append(name)
-        shutil.rmtree(staging)
+            table = df.toArrow()
+            if stamp is not None:
+                field, value = stamp
+                arrow_type = to_arrow_type(field.dataType)
+                table = table.append_column(
+                    pa.field(field.name, arrow_type, nullable=False),
+                    pa.repeat(pa.scalar(value, arrow_type), table.num_rows),
+                )
+            names = [f"{tag}-00000.parquet"]
+            pq.write_table(table, os.path.join(self.data_dir, names[0]))
+        else:
+            if stamp is not None:
+                df = df.withColumn(stamp[0].name, F.lit(stamp[1]))
+            staging = os.path.join(self.path, f"_staging_{tag}")
+            df.write.mode("overwrite").parquet(staging)
+            names = []
+            for i, f in enumerate(sorted(os.listdir(staging))):
+                if not f.endswith(".parquet"):
+                    continue
+                name = f"{tag}-{i:05d}.parquet"
+                shutil.move(os.path.join(staging, f), os.path.join(self.data_dir, name))
+                names.append(name)
+            shutil.rmtree(staging)
+        for p in (*self._paths(names), self.data_dir):
+            fsync(p)
         return names
 
     def _discard(self, added: list[str]) -> None:
@@ -361,17 +416,21 @@ class TxTable:
             with contextlib.suppress(FileNotFoundError):
                 os.remove(os.path.join(self.data_dir, f))
 
+    @staticmethod
+    def _schema(s: _Snapshot) -> T.StructType:
+        """The Spark schema the log recorded at ``s``'s version."""
+        if s.read_schema is None:
+            raise ValueError(f"no commit up to version {s.version} records a schema")
+        if isinstance(s.read_schema, dict):
+            return T.StructType.fromJson(s.read_schema)
+        return T.StructType.fromDDL(s.read_schema)
+
     def _scan(self, spark: SparkSession, s: _Snapshot) -> DataFrame:
         """Read the live files of ``s`` with the schema the log recorded
         at that version — no footer inference and no schema-merge job.
         Files written before an evolution read the added columns as
         NULL."""
-        if s.read_schema is None:
-            raise ValueError(f"no commit up to version {s.version} records a schema")
-        schema = s.read_schema
-        if isinstance(schema, dict):
-            schema = T.StructType.fromJson(schema)
-        return spark.read.schema(schema).parquet(*self._paths(s.files))
+        return spark.read.schema(self._schema(s)).parquet(*self._paths(s.files))
 
     # ----------------------------------------------- CHECK constraints
     def constraints(self) -> dict[str, str]:
@@ -515,6 +574,7 @@ class TxTable:
         batch_id: int | None,
         ledger_id: str | None = None,
         allow_evolution: bool = False,
+        batch_id_col: str | None = None,
     ) -> int | None:
         """ACID append: stage files, then one atomic commit at the
         version planned from the read snapshot. Appends commute, so a
@@ -548,18 +608,31 @@ class TxTable:
         the re-derived snapshot after a lost race also re-reads the
         ledger — if the winning commit claimed this (ledger, batch)
         key, the replay is recognized, the loser's staged files (which
-        no entry references) are removed, and the retry abandoned."""
+        no entry references) are removed, and the retry abandoned.
+
+        With ``batch_id_col`` every row carries ``batch_id`` in that
+        appended column, logged exactly as ``withColumn(batch_id_col,
+        F.lit(batch_id))`` would log it (non-null ``int`` below 2^31);
+        on the driver staging path the column is added after
+        collection, so the plan holds no per-batch literal. Raises
+        ValueError if ``df`` already has the column."""
         s = self._replay()
         if s.claimed(batch_id, ledger_id):
             return None
-        sig = _schema_sig(df)
+        schema, stamp = df.schema, None
+        if batch_id_col is not None:
+            if batch_id_col.lower() in (c.lower() for c in df.columns):
+                raise ValueError(f"append_batch stamps {batch_id_col!r}; the frame already has it")
+            stamp = (_stamp_field(batch_id_col, batch_id), batch_id)
+            schema = T.StructType([*schema.fields, stamp[0]])
+        sig = _schema_sig(schema)
         _check_sig(s.schema, sig, allow_evolution)
-        added = self._stage(df)
+        added = self._stage(df, stamp)
         self._enforce_constraints(df.sparkSession, s.constraints, added)
         entry = {"op": "append", "added": added, "removed": []}
         if batch_id is not None:
             entry.update(batch_id=batch_id, ledger_id=ledger_id)
-        entry.update(schema=sig, spark_schema=df.schema.jsonValue())
+        entry.update(schema=sig, spark_schema=schema.jsonValue())
         for _ in range(_COMMIT_RETRIES + 1):
             try:
                 return self._commit(entry, s.next_version)
@@ -583,7 +656,7 @@ class TxTable:
         return self._commit(
             # overwrite may redefine the schema
             {"op": "overwrite", "added": added, "removed": s.files,
-             "schema": _schema_sig(df), "spark_schema": df.schema.jsonValue()},
+             "schema": _schema_sig(df.schema), "spark_schema": df.schema.jsonValue()},
             s.next_version,
         )
 
@@ -596,6 +669,51 @@ class TxTable:
         if not s.files:
             raise ValueError("table has no committed data")
         return self._scan(spark, s)
+
+    def read_local(
+        self, spark: SparkSession, version: int | None = None
+    ) -> tuple[pa.Table, T.StructType] | None:
+        """Snapshot read through the driver, the mirror of ``_stage``'s
+        Arrow path: when the live files' on-disk bytes are within
+        ``_driver_limit`` and the logged schema round-trips through
+        Arrow, pyarrow reads each file and casts it to that schema
+        (columns a file predates are NULL; INT96 timestamps from the
+        distributed path become µs instants). Returns the table and the
+        schema ``read`` would report (every field nullable, as a file
+        scan makes it), or None when the snapshot does not fit; no
+        Spark job runs either way. Same errors as ``read``."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        s = self._replay(version)
+        if not s.files:
+            raise ValueError("table has no committed data")
+        schema = _as_nullable(self._schema(s))
+        limit = _driver_limit(spark)
+        paths = self._paths(s.files)
+        if (
+            limit < 0
+            or not _parquet_via_arrow(schema)
+            or sum(os.path.getsize(p) for p in paths) > limit
+        ):
+            return None
+        target = to_arrow_schema(schema)
+        parts = []
+        for p in paths:
+            part = pq.ParquetFile(p, coerce_int96_timestamp_unit="us").read()
+            parts.append(
+                pa.Table.from_arrays(
+                    [
+                        part.column(f.name).cast(f.type)
+                        if f.name in part.column_names
+                        else pa.nulls(part.num_rows, f.type)
+                        for f in target
+                    ],
+                    schema=target,
+                )
+            )
+        return pa.concat_tables(parts), schema
 
     def optimize(self, spark: SparkSession, target_files: int = 1) -> int | None:
         """OPTIMIZE: rewrite the current snapshot's files into at most

@@ -8,6 +8,7 @@ import glob
 import os
 import shutil
 import tempfile
+from contextlib import contextmanager
 
 import pytest
 
@@ -201,12 +202,12 @@ class _FailOnceTable:
         self.table, self.epoch, self.after_commit = table, epoch, after_commit
         self.fired = False
 
-    def append_batch(self, df, batch_id, ledger_id=None):
+    def append_batch(self, df, batch_id, **kwargs):
         fire = batch_id == self.epoch and not self.fired
         if fire and not self.after_commit:
             self.fired = True
             raise RuntimeError(f"injected before staging epoch {batch_id}")
-        v = self.table.append_batch(df, batch_id, ledger_id=ledger_id)
+        v = self.table.append_batch(df, batch_id, **kwargs)
         if fire:
             self.fired = True
             raise RuntimeError(f"injected after committing epoch {batch_id}")
@@ -1375,5 +1376,259 @@ def test_quarantine_sink_widens_preexisting_dlq_schema(spark):
         assert tagged == [(2, "value_nonneg")]
         # the pre-evolution seed row reads back with a NULL tag
         assert [r.violated for r in bad if r.event_id == 0] == [None]
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+# ------------------------------------------- read_upserted's two paths
+_UPSERT_KEYS = ("window_start", "window_end", "event_type")
+_EVENTS_DDL = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
+
+
+@contextmanager
+def _threshold(spark, value: str):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _is_local(df) -> bool:
+    return df._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+
+
+def _assert_paths_agree(spark, t, keys) -> list:
+    """``read_upserted`` through the driver and, forced by a -1
+    threshold, through the window: equal schemas and equal sign-aware
+    canonical rows. Returns the driver path's rows."""
+    from iot_etl_spark.streaming.pipeline import read_upserted
+    from tests.oracle import canonical_rows
+
+    driver = read_upserted(spark, t, keys)
+    assert _is_local(driver)
+    with _threshold(spark, "-1"):
+        assert t.read_local(spark) is None
+        window = read_upserted(spark, t, keys)
+        assert not _is_local(window)
+        want = window.toPandas()
+    got = driver.toPandas()
+    assert driver.schema == window.schema
+    assert canonical_rows(got) == canonical_rows(want)
+    return driver.collect()
+
+
+class _StreamHarness:
+    """A file source of one-file micro-batches and an upsert sink over
+    a watermark-free one-minute aggregate."""
+
+    def __init__(self, spark, tmp: str) -> None:
+        self.spark, self.tmp, self.n = spark, tmp, 0
+        self.src = os.path.join(tmp, "src")
+        os.makedirs(self.src)
+
+    def add(self, rows) -> None:
+        staged = os.path.join(self.tmp, f"staged{self.n}")
+        self.spark.createDataFrame(rows, _EVENTS_DDL).coalesce(1).withColumn(
+            "ts", F.expr("CAST(unix_micros(ts) * 1000 AS LONG)")
+        ).write.parquet(staged)
+        os.rename(staged, os.path.join(self.src, f"b{self.n}"))
+        self.n += 1
+
+    def start(self, table, ckpt: str):
+        from iot_etl_spark.streaming.pipeline import start_txlog_upsert_sink
+
+        stream = read_stream_source(self.spark, "parquet", path=self.src + "/*")
+        agg = windowed_aggregate(stream, window="1 minute", watermark=None)
+        return start_txlog_upsert_sink(agg, table, os.path.join(self.tmp, ckpt), trigger_seconds=1)
+
+
+def _events(base, k: int):
+    sec = datetime.timedelta(seconds=1)
+    return [
+        (10 * k + 1, base + (5 + k) * sec, 1, "view", float(k), None),
+        (10 * k + 2, base + (70 + k) * sec, 2, ["click", "error"][k % 2], -0.0, None),
+        (10 * k + 3, base + (130 * (k % 2)) * sec, 3, "view", 2.5 * k, None),
+    ]
+
+
+def test_read_upserted_paths_agree_on_sink_table_and_after_optimize(spark):
+    """A multi-commit sink table resolves to the same schema and rows
+    through Arrow on the driver and through the window, and again once
+    ``optimize`` has compacted it into one file."""
+    from iot_etl_spark.warehouse.txlog import TxTable
+
+    tmp = tempfile.mkdtemp(prefix="iot_etl_upread_")
+    try:
+        h = _StreamHarness(spark, tmp)
+        t = TxTable(os.path.join(tmp, "serve"))
+        base = datetime.datetime(2024, 1, 5, 9, 0, 0)
+        h.add(_events(base, 0))  # the file source takes its schema from a first file
+        q = h.start(t, "ckpt")
+        try:
+            q.processAllAvailable()
+            for k in range(1, 4):
+                h.add(_events(base, k))
+                q.processAllAvailable()
+        finally:
+            q.stop()
+        assert len(t.snapshot_files()) == 4
+        before = _assert_paths_agree(spark, t, _UPSERT_KEYS)
+        assert t.optimize(spark) is not None and len(t.snapshot_files()) == 1
+        assert sorted(_assert_paths_agree(spark, t, _UPSERT_KEYS)) == sorted(before)
+        all_events = spark.createDataFrame([r for k in range(4) for r in _events(base, k)], _EVENTS_DDL)
+        expected = windowed_aggregate(all_events, window="1 minute", watermark=None)
+        assert sorted(before) == sorted(expected.collect())
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_read_upserted_paths_agree_across_evolution_int96_and_null_keys(spark, tmp_path):
+    """A snapshot mixing a file written before an ``allow_evolution``
+    widening, a part staged by the distributed path (INT96 timestamps,
+    decimals) and a null key resolves the same on both paths; a later
+    commit's row wins for a key first written as INT96."""
+    from decimal import Decimal
+
+    from iot_etl_spark.streaming.pipeline import UPSERT_SEQ_COL
+    from iot_etl_spark.warehouse.txlog import TxTable
+
+    ts = datetime.datetime(2024, 3, 1, 12, 30, 45, 123456)
+    ddl = "k STRING, at TIMESTAMP, amt DECIMAL(10,2), big DECIMAL(38,10), v DOUBLE"
+
+    def frame(rows, ddl=ddl):
+        path = str(tmp_path / f"src{len(os.listdir(tmp_path))}")
+        spark.createDataFrame(rows, ddl).write.parquet(path)
+        return spark.read.schema(ddl).parquet(path)
+
+    t = TxTable(str(tmp_path / "tx"))
+    t.append_batch(
+        frame([("a", ts, Decimal("1.25"), Decimal("1.0000000001"), 1.0),
+               (None, ts, Decimal("2.50"), None, -0.0),
+               ("b", None, None, None, None)]),
+        0, batch_id_col=UPSERT_SEQ_COL,
+    )
+    with _threshold(spark, "-1"):  # INT96 timestamps, decimals from Spark's writer
+        t.append_batch(
+            frame([("a", ts, Decimal("3.75"), Decimal("-2.5"), -0.0),
+                   (None, ts, Decimal("4.00"), Decimal("0"), 4.0)]),
+            1, batch_id_col=UPSERT_SEQ_COL,
+        )
+    t.append_batch(
+        frame([("b", None, Decimal("5.00"), None, 5.0, "new"),
+               ("c", ts, None, None, None, None)], ddl + ", w STRING"),
+        2, allow_evolution=True, batch_id_col=UPSERT_SEQ_COL,
+    )
+    assert t.read_local(spark) is not None
+    rows = {(r.k, r.at): r for r in _assert_paths_agree(spark, t, ("k", "at"))}
+    assert len(rows) == 4
+    assert rows[("a", ts)].amt == Decimal("3.75") and rows[("a", ts)].w is None
+    assert rows[(None, ts)].v == 4.0
+    assert rows[("b", None)].w == "new"
+
+
+def test_read_upserted_floating_keys_take_the_window(spark, tmp_path):
+    """Spark merges 0.0 with -0.0 and every NaN with every other NaN;
+    Arrow groups 0.0 and -0.0 apart. A double key therefore resolves
+    through the window even when the snapshot fits the driver."""
+    from iot_etl_spark.streaming.pipeline import UPSERT_SEQ_COL, read_upserted
+    from iot_etl_spark.warehouse.txlog import TxTable
+
+    t = TxTable(str(tmp_path / "tx"))
+    nan = float("nan")
+    for seq, rows in enumerate([[(-0.0, "old"), (nan, "old")], [(0.0, "new"), (nan, "new")]]):
+        path = str(tmp_path / f"src{seq}")
+        spark.createDataFrame(rows, "d DOUBLE, v STRING").write.parquet(path)
+        t.append_batch(spark.read.parquet(path), seq, batch_id_col=UPSERT_SEQ_COL)
+    assert t.read_local(spark) is not None
+    got = read_upserted(spark, t, ("d",))
+    assert not _is_local(got)
+    assert sorted(r.v for r in got.collect()) == ["new", "new"]
+
+
+def test_sink_stamp_logs_the_literal_schema_and_extends_old_tables(spark):
+    """The sink's commits log the ``schema`` and ``spark_schema`` that
+    stamping with ``withColumn(_upsert_seq, F.lit(epoch))`` logged, and
+    a table started that way keeps taking sink commits and resolves to
+    the same rows as a table the sink wrote throughout."""
+    import json
+
+    from iot_etl_spark.streaming.pipeline import UPSERT_SEQ_COL, read_upserted
+    from iot_etl_spark.warehouse.txlog import TxTable
+
+    class LiteralStamp:
+        """The sink's table as the literal-stamping sink fed it."""
+
+        def __init__(self, table) -> None:
+            self.table = table
+
+        def append_batch(self, df, batch_id, ledger_id=None, batch_id_col=None):
+            return self.table.append_batch(
+                df.withColumn(batch_id_col, F.lit(batch_id)), batch_id, ledger_id=ledger_id
+            )
+
+    tmp = tempfile.mkdtemp(prefix="iot_etl_stamp_")
+    try:
+        h = _StreamHarness(spark, tmp)
+        new, old = TxTable(os.path.join(tmp, "new")), TxTable(os.path.join(tmp, "old"))
+        base = datetime.datetime(2024, 1, 6, 9, 0, 0)
+        for k in range(2):
+            h.add(_events(base, k))
+        for table, ckpt in ((new, "ck_new"), (LiteralStamp(old), "ck_old")):
+            q = h.start(table, ckpt)
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+        entries = [(new._entry(v), old._entry(v)) for v in old.versions()]
+        assert entries
+        for e_new, e_old in entries:
+            assert json.dumps(e_new["schema"]) == json.dumps(e_old["schema"])
+            assert json.dumps(e_new["spark_schema"]) == json.dumps(e_old["spark_schema"])
+        stamp = e_new["spark_schema"]["fields"][-1]
+        assert stamp == {"name": UPSERT_SEQ_COL, "type": "integer", "nullable": False, "metadata": {}}
+
+        h.add(_events(base, 2))
+        for table, ckpt in ((new, "ck_new"), (old, "ck_old")):
+            q = h.start(table, ckpt)
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+        assert [e["batch_id"] for e in old.history()] == [e["batch_id"] for e in new.history()]
+        assert sorted(read_upserted(spark, old, _UPSERT_KEYS).collect()) == sorted(
+            read_upserted(spark, new, _UPSERT_KEYS).collect()
+        )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_upsert_sink_compiles_no_code_per_micro_batch(spark):
+    """Once warm, each micro-batch of a watermark-free aggregate into
+    the upsert sink reuses its generated code: Janino's compile count
+    does not move. A per-epoch literal in the plan would compile new
+    classes every batch."""
+    from iot_etl_spark.warehouse.txlog import TxTable
+
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    tmp = tempfile.mkdtemp(prefix="iot_etl_codegen_")
+    try:
+        h = _StreamHarness(spark, tmp)
+        base = datetime.datetime(2024, 1, 7, 9, 0, 0)
+        h.add(_events(base, 0))
+        q = h.start(TxTable(os.path.join(tmp, "serve")), "ckpt")
+        try:
+            q.processAllAvailable()
+            deltas = []
+            for k in range(1, 6):
+                h.add(_events(base, k))
+                before = metric.getCount()
+                q.processAllAvailable()
+                deltas.append(metric.getCount() - before)
+        finally:
+            q.stop()
+        assert deltas[2:] == [0, 0, 0], deltas
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

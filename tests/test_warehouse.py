@@ -882,3 +882,40 @@ def test_txlog_reads_log_without_spark_schema(spark, tmp_path, staging):
     t.optimize(spark)
     assert len(t.snapshot_files()) == 1
     assert sorted(t.read(spark).collect()) == everything
+
+
+def test_txlog_staged_files_are_synced_before_the_version(spark, tmp_path, staging, monkeypatch):
+    """Every file a commit adds and the data/ directory are fsynced
+    before the version file is linked into _txlog/, on both staging
+    paths, so a durable version never names a part an OS crash lost."""
+    import json
+
+    from iot_etl_spark.warehouse.txlog import TxTable
+
+    t = TxTable(str(tmp_path / "tx"))
+    df = _frame(spark, tmp_path, [(i, str(i)) for i in range(20)], "k INT, v STRING")
+    events = []
+    real_fsync, real_link = os.fsync, os.link
+
+    def fsync(fd):
+        events.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        real_fsync(fd)
+
+    def link(src, dst):
+        events.append(("link", os.path.realpath(dst)))
+        real_link(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "link", link)
+    v = t.append(df.repartition(3) if staging == "distributed" else df)
+    monkeypatch.undo()
+    version_file = os.path.realpath(os.path.join(t.log_dir, f"{v:08d}.json"))
+    links = [i for i, e in enumerate(events) if e == ("link", version_file)]
+    assert len(links) == 1
+    synced_before = {e[1] for e in events[: links[0]] if e[0] == "fsync"}
+    with open(version_file) as fh:
+        added = json.load(fh)["added"]
+    assert len(added) == (1 if staging == "arrow" else 3)
+    for name in added:
+        assert os.path.realpath(os.path.join(t.data_dir, name)) in synced_before, name
+    assert os.path.realpath(t.data_dir) in synced_before

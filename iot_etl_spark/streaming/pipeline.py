@@ -426,14 +426,11 @@ def start_txlog_upsert_sink(
     create_stream_tables.sql:19-23).
 
     Each micro-batch's changed groups are appended to the
-    transactional table with the epoch id stamped in ``_upsert_seq``
-    (``append_batch``'s ``batch_id_col``: on the driver staging path
-    the column is added after ``toArrow()``, so the micro-batch plan
-    holds no per-epoch literal and its generated code is reused from
-    the codegen cache); the current value of every key is resolved at
-    read time by ``read_upserted`` (highest-seq row wins). Sink I/O
-    is therefore O(1) per micro-batch — one staged parquet file + one
-    atomic log commit — regardless of how many groups changed, and the
+    transactional table with the epoch id stamped in ``_upsert_seq``;
+    the current value of every key is resolved at read time by
+    ``read_upserted`` (highest-seq row wins). Sink I/O is therefore
+    O(1) per micro-batch — one staged parquet file + one atomic log
+    commit — regardless of how many groups changed, and the
     append_batch ledger upgrades replays to exactly-once. Nothing
     compacts automatically: the caller runs the table's OPTIMIZE, and
     superseded versions age out via vacuum. With a real table format
@@ -443,7 +440,9 @@ def start_txlog_upsert_sink(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         v = table.append_batch(
-            batch_df, batch_id, ledger_id=ledger_id, batch_id_col=UPSERT_SEQ_COL
+            batch_df.withColumn(UPSERT_SEQ_COL, F.lit(batch_id)),
+            batch_id,
+            ledger_id=ledger_id,
         )
         if v is None:
             # replay recognized BEFORE staging: the batch DataFrame was
@@ -491,26 +490,28 @@ def read_upserted(spark: SparkSession, table, key_cols: tuple[str, ...]) -> Data
     from pyspark.sql import Window as W
     from pyspark.sql import types as T
 
-    local = table.read_local(spark)
-    if local is not None:
-        data, schema = local
+    def atomic_keys(schema: T.StructType) -> bool:
         types = {f.name: f.dataType for f in schema.fields}
-        if all(
+        return all(
             k in types
             and not isinstance(
                 types[k], (T.FloatType, T.DoubleType, T.StructType, T.ArrayType, T.MapType)
             )
             for k in key_cols
-        ):
-            # stable sort by seq, then the last row index per key is
-            # the row of its highest seq
-            data = data.take(pc.sort_indices(data, [(UPSERT_SEQ_COL, "ascending")]))
-            data = data.append_column("_i", pa.array(range(data.num_rows), pa.int64()))
-            last = data.group_by(list(key_cols), use_threads=False).aggregate([("_i", "max")])
-            data = data.take(last.column("_i_max")).drop_columns(["_i", UPSERT_SEQ_COL])
-            return spark.createDataFrame(
-                data, T.StructType([f for f in schema.fields if f.name != UPSERT_SEQ_COL])
-            )
+        )
+
+    local = table.read_local(spark, accept=atomic_keys)
+    if local is not None:
+        data, schema = local
+        # stable sort by seq, then the last row index per key is the
+        # row of its highest seq
+        data = data.take(pc.sort_indices(data, [(UPSERT_SEQ_COL, "ascending")]))
+        data = data.append_column("_i", pa.array(range(data.num_rows), pa.int64()))
+        last = data.group_by(list(key_cols), use_threads=False).aggregate([("_i", "max")])
+        data = data.take(last.column("_i_max")).drop_columns(["_i", UPSERT_SEQ_COL])
+        return spark.createDataFrame(
+            data, T.StructType([f for f in schema.fields if f.name != UPSERT_SEQ_COL])
+        )
     w = W.partitionBy(*key_cols).orderBy(F.desc(UPSERT_SEQ_COL))
     return (
         table.read(spark)

@@ -80,6 +80,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -99,8 +100,8 @@ class SchemaMismatchError(ValueError):
     """Appended frame's schema conflicts with the table schema."""
 
 
-def _schema_sig(schema: T.StructType) -> dict[str, str]:
-    return {f.name: f.dataType.simpleString() for f in schema.fields}
+def _schema_sig(df: DataFrame) -> dict[str, str]:
+    return {f.name: f.dataType.simpleString() for f in df.schema.fields}
 
 
 def _versions(log_names: list[str]) -> list[int]:
@@ -163,13 +164,6 @@ def _as_nullable(dt: T.DataType) -> T.DataType:
     if isinstance(dt, T.MapType):
         return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
     return dt
-
-
-def _stamp_field(name: str, value: int) -> T.StructField:
-    """The field ``withColumn(name, F.lit(value))`` adds: non-null,
-    ``int`` when ``value`` fits 32 bits and ``bigint`` otherwise."""
-    dt = T.IntegerType() if -(2**31) <= value < 2**31 else T.LongType()
-    return T.StructField(name, dt, False)
 
 
 _COMMIT_RETRIES = 3  # lost version races an append retries before raising
@@ -361,41 +355,22 @@ class TxTable:
         return version
 
     # ---------------------------------------------------------- write
-    def _stage(
-        self, df: DataFrame, stamp: tuple[T.StructField, int] | None = None
-    ) -> list[str]:
-        """Write ``df`` into data/ under commit-unique names, with the
-        constant column ``stamp`` = (field, value) appended if given, as
-        ``withColumn(field.name, F.lit(value))`` would add it. A frame that
-        fits the driver (``_fits_driver``) becomes exactly one
-        pyarrow-written file, the stamp appended after ``toArrow()``
-        (a literal in the plan would be compiled into new generated
-        code on every distinct value); any other goes through a
-        distributed write to a staging dir whose parts are moved in.
-        Every added file and data/ are fsynced before this returns, so
-        a version that names them never outlives them in an OS crash.
-        Files are INVISIBLE until a log entry references them — a crash
-        here leaves only orphans for vacuum."""
-        import pyarrow as pa
+    def _stage(self, df: DataFrame) -> list[str]:
+        """Write ``df`` into data/ under commit-unique names. A frame
+        that fits the driver (``_fits_driver``) becomes exactly one
+        pyarrow-written file; any other goes through a distributed
+        write to a staging dir whose parts are moved in. Every added
+        file and data/ are fsynced before this returns, so a version
+        that names them never outlives them in an OS crash. Files are
+        INVISIBLE until a log entry references them — a crash here
+        leaves only orphans for vacuum."""
         import pyarrow.parquet as pq
-        from pyspark.sql import functions as F
-        from pyspark.sql.pandas.types import to_arrow_type
 
         tag = uuid.uuid4().hex[:12]
         if _fits_driver(df):
-            table = df.toArrow()
-            if stamp is not None:
-                field, value = stamp
-                arrow_type = to_arrow_type(field.dataType)
-                table = table.append_column(
-                    pa.field(field.name, arrow_type, nullable=False),
-                    pa.repeat(pa.scalar(value, arrow_type), table.num_rows),
-                )
             names = [f"{tag}-00000.parquet"]
-            pq.write_table(table, os.path.join(self.data_dir, names[0]))
+            pq.write_table(df.toArrow(), os.path.join(self.data_dir, names[0]))
         else:
-            if stamp is not None:
-                df = df.withColumn(stamp[0].name, F.lit(stamp[1]))
             staging = os.path.join(self.path, f"_staging_{tag}")
             df.write.mode("overwrite").parquet(staging)
             names = []
@@ -574,7 +549,6 @@ class TxTable:
         batch_id: int | None,
         ledger_id: str | None = None,
         allow_evolution: bool = False,
-        batch_id_col: str | None = None,
     ) -> int | None:
         """ACID append: stage files, then one atomic commit at the
         version planned from the read snapshot. Appends commute, so a
@@ -608,31 +582,18 @@ class TxTable:
         the re-derived snapshot after a lost race also re-reads the
         ledger — if the winning commit claimed this (ledger, batch)
         key, the replay is recognized, the loser's staged files (which
-        no entry references) are removed, and the retry abandoned.
-
-        With ``batch_id_col`` every row carries ``batch_id`` in that
-        appended column, logged exactly as ``withColumn(batch_id_col,
-        F.lit(batch_id))`` would log it (non-null ``int`` below 2^31);
-        on the driver staging path the column is added after
-        collection, so the plan holds no per-batch literal. Raises
-        ValueError if ``df`` already has the column."""
+        no entry references) are removed, and the retry abandoned."""
         s = self._replay()
         if s.claimed(batch_id, ledger_id):
             return None
-        schema, stamp = df.schema, None
-        if batch_id_col is not None:
-            if batch_id_col.lower() in (c.lower() for c in df.columns):
-                raise ValueError(f"append_batch stamps {batch_id_col!r}; the frame already has it")
-            stamp = (_stamp_field(batch_id_col, batch_id), batch_id)
-            schema = T.StructType([*schema.fields, stamp[0]])
-        sig = _schema_sig(schema)
+        sig = _schema_sig(df)
         _check_sig(s.schema, sig, allow_evolution)
-        added = self._stage(df, stamp)
+        added = self._stage(df)
         self._enforce_constraints(df.sparkSession, s.constraints, added)
         entry = {"op": "append", "added": added, "removed": []}
         if batch_id is not None:
             entry.update(batch_id=batch_id, ledger_id=ledger_id)
-        entry.update(schema=sig, spark_schema=schema.jsonValue())
+        entry.update(schema=sig, spark_schema=df.schema.jsonValue())
         for _ in range(_COMMIT_RETRIES + 1):
             try:
                 return self._commit(entry, s.next_version)
@@ -656,7 +617,7 @@ class TxTable:
         return self._commit(
             # overwrite may redefine the schema
             {"op": "overwrite", "added": added, "removed": s.files,
-             "schema": _schema_sig(df.schema), "spark_schema": df.schema.jsonValue()},
+             "schema": _schema_sig(df), "spark_schema": df.schema.jsonValue()},
             s.next_version,
         )
 
@@ -671,7 +632,9 @@ class TxTable:
         return self._scan(spark, s)
 
     def read_local(
-        self, spark: SparkSession, version: int | None = None
+        self,
+        spark: SparkSession,
+        accept: Callable[[T.StructType], bool] | None = None,
     ) -> tuple[pa.Table, T.StructType] | None:
         """Snapshot read through the driver, the mirror of ``_stage``'s
         Arrow path: when the live files' on-disk bytes are within
@@ -680,13 +643,15 @@ class TxTable:
         (columns a file predates are NULL; INT96 timestamps from the
         distributed path become µs instants). Returns the table and the
         schema ``read`` would report (every field nullable, as a file
-        scan makes it), or None when the snapshot does not fit; no
-        Spark job runs either way. Same errors as ``read``."""
+        scan makes it), or None when the snapshot does not fit or
+        ``accept`` rejects that schema; both are decided before any
+        file is read, and no Spark job runs either way. Same errors as
+        ``read``."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        s = self._replay(version)
+        s = self._replay()
         if not s.files:
             raise ValueError("table has no committed data")
         schema = _as_nullable(self._schema(s))
@@ -695,6 +660,7 @@ class TxTable:
         if (
             limit < 0
             or not _parquet_via_arrow(schema)
+            or (accept is not None and not accept(schema))
             or sum(os.path.getsize(p) for p in paths) > limit
         ):
             return None

@@ -202,12 +202,12 @@ class _FailOnceTable:
         self.table, self.epoch, self.after_commit = table, epoch, after_commit
         self.fired = False
 
-    def append_batch(self, df, batch_id, **kwargs):
+    def append_batch(self, df, batch_id, ledger_id=None):
         fire = batch_id == self.epoch and not self.fired
         if fire and not self.after_commit:
             self.fired = True
             raise RuntimeError(f"injected before staging epoch {batch_id}")
-        v = self.table.append_batch(df, batch_id, **kwargs)
+        v = self.table.append_batch(df, batch_id, ledger_id=ledger_id)
         if fire:
             self.fired = True
             raise RuntimeError(f"injected after committing epoch {batch_id}")
@@ -1498,28 +1498,29 @@ def test_read_upserted_paths_agree_across_evolution_int96_and_null_keys(spark, t
     ts = datetime.datetime(2024, 3, 1, 12, 30, 45, 123456)
     ddl = "k STRING, at TIMESTAMP, amt DECIMAL(10,2), big DECIMAL(38,10), v DOUBLE"
 
-    def frame(rows, ddl=ddl):
+    def frame(rows, seq, ddl=ddl):
+        """``rows`` read back from parquet and stamped as the sink does."""
         path = str(tmp_path / f"src{len(os.listdir(tmp_path))}")
         spark.createDataFrame(rows, ddl).write.parquet(path)
-        return spark.read.schema(ddl).parquet(path)
+        return spark.read.schema(ddl).parquet(path).withColumn(UPSERT_SEQ_COL, F.lit(seq))
 
     t = TxTable(str(tmp_path / "tx"))
     t.append_batch(
         frame([("a", ts, Decimal("1.25"), Decimal("1.0000000001"), 1.0),
                (None, ts, Decimal("2.50"), None, -0.0),
-               ("b", None, None, None, None)]),
-        0, batch_id_col=UPSERT_SEQ_COL,
+               ("b", None, None, None, None)], 0),
+        0,
     )
     with _threshold(spark, "-1"):  # INT96 timestamps, decimals from Spark's writer
         t.append_batch(
             frame([("a", ts, Decimal("3.75"), Decimal("-2.5"), -0.0),
-                   (None, ts, Decimal("4.00"), Decimal("0"), 4.0)]),
-            1, batch_id_col=UPSERT_SEQ_COL,
+                   (None, ts, Decimal("4.00"), Decimal("0"), 4.0)], 1),
+            1,
         )
     t.append_batch(
         frame([("b", None, Decimal("5.00"), None, 5.0, "new"),
-               ("c", ts, None, None, None, None)], ddl + ", w STRING"),
-        2, allow_evolution=True, batch_id_col=UPSERT_SEQ_COL,
+               ("c", ts, None, None, None, None)], 2, ddl + ", w STRING"),
+        2, allow_evolution=True,
     )
     assert t.read_local(spark) is not None
     rows = {(r.k, r.at): r for r in _assert_paths_agree(spark, t, ("k", "at"))}
@@ -1529,10 +1530,13 @@ def test_read_upserted_paths_agree_across_evolution_int96_and_null_keys(spark, t
     assert rows[("b", None)].w == "new"
 
 
-def test_read_upserted_floating_keys_take_the_window(spark, tmp_path):
+def test_read_upserted_floating_keys_take_the_window(spark, tmp_path, monkeypatch):
     """Spark merges 0.0 with -0.0 and every NaN with every other NaN;
     Arrow groups 0.0 and -0.0 apart. A double key therefore resolves
-    through the window even when the snapshot fits the driver."""
+    through the window even when the snapshot fits the driver, and no
+    file is read on the driver first."""
+    import pyarrow.parquet as pq
+
     from iot_etl_spark.streaming.pipeline import UPSERT_SEQ_COL, read_upserted
     from iot_etl_spark.warehouse.txlog import TxTable
 
@@ -1541,94 +1545,13 @@ def test_read_upserted_floating_keys_take_the_window(spark, tmp_path):
     for seq, rows in enumerate([[(-0.0, "old"), (nan, "old")], [(0.0, "new"), (nan, "new")]]):
         path = str(tmp_path / f"src{seq}")
         spark.createDataFrame(rows, "d DOUBLE, v STRING").write.parquet(path)
-        t.append_batch(spark.read.parquet(path), seq, batch_id_col=UPSERT_SEQ_COL)
+        t.append_batch(spark.read.parquet(path).withColumn(UPSERT_SEQ_COL, F.lit(seq)), seq)
     assert t.read_local(spark) is not None
+
+    def no_driver_read(*args, **kwargs):
+        raise AssertionError("a floating-key snapshot was read on the driver")
+
+    monkeypatch.setattr(pq, "ParquetFile", no_driver_read)
     got = read_upserted(spark, t, ("d",))
     assert not _is_local(got)
     assert sorted(r.v for r in got.collect()) == ["new", "new"]
-
-
-def test_sink_stamp_logs_the_literal_schema_and_extends_old_tables(spark):
-    """The sink's commits log the ``schema`` and ``spark_schema`` that
-    stamping with ``withColumn(_upsert_seq, F.lit(epoch))`` logged, and
-    a table started that way keeps taking sink commits and resolves to
-    the same rows as a table the sink wrote throughout."""
-    import json
-
-    from iot_etl_spark.streaming.pipeline import UPSERT_SEQ_COL, read_upserted
-    from iot_etl_spark.warehouse.txlog import TxTable
-
-    class LiteralStamp:
-        """The sink's table as the literal-stamping sink fed it."""
-
-        def __init__(self, table) -> None:
-            self.table = table
-
-        def append_batch(self, df, batch_id, ledger_id=None, batch_id_col=None):
-            return self.table.append_batch(
-                df.withColumn(batch_id_col, F.lit(batch_id)), batch_id, ledger_id=ledger_id
-            )
-
-    tmp = tempfile.mkdtemp(prefix="iot_etl_stamp_")
-    try:
-        h = _StreamHarness(spark, tmp)
-        new, old = TxTable(os.path.join(tmp, "new")), TxTable(os.path.join(tmp, "old"))
-        base = datetime.datetime(2024, 1, 6, 9, 0, 0)
-        for k in range(2):
-            h.add(_events(base, k))
-        for table, ckpt in ((new, "ck_new"), (LiteralStamp(old), "ck_old")):
-            q = h.start(table, ckpt)
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        entries = [(new._entry(v), old._entry(v)) for v in old.versions()]
-        assert entries
-        for e_new, e_old in entries:
-            assert json.dumps(e_new["schema"]) == json.dumps(e_old["schema"])
-            assert json.dumps(e_new["spark_schema"]) == json.dumps(e_old["spark_schema"])
-        stamp = e_new["spark_schema"]["fields"][-1]
-        assert stamp == {"name": UPSERT_SEQ_COL, "type": "integer", "nullable": False, "metadata": {}}
-
-        h.add(_events(base, 2))
-        for table, ckpt in ((new, "ck_new"), (old, "ck_old")):
-            q = h.start(table, ckpt)
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        assert [e["batch_id"] for e in old.history()] == [e["batch_id"] for e in new.history()]
-        assert sorted(read_upserted(spark, old, _UPSERT_KEYS).collect()) == sorted(
-            read_upserted(spark, new, _UPSERT_KEYS).collect()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_upsert_sink_compiles_no_code_per_micro_batch(spark):
-    """Once warm, each micro-batch of a watermark-free aggregate into
-    the upsert sink reuses its generated code: Janino's compile count
-    does not move. A per-epoch literal in the plan would compile new
-    classes every batch."""
-    from iot_etl_spark.warehouse.txlog import TxTable
-
-    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
-    tmp = tempfile.mkdtemp(prefix="iot_etl_codegen_")
-    try:
-        h = _StreamHarness(spark, tmp)
-        base = datetime.datetime(2024, 1, 7, 9, 0, 0)
-        h.add(_events(base, 0))
-        q = h.start(TxTable(os.path.join(tmp, "serve")), "ckpt")
-        try:
-            q.processAllAvailable()
-            deltas = []
-            for k in range(1, 6):
-                h.add(_events(base, k))
-                before = metric.getCount()
-                q.processAllAvailable()
-                deltas.append(metric.getCount() - before)
-        finally:
-            q.stop()
-        assert deltas[2:] == [0, 0, 0], deltas
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

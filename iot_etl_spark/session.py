@@ -143,7 +143,7 @@ def get_spark(
         # queries workload: every re-run re-compiles codegen from
         # scratch. Sized to distinct-plan count, not cores/data, so it
         # is not a local-mode tune. Measured 2x off an 80-query warm
-        # pass (bench.py has the A/B numbers).
+        # pass of the registry against the default.
         .config("spark.sql.codegen.cache.maxEntries", "20000")
         # PySpark call-site capture (STATIC conf, same builder-only
         # rule as above). With it on, every DataFrame/Column API call

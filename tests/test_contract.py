@@ -1,16 +1,13 @@
-"""Driver-contract guards: the three surfaces the build driver and the
-bench harness consume must keep their exact shapes — a regression here
-blanks a whole round's verification, so it gets its own tests.
+"""Driver-contract guards: the three surfaces the build driver
+consumes must keep their exact shapes — a regression here blanks a
+whole round's verification, so it gets its own tests.
 
-Spark-session-free where possible (fast collection); the bench run
-uses a tiny single-query subset at sf0.001.
+Spark-session-free where possible (fast collection).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -103,42 +100,6 @@ def test_entry_module_contract():
     assert set(qs) == set(osql)
     assert all(callable(f) for f in qs.values())
     assert all(isinstance(s, str) and "SELECT" in s.upper() for s in osql.values())
-
-
-def test_bench_emits_contract_json_line(tmp_path):
-    """bench.py's LAST stdout line must be the driver's JSON contract,
-    and the full map must land in BENCH_LOCAL.json (whose committed
-    full-registry content is restored afterwards)."""
-    local = os.path.join(REPO, "BENCH_LOCAL.json")
-    saved = open(local).read() if os.path.exists(local) else None
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-        SPARK_GRAFT_CPUS="4",
-        BENCH_QUERIES="order_priority_counts",
-        SPARK_DRIVER_MEMORY="2g",
-    )
-    try:
-        out = subprocess.run(
-            [sys.executable, os.path.join(REPO, "bench.py")],
-            capture_output=True, text=True, env=env, cwd=REPO, timeout=420,
-        )
-        assert out.returncode == 0, out.stderr[-2000:]
-        last = out.stdout.strip().splitlines()[-1]
-        r = json.loads(last)
-        assert r["metric"] == "total_query_wall_time"
-        assert r["unit"] == "sec"
-        assert r["sf"] == 0.001
-        assert r["n_failed"] == 0
-        assert set(r["queries"]) == {"order_priority_counts"}
-        assert r["queries"]["order_priority_counts"] > 0
-        with open(local) as fh:
-            disk = json.load(fh)
-        assert disk["queries"] == r["queries"]
-    finally:
-        if saved is not None:
-            with open(local, "w") as fh:
-                fh.write(saved)
 
 
 def test_status_ledger_matches_registry():

@@ -1,5 +1,5 @@
-"""Differential tests, odd half — see test_oracle_parity.py for why
-the module is split in two (parallel-gate critical path)."""
+"""Differential tests, odd half of the sorted registry; the even half
+is in test_oracle_parity.py."""
 
 from __future__ import annotations
 

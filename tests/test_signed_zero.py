@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 
 from tests.oracle import _canon_cell, canonical_rows, negzero_columns
-from tools.sweep_bitexact import compare, negzero_cols
+from tools.sweep_bitexact import compare
 
 
 def test_sweep_compare_fails_on_planted_negzero():
@@ -29,11 +29,6 @@ def test_sweep_compare_still_passes_on_equal_zeros():
     assert compare(a, b) is None
 
 
-def test_sweep_negzero_detector():
-    df = pd.DataFrame({"x": [1.0, -0.0], "y": [0.0, 2.0], "s": ["a", "b"]})
-    assert negzero_cols(df) == ["x"]
-
-
 def test_canon_cell_distinguishes_signed_zero():
     assert _canon_cell(0.0) != _canon_cell(-0.0)
 
@@ -45,7 +40,7 @@ def test_canonical_rows_distinguish_signed_zero():
 
 
 def test_negzero_columns_detector():
-    df = pd.DataFrame({"x": [-0.0], "y": [0.0], "n": [1]})
+    df = pd.DataFrame({"x": [-0.0], "y": [0.0], "n": [1], "s": ["a"]})
     assert negzero_columns(df) == ["x"]
 
 

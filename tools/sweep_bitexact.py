@@ -10,7 +10,9 @@ rounding-tie divergence actually show up (three real bugs found this
 way; see SCALE.md "Cross-engine determinism").
 
 Usage:  python tools/sweep_bitexact.py [sf_dir] [name_filter]
-        (defaults: /root/testdata/sf0.1, all queries)
+        (defaults: /root/testdata/sf0.1, all queries; a filter with a
+        comma, e.g. ``q1,q2``, is an exact list of names, otherwise a
+        substring)
 
 Prints one line per query and a final JSON summary; exit 1 on any
 mismatch.
@@ -24,9 +26,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
 
 def compare(a, b) -> str | None:
@@ -64,29 +63,13 @@ def compare(a, b) -> str | None:
     return None
 
 
-def negzero_cols(df) -> list[str]:
-    """Columns containing a literal -0.0 (fragile even when both
-    engines agree — any future plan change can flip one side)."""
-    import numpy as np
-
-    out = []
-    for c in df.columns:
-        v = df[c]
-        if v.dtype != object and v.dtype.kind == "f":
-            x = v.values
-            if bool((np.signbit(x) & (x == 0.0)).any()):
-                out.append(c)
-    return out
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     pat = sys.argv[2] if len(sys.argv) > 2 else ""
 
-    import duckdb
-
     import __spark_entry__ as entry
     from iot_etl_spark.session import get_spark
+    from tests.oracle import duck_connection, negzero_columns
 
     spark = get_spark(
         app_name="bitexact-sweep",
@@ -95,14 +78,9 @@ def main() -> int:
         extra_conf={"spark.driver.memory": "1g"},  # Spark's default heap
     )
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir.rstrip('/')}/{t}.parquet')"
-        )
+    con = duck_connection(sf_dir)
     qs, osql = entry.queries(), entry.oracle_sql()
-    if "," in pat:  # comma list = exact-name set (r13 targeted sweeps)
+    if "," in pat:  # comma list = exact-name set
         want = {x for x in pat.split(",") if x}
         names = [n for n in qs if n in want]
     else:
@@ -116,7 +94,7 @@ def main() -> int:
             a = qs[name](spark, sf_dir).toPandas()
             b = con.execute(osql[name]).df()
             reason = compare(a, b)
-            nz = sorted(set(negzero_cols(a)) | set(negzero_cols(b)))
+            nz = sorted(set(negzero_columns(a)) | set(negzero_columns(b)))
             if nz:
                 negzero[name] = ",".join(nz)
         except Exception as exc:  # noqa: BLE001 - sweep must report, not die
